@@ -60,7 +60,9 @@ def validity_reason(op, pos, after, before, key_null, file=None) -> "F.Column":
     )
 
 
-def _reason_col(env: DataFrame, key_cols: list[str]) -> "F.Column":
+def reason_col(key_cols: list[str]) -> "F.Column":
+    """``validity_reason`` over a typed envelope (key columns are read from
+    ``after``, falling back to ``before``)."""
     key_null = F.lit(False)
     for k in key_cols:
         key_null = key_null | F.coalesce(F.col(f"after.{k}"), F.col(f"before.{k}")).isNull()
@@ -70,14 +72,13 @@ def _reason_col(env: DataFrame, key_cols: list[str]) -> "F.Column":
     )
 
 
-def split_valid(env: DataFrame, key_cols: list[str]) -> tuple[DataFrame, DataFrame]:
-    """(good, bad): ``bad`` carries a ``reason`` column; ``good`` has the
-    original envelope schema. One pass of cheap Catalyst predicates."""
-    reason = _reason_col(env, key_cols)
-    tagged = env.withColumn("_reason", reason)
-    good = tagged.filter(F.col("_reason").isNull()).drop("_reason")
-    bad = tagged.filter(F.col("_reason").isNotNull())
-    return good, bad
+def split_valid(env: DataFrame, exprs) -> tuple[DataFrame, DataFrame]:
+    """(good, bad): ``bad`` carries a ``_reason`` column; ``good`` has the
+    original envelope schema. One pass of cheap Catalyst predicates, taken
+    from the table's expression set (``plans.exprs.TableExprs``)."""
+    valid, invalid = exprs.reason_split
+    tagged = env.withColumn("_reason", exprs.reason)
+    return tagged.filter(valid).drop("_reason"), tagged.filter(invalid)
 
 
 def write_quarantine(bad: DataFrame, table_root: str, batch_id: str) -> str:

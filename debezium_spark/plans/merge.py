@@ -36,18 +36,7 @@ import uuid
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from debezium_spark.functions.core import salted_key
-from debezium_spark.plans.table import LakeTable, bucket_expr, iter_bucket_subdirs
-
-
-def _align_to_schema(df: DataFrame, schema) -> DataFrame:
-    """Null-fill payload columns the change-set lacks (schema evolution:
-    the table gained columns after these events were written) — shared by
-    both merge modes so the alignment rule cannot drift (final review r5)."""
-    for f in schema.fields:
-        if f.name not in df.columns:
-            df = df.withColumn(f.name, F.lit(None).cast(f.dataType))
-    return df
+from debezium_spark.plans.table import LakeTable, iter_bucket_subdirs
 from debezium_spark.schema import offset_key
 
 OP_COL = "_op"  # change-row operation: 'd' delete, anything else upsert
@@ -83,17 +72,24 @@ def merge_changes(
     ``CdcEngine.backfill``).
 
     Dispatches on the table's write mode: copy-on-write (rewrite touched
-    buckets) or merge-on-read (append delta files, O(batch))."""
-    cur = table.fence()
+    buckets) or merge-on-read (append delta files, O(batch)).
+
+    Every Column expression comes from the table's expression set
+    (``LakeTable.exprs``); change-set columns the table schema has but the
+    events lack (schema evolution: the table gained columns after these
+    events were written) are null-filled by ``TableExprs.aligned``."""
+    man = table.manifest()
+    cur = table.fence(man)
     if fence_check and cur is not None and offset_key(*fence) <= offset_key(*cur):
         return None  # already applied — exactly-once on replay
     if table.mode == "mor":
-        return _merge_mor(table, changes, fence, batch_id, salt_factor)
-    return _merge_cow(table, changes, fence, batch_id, salt_factor)
+        return _merge_mor(table, man, changes, fence, batch_id, salt_factor)
+    return _merge_cow(table, man, changes, fence, batch_id, salt_factor)
 
 
 def _merge_mor(
     table: LakeTable,
+    man: dict,
     changes: DataFrame,
     fence: tuple[str, int],
     batch_id: str,
@@ -103,18 +99,15 @@ def _merge_mor(
     IS the delta file — one shuffle (bucket+salt), one write, no base read.
     Read-time resolution (LakeTable._resolve) and compaction do the rest.
     This is the 10^10-event apply path: cost is O(batch) however big the
-    table has grown."""
-    keys = table.key_cols
-    schema = table.schema()  # one manifest read; reused by the null-fill loop
-    payload_cols = [f.name for f in schema.fields]
+    table has grown.
 
-    out = _align_to_schema(
-        changes.withColumn("_bucket", bucket_expr(keys, table.n_buckets)), schema
-    )
-    out = out.select(*payload_cols, F.col(OP_COL).alias("_op"), F.col("_pos"), F.col("_bucket"))
-
+    ``man`` is the manifest ``merge_changes`` read: under the single-writer
+    protocol nothing commits between that read and this commit, so it also
+    supplies the buckets' current delta lists."""
+    x = table.exprs(man)
+    out = changes.select(*x.delta(changes.columns))
     out_dir = os.path.join(table.root, "data", f"d-{uuid.uuid4().hex}")
-    out.repartition(F.col("_bucket"), salted_key(keys, salt_factor)).write.partitionBy(
+    out.repartition(*x.write_keys(salt_factor)).write.partitionBy(
         "_bucket"
     ).mode("overwrite").parquet(out_dir)
 
@@ -150,7 +143,6 @@ def _merge_mor(
         for b in touched
     ]
 
-    man = table.manifest()
     new_vals: dict[int, dict] = {}
     for b, path in iter_bucket_subdirs(out_dir):
         base, delta = table._bucket_dirs(man["buckets"].get(str(b), []))
@@ -183,35 +175,25 @@ def _delta_lineage_from_files(out_dir: str) -> dict[int, tuple[int, int, int]]:
 
 def _merge_cow(
     table: LakeTable,
+    man: dict,
     changes: DataFrame,
     fence: tuple[str, int],
     batch_id: str,
     salt_factor: int = 4,
 ) -> int | None:
-    keys = table.key_cols
-    schema = table.schema()
-    out_cols = [f.name for f in schema.fields]
-
-    b = bucket_expr(keys, table.n_buckets)
+    x = table.exprs(man)
     # cache the deduped change-set: it feeds the lineage agg, the anti-join
     # and the upsert union — without this the dedupe shuffle reruns 3×.
     # try/finally so a mid-merge failure (executor loss, disk full) cannot
     # leak the cached blocks across retries for the session's life
     # (final review r5)
-    changes = changes.withColumn("_bucket", b).persist()
+    aligned = x.aligned(changes.columns)
+    changes = changes.withColumn("_bucket", x.bucket).persist()
     try:
         # lineage: per-bucket apply metrics, committed with the data
         # (reference analog: BaseSinkProcessInfo extract/replay counters);
         # the same one aggregation also yields the touched-bucket set
-        lin = (
-            changes.groupBy("_bucket")
-            .agg(
-                F.count("*").alias("events"),
-                F.sum(F.when(F.col(OP_COL) == "d", 1).otherwise(0)).alias("deletes"),
-                F.sum(F.when(F.col(OP_COL) != "d", 1).otherwise(0)).alias("upserts"),
-            )
-            .collect()
-        )
+        lin = changes.groupBy(x.bucket_col).agg(*x.cow_lineage).collect()
         touched = sorted(int(r["_bucket"]) for r in lin)
         if not touched:
             return table.commit_buckets(
@@ -233,9 +215,7 @@ def _merge_cow(
         base = table.read(buckets=touched)
 
         # align change payload to the (possibly evolved) table schema
-        upserts = _align_to_schema(
-            changes.filter(F.col(OP_COL) != "d"), schema
-        ).select(*out_cols)
+        upserts = changes.filter(x.upsert).select(*aligned)
 
         # Anti-join strategy (guide §3.1): the change-key side is one row
         # per key and tiny next to the touched-bucket base — broadcast it
@@ -246,15 +226,17 @@ def _merge_cow(
         # budget (~60 B/key ⇒ ~300 MB at the cap) fall back to the
         # shuffled join rather than risk a driver/executor OOM.
         n_changed = sum(r["events"] for r in lin)
-        chg_keys = changes.select(*keys)
+        chg_keys = changes.select(*x.keys)
         if n_changed <= BROADCAST_ANTI_MAX_KEYS:
             chg_keys = F.broadcast(chg_keys)
-        survivors = base.join(chg_keys, on=keys, how="left_anti").select(*out_cols)
-        new_state = survivors.unionByName(upserts).withColumn("_bucket", bucket_expr(keys, table.n_buckets))
+        survivors = base.join(chg_keys, on=x.key_cols, how="left_anti").select(
+            *x.payload_cols
+        )
+        new_state = survivors.unionByName(upserts).withColumn("_bucket", x.bucket)
 
         out_dir = os.path.join(table.root, "data", f"v-{uuid.uuid4().hex}")
         (
-            new_state.repartition(F.col("_bucket"), salted_key(keys, salt_factor))
+            new_state.repartition(*x.write_keys(salt_factor))
             .write.partitionBy("_bucket")
             .mode("overwrite")
             .parquet(out_dir)

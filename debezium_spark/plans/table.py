@@ -35,10 +35,14 @@ import json
 import os
 import shutil
 import uuid
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
+
+if TYPE_CHECKING:
+    from debezium_spark.plans.exprs import TableExprs
 
 LATEST = "LATEST"
 
@@ -53,30 +57,6 @@ def bucket_expr(key_cols: list[str], n_buckets: int) -> "F.Column":
 #: the merge projection and crash the batch mid-stream (final review r5);
 #: ``create`` rejects them up front with a clear error instead
 RESERVED_COLS = frozenset({"_op", "_pos", "_bucket", "_sub", "_tombstone"})
-
-
-def _tie_hash_inputs(payload: StructType, cols: list[str]):
-    """Hash inputs for the deterministic resolve tie-break: raw columns,
-    except fields whose type CONTAINS a map anywhere — ``xxhash64``
-    prohibits hashing maps (same map, different hashcodes), so those
-    render through ``to_json`` first (deterministic per stored row). ONE
-    definition, used by both ``_resolve`` and ``compact`` so the two
-    cannot elect different tie winners."""
-    from pyspark.sql.types import ArrayType, MapType
-
-    def has_map(dt) -> bool:
-        if isinstance(dt, MapType):
-            return True
-        if isinstance(dt, ArrayType):
-            return has_map(dt.elementType)
-        if isinstance(dt, StructType):
-            return any(has_map(f.dataType) for f in dt.fields)
-        return False
-
-    return [
-        F.to_json(F.col(c)) if has_map(payload[c].dataType) else F.col(c)
-        for c in cols
-    ] + [F.col("_op")]
 
 
 def iter_bucket_subdirs(out_dir: str):
@@ -134,6 +114,8 @@ class LakeTable:
         self.n_buckets = n_buckets
         self.mode = mode
         self._mdir = os.path.join(self.root, "_manifests")
+        #: (state key, TableExprs) — see ``exprs``
+        self._exprs: tuple | None = None
         # Reopening an existing table: the MANIFEST is authoritative for the
         # physical table properties. A caller that forgot the original
         # n_buckets would otherwise hash keys with the wrong modulus — the
@@ -190,9 +172,30 @@ class LakeTable:
     def schema(self) -> StructType:
         return StructType.fromJson(json.loads(self.manifest()["schema"]))
 
-    def fence(self) -> tuple[str, int] | None:
-        fe = self.manifest()["fence"]
+    def fence(self, man: dict | None = None) -> tuple[str, int] | None:
+        """The committed offset fence (of ``man``, default: current)."""
+        fe = (man if man is not None else self.manifest())["fence"]
         return (fe["file"], fe["pos"]) if fe else None
+
+    def exprs(self, man: dict | None = None) -> "TableExprs":
+        """The table's per-batch Column expressions
+        (``plans.exprs.TableExprs``) for manifest state ``man`` (default:
+        the current one). One slot per table, kept while the schema JSON,
+        rename ledger, key columns and bucket count stay the same, and
+        rebuilt when any of them changes (e.g. after DDL)."""
+        from debezium_spark.plans.exprs import TableExprs
+
+        if man is None:
+            man = self.manifest()
+        renames = man.get("renames", {})
+        key = (man["schema"], json.dumps(renames, sort_keys=True),
+               tuple(self.key_cols), self.n_buckets)
+        slot = self._exprs
+        if slot is None or slot[0] != key:
+            payload = StructType.fromJson(json.loads(man["schema"]))
+            slot = (key, TableExprs(payload, renames, self.key_cols, self.n_buckets))
+            self._exprs = slot
+        return slot[1]
 
     def _publish(self, man: dict) -> None:
         """Atomic commit: write the numbered manifest, then os.replace the
@@ -219,16 +222,8 @@ class LakeTable:
             return list(val.get("base", [])), list(val.get("delta", []))
         return list(val), []
 
-    def _delta_schema(self, payload: StructType) -> StructType:
-        from pyspark.sql.types import LongType, StringType
-
-        s = StructType(list(payload.fields))
-        s = s.add("_op", StringType(), True)
-        s = s.add("_pos", LongType(), True)
-        return s
-
     def _read_with_aliases(
-        self, dirs: list[str], payload: StructType, man: dict, with_delta_cols: bool = False
+        self, dirs: list[str], x: "TableExprs", with_delta_cols: bool = False
     ) -> DataFrame:
         """Read data dirs under the *current* schema, resolving renamed and
         widened columns across file generations (Iceberg does this with
@@ -236,48 +231,14 @@ class LakeTable:
 
         - files written before a RENAME carry the old name → the read schema
           includes each old name as an alias column and the projection
-          coalesces alias → current name;
+          coalesces alias → current name (``TableExprs._read_projection``);
         - files written before a WIDEN carry the narrower physical type →
           the parquet reader's widening promotion (int→long, float→double,
           int→double) upcasts them under the current read schema;
         - files written before an ADD simply surface the column as null,
           and columns DROPped from the schema are never read (pruned)."""
-        schema_to_read = (
-            StructType(list(self._delta_schema(payload).fields))
-            if with_delta_cols
-            else StructType(list(payload.fields))
-        )
-        current = {f.name for f in schema_to_read.fields}
-        payload_names = {f.name for f in payload.fields}
-        alias_of: dict[str, list[str]] = {}
-        for new, olds in man.get("renames", {}).items():
-            if new not in payload_names:
-                continue  # renamed column was later dropped
-            t = payload[new].dataType
-            for old in olds:
-                if old not in current:
-                    schema_to_read = schema_to_read.add(old, t, True)
-                    alias_of.setdefault(new, []).append(old)
-        raw = self.spark.read.schema(schema_to_read).parquet(*dirs)
-        out_fields = (
-            self._delta_schema(payload).fields if with_delta_cols else payload.fields
-        )
-        # aliases FIRST in the coalesce: each file physically carries at most
-        # one of the names (so the order is neutral for plain renames), but a
-        # column with an EXISTS_DEFAULT gets default-FILLED under its current
-        # name whenever the file lacks it — including pre-rename files whose
-        # real value sits under the old name; alias-first lets the stored
-        # value win. (Residual corner: an EXPLICIT null stored under an old
-        # name of a defaulted column surfaces the default — name-based
-        # projection cannot distinguish it from column-absent; Iceberg
-        # resolves this with column IDs.)
-        cols = [
-            F.coalesce(*[F.col(o) for o in alias_of[f.name]], F.col(f.name)).alias(f.name)
-            if f.name in alias_of
-            else F.col(f.name)
-            for f in out_fields
-        ]
-        return raw.select(*cols)
+        schema_to_read, cols = x.read_delta if with_delta_cols else x.read_payload
+        return self.spark.read.schema(schema_to_read).parquet(*dirs).select(*cols)
 
     def read(self, buckets: list[int] | None = None, version: int | None = None) -> DataFrame:
         """Current table state (or a historical ``version`` — time travel);
@@ -294,7 +255,7 @@ class LakeTable:
         filtered. The resolve is exactly the engine's last-wins dedupe
         applied at read instead of write."""
         man = self.manifest(version)
-        payload = StructType.fromJson(json.loads(man["schema"]))
+        x = self.exprs(man)
         dirs: list[str] = []
         any_delta = False
         for b, val in man["buckets"].items():
@@ -304,40 +265,25 @@ class LakeTable:
                 dirs.extend(delta)
                 any_delta = any_delta or bool(delta)
         if not dirs:
-            return self.spark.createDataFrame([], payload)
+            return self.spark.createDataFrame([], x.payload)
         if self.mode == "cow":
-            return self._read_with_aliases(dirs, payload, man)
+            return self._read_with_aliases(dirs, x)
 
-        raw = self._read_with_aliases(dirs, payload, man, with_delta_cols=True)
+        raw = self._read_with_aliases(dirs, x, with_delta_cols=True)
         if not any_delta:
             # pure-base read after compaction: base files are already
             # one-row-per-key with deletes dropped — skip the resolve shuffle
-            return raw.select(*[f.name for f in payload.fields])
-        return self._resolve(raw, payload)
+            return raw.select(*x.payload_cols)
+        return self._resolve(raw, x)
 
-    def _resolve(self, raw: DataFrame, payload: StructType) -> DataFrame:
-        """Last-wins per key over base+delta rows; drop deletes.
-
-        The ``max_by`` order is ``(_pos, row-hash)``: rows with EQUAL
-        ``_pos`` but different payloads exist when two incremental-snapshot
-        runs at an unadvanced fence observed different source states (both
-        chunk rows encode ``2·fence+1`` — ``resolution_pos``); a bare
-        ``max_by(_pos)`` resolves that tie nondeterministically per read
-        (final review r5). The hash tiebreak picks an arbitrary but
-        DETERMINISTIC winner — the next real stream event (strictly higher
-        ``_pos``) supersedes it either way."""
-        cols = [f.name for f in payload.fields]
-        row = F.struct(*[F.col(c) for c in cols], F.col("_op"))
-        ord_ = F.struct(
-            F.col("_pos"), F.xxhash64(*_tie_hash_inputs(payload, cols))
-        )
-        latest = (
-            raw.groupBy(*self.key_cols)
-            .agg(F.max_by(row, ord_).alias("_r"))
-            .filter(F.col("_r._op") != "d")
-        )
-        non_key = [c for c in cols if c not in self.key_cols]
-        return latest.select(*self.key_cols, *[F.col(f"_r.{c}").alias(c) for c in non_key])
+    def _resolve(self, raw: DataFrame, x: "TableExprs") -> DataFrame:
+        """Last-wins per key over base+delta rows; drop deletes. The
+        aggregate is ``TableExprs.last_wins`` — the same one compaction
+        persists, ordered by ``(_pos, row-hash)`` so an equal-``_pos`` tie
+        resolves to the same DETERMINISTIC winner on every read (final
+        review r5); the next real stream event (strictly higher ``_pos``)
+        supersedes it either way. The winner's ``_pos`` is dropped here."""
+        return raw.groupBy(*x.keys).agg(x.last_wins).filter(x.live).select(*x.resolved)
 
     # ---- commit (called by plans.merge) ----------------------------------
 
@@ -410,7 +356,7 @@ class LakeTable:
         if self.mode != "mor":
             return None
         man = self.manifest()
-        payload = StructType.fromJson(json.loads(man["schema"]))
+        x = self.exprs(man)
         todo: dict[int, tuple[list[str], list[str]]] = {}
         for b, val in man["buckets"].items():
             bi = int(b)
@@ -423,36 +369,20 @@ class LakeTable:
             return None
 
         dirs = [d for base, delta in todo.values() for d in base + delta]
-        raw = self._read_with_aliases(dirs, payload, man, with_delta_cols=True)
-        cols = [f.name for f in payload.fields]
-        row = F.struct(*[F.col(c) for c in cols], F.col("_op"), F.col("_pos"))
-        # same deterministic (_pos, hash) tie-break as _resolve — compaction
-        # PERSISTS the winner, so it must hash the SAME (payload, _op)
-        # inputs _resolve hashes, or the two would elect different tie
-        # winners and a compaction would flip the visible row
-        # (final review r5)
+        raw = self._read_with_aliases(dirs, x, with_delta_cols=True)
+        # the read path's last-wins aggregate: compaction PERSISTS the
+        # winner, so it must be the winner every read elects (final review
+        # r5) — here the winner keeps its _pos
         resolved = (
-            raw.groupBy(*self.key_cols)
-            .agg(
-                F.max_by(
-                    row,
-                    F.struct(
-                        F.col("_pos"),
-                        F.xxhash64(*_tie_hash_inputs(payload, cols)),
-                    ),
-                ).alias("_r")
-            )
-            .filter(F.col("_r._op") != "d")
-            .select(
-                *[F.col(f"_r.{c}").alias(c) for c in cols],
-                F.lit("u").alias("_op"),
-                F.col("_r._pos").alias("_pos"),
-            )
-            .withColumn("_bucket", bucket_expr(self.key_cols, self.n_buckets))
-            .filter(F.col("_bucket").isin(list(todo)))
+            raw.groupBy(*x.keys)
+            .agg(x.last_wins)
+            .filter(x.live)
+            .select(*x.compacted)
+            .withColumn("_bucket", x.bucket)
+            .filter(x.bucket_col.isin(list(todo)))
         )
         out_dir = os.path.join(self.root, "data", f"compact-{_uuid.uuid4().hex}")
-        resolved.repartition(F.col("_bucket")).write.partitionBy("_bucket").mode(
+        resolved.repartition(x.bucket_col).write.partitionBy("_bucket").mode(
             "overwrite"
         ).parquet(out_dir)
 

@@ -37,8 +37,13 @@ OP_TABLE_SNAPSHOT = "ts"    # table-snapshot marker
 #: payload-free control rows: consume their offsets (fence advances past
 #: them) but carry no row data — excluded from the merge, never quarantined.
 #: OP_PATH is NOT here: it is a barrier (its slice set loads at its stream
-#: position — streaming/engine.BARRIER_OPS).
+#: position — BARRIER_OPS below).
 CONTROL_OPS = [OP_MESSAGE, OP_CREATE_INDEX, OP_TABLE_SNAPSHOT]
+
+#: batch-splitting barrier rows: DDL + truncate (+ the fork's cascade form)
+#: + PATH slice pointers (a snapshot slice loads AT its stream position —
+#: events after it overwrite, events before merged under pre-slice state)
+BARRIER_OPS = [OP_DDL, OP_TRUNCATE, OP_TRUNCATE_CASCADE, OP_PATH]
 
 # The north-star payload: a row of the source-code-repository table
 # (BASELINE.json input_hint). Primary key = (repo, path).

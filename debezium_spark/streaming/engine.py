@@ -29,19 +29,15 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from debezium_spark.operators.apply import compute_changes, split_pk_changes
-from debezium_spark.operators.quarantine import _reason_col, split_valid, write_quarantine
-from debezium_spark.operators.schema_evolution import DDL_OP, apply_ddl, parse_ddl
-from debezium_spark.schema import CONTROL_OPS, offset_key
+from debezium_spark.operators.quarantine import split_valid, write_quarantine
+from debezium_spark.operators.schema_evolution import apply_ddl, parse_ddl
+from debezium_spark.plans.exprs import TableExprs, TailProbe
+from debezium_spark.plans.merge import merge_changes
+from debezium_spark.plans.table import LakeTable
+from debezium_spark.schema import BARRIER_OPS, offset_key
 from debezium_spark.schema import OP_PATH as PATH_OP
 from debezium_spark.schema import OP_TRUNCATE as TRUNCATE_OP
 from debezium_spark.schema import OP_TRUNCATE_CASCADE as TRUNCATE_CASCADE_OP
-
-#: batch-splitting barrier rows: DDL + truncate (+ the fork's cascade form)
-#: + PATH slice pointers (a snapshot slice loads AT its stream position —
-#: events after it overwrite, events before merged under pre-slice state)
-BARRIER_OPS = [DDL_OP, TRUNCATE_OP, TRUNCATE_CASCADE_OP, PATH_OP]
-from debezium_spark.plans.merge import merge_changes
-from debezium_spark.plans.table import LakeTable
 from debezium_spark.schema import REPO_KEY_COLS, REPO_PAYLOAD_SCHEMA
 from debezium_spark.sources.batches import list_batches, read_batch
 
@@ -49,7 +45,7 @@ Smt = Callable[[DataFrame], DataFrame]
 
 
 def split_open_tail_tx(
-    env: DataFrame, probe: dict | None = None
+    env: DataFrame, tail: TailProbe, probe: dict | None = None
 ) -> tuple[DataFrame | None, DataFrame | None, int | None]:
     """Transaction-aligned batch segmentation (reference: whole transactions
     are assembled before apply, ``sink/replay/transaction/
@@ -72,7 +68,9 @@ def split_open_tail_tx(
     ``probe`` (optional) carries the answers precomputed by the caller's
     fused per-batch aggregation (``{"p", "tt", "boundary"}`` — see
     ``CdcEngine.replay``), making this a zero-job pure plan transform; when
-    absent, two narrow driver aggregations compute them here."""
+    absent, two narrow driver aggregations compute them here. ``tail``: the
+    caller's ``TailProbe``, whose column references the split filters reuse
+    (only the boundary literal is per batch)."""
     if probe is not None:
         p, tail_tx, boundary = probe["p"], probe["tt"], probe["boundary"]
     else:
@@ -95,16 +93,12 @@ def split_open_tail_tx(
     # null-pos poison records ride with the CLOSED part — a bare pos<=b
     # filter is NULL for them and they would vanish before ever reaching
     # quarantine ('one bad row never wedges OR vanishes')
-    closed = env.filter(
-        (F.col("source.pos") <= boundary) | F.col("source.pos").isNull()
-    )
-    deferred = env.filter(F.col("source.pos") > boundary)
+    closed = env.filter((tail.pos <= boundary) | tail.pos_null)
+    deferred = env.filter(tail.pos > boundary)
     return closed, deferred, boundary
 
 
-def fused_tail_probe(
-    env: DataFrame, flags: dict | None = None, with_file: bool = False
-) -> dict:
+def fused_tail_probe(env: DataFrame, probe: TailProbe) -> dict:
     """ONE driver job answering the tail-transaction questions for a batch:
     ``{"p": max pos, "tt": tail tx id, "pmin": tail run start, "ng": number
     of tx groups holding real offsets, "ngrp": total tx groups (>0 ⇔ the
@@ -114,40 +108,14 @@ def fused_tail_probe(
     per-batch probe, shared by ``CdcEngine.replay`` and
     ``MultiTableEngine``.
 
-    ``flags``: optional named boolean columns (e.g. barrier presence,
-    malformed-row presence) folded into the SAME job — each yields a global
-    max under its name plus the tail group's own value under
-    ``tail_<name>`` (the deferred run's flags feed the carry meta).
-    ``with_file=True`` adds the global max source file as ``f``."""
-    flags = flags or {}
-    aggs = [
-        F.max("source.pos").alias("p"),
-        F.min("source.pos").alias("pmin"),
-        F.count(F.lit(1)).alias("nrows"),
-    ]
-    if with_file:
-        aggs.append(F.max("source.file").alias("f"))
-    for name, c in flags.items():
-        aggs.append(F.max(c.cast("int")).alias(name))
-    per_tx = env.groupBy(F.col("transaction.id").alias("_tx")).agg(*aggs)
-
-    tail_struct = F.struct(
-        F.col("_tx").alias("tx"), F.col("pmin").alias("pmin"),
-        F.col("nrows").alias("nrows"),
-        *[F.col(n).alias(n) for n in flags],
-    )
-    sel = [
-        F.max("p").alias("p"),
-        F.max_by(tail_struct, F.col("p")).alias("tail"),
-        F.count(F.when(F.col("p").isNotNull(), 1)).alias("ng"),
-        F.count(F.lit(1)).alias("ngrp"),
-        F.sum("nrows").alias("n"),
-    ]
-    if with_file:
-        sel.append(F.max("f").alias("f"))
-    for name in flags:
-        sel.append(F.max(name).alias(name))
-    row = per_tx.select(*sel).first()
+    ``probe`` holds the aggregates, built once per table or engine
+    (``plans.exprs.TailProbe``): its optional named flags (e.g. barrier
+    presence, malformed-row presence) fold into the SAME job — each yields a
+    global max under its name plus the tail group's own value under
+    ``tail_<name>`` (the deferred run's flags feed the carry meta); its
+    ``with_file`` adds the global max source file as ``f``."""
+    group, aggs = probe.per_tx
+    row = env.groupBy(group).agg(*aggs).select(*probe.fold).first()
     tail = row["tail"]
     out = {
         "p": row["p"],
@@ -160,9 +128,9 @@ def fused_tail_probe(
         # deferred-row figure when the tail is carried to the next batch
         "tail_n": (tail["nrows"] or 0) if tail is not None else 0,
     }
-    if with_file:
+    if probe.with_file:
         out["f"] = row["f"]
-    for name in flags:
+    for name in probe.names:
         out[name] = row[name]
         out[f"tail_{name}"] = tail[name] if tail is not None else None
     return out
@@ -220,7 +188,8 @@ def persist_tx_carry(
     vN, and (b) the caller persists AFTER its commits, so a crash mid-epoch
     leaves vN intact for the redelivered epoch to resume from (the correct
     recovery point is the PRE-epoch carry). ``None`` clears everything.
-    Returns the re-read (flat-scan) DataFrame.
+    Returns the re-read (flat-scan) DataFrame, read with the schema just
+    written (inferring it would cost a Spark job per persist).
 
     ``meta`` (optional): the carry's fused-probe facts ``{"tx", "p", "nd",
     "nb"}`` — its transaction id, max pos, and barrier/bad flags — written
@@ -244,7 +213,7 @@ def persist_tx_carry(
             _json.dump(meta, f)
     for _, p in versions:
         shutil.rmtree(p, ignore_errors=True)
-    return spark.read.parquet(d)
+    return spark.read.schema(carry.schema).parquet(d)
 
 
 def load_tx_carry(spark: SparkSession, root: str) -> DataFrame | None:
@@ -450,6 +419,10 @@ class CdcEngine:
         # are still consumed — the fence must advance anyway (offset-bearing
         # heartbeat, reference heartbeat/Heartbeat.java:27-79; without this
         # a quiet table's fence goes stale, the slot-retention failure).
+        # One manifest read serves the table's expression set and the
+        # resume-skip fence below (nothing commits in between).
+        man = self.table.manifest()
+        x = self.table.exprs(man)
         if fence is None:
             # Direct (non-replay-loop) callers land here without the loop's
             # fused probe, and previously paid up to THREE narrow jobs per
@@ -459,20 +432,8 @@ class CdcEngine:
             # answers all of them (guide §1.2 — per-batch serial driver
             # time is the scaling bottleneck; same move as fused_tail_probe
             # on the replay/stream paths).
-            aggs = [
-                F.max("source.pos").alias("p"), F.max("source.file").alias("f")
-            ]
             fuse_flags = not self.smt_chain and (has_bad is None or has_ddl is None)
-            if fuse_flags:
-                aggs.append(
-                    F.max(F.col("op").isin(BARRIER_OPS).cast("int")).alias("nd")
-                )
-                aggs.append(
-                    F.max(
-                        _reason_col(env, self.table.key_cols).isNotNull().cast("int")
-                    ).alias("nb")
-                )
-            mm = env.select(*aggs).first()
+            mm = env.select(*x.fence_probe[: 4 if fuse_flags else 2]).first()
             if fuse_flags:
                 if has_bad is None:
                     has_bad = bool(mm["nb"])
@@ -486,7 +447,7 @@ class CdcEngine:
                 # a no-op — or, in strict mode, fail loudly (one bad row
                 # never wedges OR vanishes; final review r5 closed the
                 # strict-mode vanish on this path too).
-                _, bad = split_valid(env, self.table.key_cols)
+                _, bad = split_valid(env, x)
                 if has_bad if has_bad is not None else bad.limit(1).count() > 0:
                     if self.quarantine:
                         write_quarantine(bad, self.table.root, batch_id)
@@ -503,7 +464,7 @@ class CdcEngine:
             env = smt(env)
 
         if self.quarantine:
-            good, bad = split_valid(env, self.table.key_cols)
+            good, bad = split_valid(env, x)
             # narrow probe (op/key/offset columns only) unless the replay
             # loop's fused pre-pass already answered it; quarantine is the
             # exception path, so the common case costs nothing extra
@@ -519,7 +480,7 @@ class CdcEngine:
             # not "flow into the merge": the three-valued segment and
             # control-op filters below silently DROP a null-offset or
             # null-op row, losing data with no trace (final review r5).
-            good, bad = split_valid(env, self.table.key_cols)
+            good, bad = split_valid(env, x)
             if has_bad is None:
                 has_bad = bad.limit(1).count() > 0
             if has_bad:
@@ -528,11 +489,9 @@ class CdcEngine:
                 # sit in the deferred carry — `bad` over the closed part is
                 # then empty and first() returns None; keep the intended
                 # ValueError (the row still fails when its carry applies)
-                row = bad.select(
-                    _reason_col(bad, list(self.table.key_cols)).alias("r")
-                ).first()
+                row = bad.select("_reason").first()
                 reason = (
-                    row["r"] if row is not None
+                    row["_reason"] if row is not None
                     else "deferred with the open-transaction carry"
                 )
                 raise ValueError(
@@ -549,7 +508,7 @@ class CdcEngine:
         # its offset aggregate), and only if non-zero the content collect
         # (parquet column pruning makes the probe read just `op`).
         if has_ddl is None:
-            has_ddl = env.filter(F.col("op").isin(BARRIER_OPS)).limit(1).count() > 0
+            has_ddl = env.filter(x.barrier).limit(1).count() > 0
         if has_ddl:
             # DDL text source: the wire path carries it in a `_ddl_text`
             # side column (arbitrary payload schemas have no `content`
@@ -587,7 +546,7 @@ class CdcEngine:
                     f"batch {batch_id} carries >{self.MAX_BARRIERS_PER_BATCH} "
                     "DDL/TRUNCATE barrier rows — refusing unbounded driver collect"
                 )
-            dml = env.filter(~F.col("op").isin(BARRIER_OPS))
+            dml = env.filter(~x.barrier)
         else:
             ddls = []
             dml = env
@@ -595,11 +554,11 @@ class CdcEngine:
         # marker, 'p' slice pointer): their offsets are consumed (the fence
         # already covers them) but they carry no row data — drop them from
         # the merge instead of letting null payloads reach the dedupe
-        dml = dml.filter(~F.col("op").isin(CONTROL_OPS))
+        dml = dml.filter(x.not_control)
         if "_ddl_text" in dml.columns:
             dml = dml.drop("_ddl_text")
 
-        cur = self.table.fence()
+        cur = self.table.fence(man)
         # every fence comparison is file-major via offset_key (schema.py
         # offset-order contract); the intra-batch SEGMENT filters below stay
         # on the long pos — contract-equivalent, cheaper per row
@@ -607,11 +566,12 @@ class CdcEngine:
             return None  # whole batch already applied (resume skip)
 
         version = None
-        seg_start = -(1 << 62)
+        seg_start, last_end = TableExprs.OPEN
         for i, d in enumerate(list(ddls) + [None]):
-            seg_end = d["pos"] if d is not None else (1 << 62)
+            seg_end = d["pos"] if d is not None else last_end
             seg = dml.filter(
-                (F.col("source.pos") > seg_start) & (F.col("source.pos") < seg_end)
+                x.open_segment if (seg_start, seg_end) == TableExprs.OPEN
+                else x.segment(seg_start, seg_end)
             )
             # the segment's fence is the offset just below its closing
             # barrier — in the BARRIER's file, not the batch-max file (a
@@ -619,7 +579,7 @@ class CdcEngine:
             # earlier-pos) pair that breaks file-major ordering)
             seg_fence = (d["file"], d["pos"] - 1) if d is not None else fence
             version = (
-                self._merge_segment(seg, f"{batch_id}/s{i}", seg_fence, fence_check)
+                self._merge_segment(seg, f"{batch_id}/s{i}", seg_fence, fence_check, x)
                 or version
             )
             if d is not None:
@@ -650,6 +610,7 @@ class CdcEngine:
                                 f"{batch_id}/p{i}",
                                 (d["file"], d["pos"]),
                                 fence_check,
+                                x,
                             ) or version
                     else:
                         # TRUNCATE TABLE arriving as SQL *text* (op='l')
@@ -733,16 +694,22 @@ class CdcEngine:
         env: DataFrame,
         batch_id: str,
         fence: tuple[str, int],
-        fence_check: bool = True,
+        fence_check: bool,
+        x: TableExprs,
     ) -> int | None:
-        split = split_pk_changes(
-            env, self.table.key_cols, tombstones_on_delete=self.tombstones_on_delete
-        )
-        if self.tombstones_on_delete:
+        """PK split → last-wins dedupe → merge → cadenced compaction. The
+        split and dedupe expressions depend on the key columns only, so the
+        batch's expression set ``x`` serves every segment, even after a
+        DDL barrier changed the schema mid-batch."""
+        keys = self.table.key_cols
+        tomb = self.tombstones_on_delete
+        payload_fields = env.schema["after"].dataType.fieldNames()
+        split = split_pk_changes(env, keys, tomb, cols=x.pk_split(tomb))
+        if tomb:
             # tombstones are wire-format markers; the merge consumes the
             # delete itself (same final state, asserted in tests)
-            split = split.filter(~F.col("_tombstone")).drop("_tombstone")
-        changes = compute_changes(split, self.table.key_cols)
+            split = split.filter(x.not_tombstone).drop("_tombstone")
+        changes = compute_changes(split, keys, cols=x.dedupe(payload_fields))
         v = merge_changes(
             self.table, changes, fence, batch_id,
             salt_factor=self.salt_factor, fence_check=fence_check,
@@ -1042,15 +1009,10 @@ class CdcEngine:
             # id AND the tail-transaction boundary (per-batch serial driver
             # time is the scaling bottleneck, so everything rides this
             # single job — fused_tail_probe, shared with MultiTableEngine).
-            mm = fused_tail_probe(
-                env,
-                flags={
-                    "nd": F.col("op").isin(BARRIER_OPS),
-                    "nb": _reason_col(env, self.table.key_cols).isNotNull(),
-                },
-                with_file=True,
-            )
-            cur = self.table.fence()
+            man = self.table.manifest()
+            probe_x = self.table.exprs(man).probe
+            mm = fused_tail_probe(env, probe_x)
+            cur = self.table.fence(man)
             if mm["p"] is None or mm["f"] is None:
                 # no fully-positioned row in the whole batch (null pos, or
                 # null file under the file-major key — offset_key(None, p)
@@ -1123,7 +1085,9 @@ class CdcEngine:
                             "p": mm["p"], "tt": tail_tx,
                             "boundary": derive_tx_boundary(mm, cm, had_carry),
                         }
-                    closed, carry, boundary = split_open_tail_tx(env, probe=probe)
+                    closed, carry, boundary = split_open_tail_tx(
+                        env, probe_x, probe=probe
+                    )
                     whole_open = closed is None
                     if carry is not None and fused:
                         # meta for the NEW carry: the deferred run is the
@@ -1262,18 +1226,12 @@ class CdcEngine:
         # has_bad/has_ddl probes; at 4M-event epochs each is a full-batch
         # column scan. The carry (if any) is already unioned in, so the
         # no-carry boundary derivation applies.
-        mm = fused_tail_probe(
-            env,
-            flags={
-                "nd": F.col("op").isin(BARRIER_OPS),
-                "nb": _reason_col(env, self.table.key_cols).isNotNull(),
-            },
-            with_file=True,
-        )
+        probe_x = self.table.exprs().probe
+        mm = fused_tail_probe(env, probe_x)
         self._carry_meta = None  # stream-path carries have no fused meta
         boundary = derive_tx_boundary(mm, None, False)
         closed, carry, boundary = split_open_tail_tx(
-            env, probe={"p": mm["p"], "tt": mm["tt"], "boundary": boundary}
+            env, probe_x, probe={"p": mm["p"], "tt": mm["tt"], "boundary": boundary}
         )
         engaged = had_carry or carry is not None
         if closed is None:
@@ -1312,9 +1270,7 @@ class CdcEngine:
             carry = load_tx_carry(self.spark, self.table.root)
         if carry is None:
             return None
-        mm = carry.select(
-            F.max("source.pos").alias("p"), F.max("source.file").alias("f")
-        ).first()
+        mm = carry.select(*self.table.exprs().fence_probe[:2]).first()
         if mm["p"] is None:
             persist_tx_carry(self.spark, None, self.table.root)
             return None

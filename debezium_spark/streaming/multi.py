@@ -31,13 +31,15 @@ from __future__ import annotations
 import os
 import time as _pytime
 from dataclasses import dataclass, field
+from functools import cached_property
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from debezium_spark.plans.exprs import TailProbe
 from debezium_spark.plans.table import LakeTable
-from debezium_spark.schema import SOURCE_SCHEMA, TRANSACTION_SCHEMA, offset_key
+from debezium_spark.schema import BARRIER_OPS, SOURCE_SCHEMA, TRANSACTION_SCHEMA, offset_key
 from debezium_spark.streaming.engine import CdcEngine
 
 #: wire-format envelope: payloads as JSON strings (per-table schemas are
@@ -67,25 +69,30 @@ def envelope_to_wire(env: DataFrame) -> DataFrame:
 
 
 def wire_to_envelope(wire: DataFrame, payload: StructType) -> DataFrame:
-    """Wire form → typed envelope under one table's payload schema.
+    """Wire form → typed envelope under one table's payload schema."""
+    return wire.select(*wire_envelope_cols(payload))
+
+
+def wire_envelope_cols(payload: StructType) -> list:
+    """The wire → typed-envelope projection (see ``wire_to_envelope``).
 
     DDL rows (op='l') additionally carry their SQL/TableChanges text in a
     ``_ddl_text`` side column: an arbitrary table's payload schema has no
     ``content`` field, so ``from_json`` would drop the text and barrier
     application downstream would see nothing. The engine consumes and drops
     the side column before merging."""
-    return wire.select(
+    return [
         F.from_json(F.col("before_json"), payload).alias("before"),
         F.from_json(F.col("after_json"), payload).alias("after"),
-        "op",
-        "ts_ms",
-        "source",
-        "transaction",
+        F.col("op"),
+        F.col("ts_ms"),
+        F.col("source"),
+        F.col("transaction"),
         F.when(
             F.col("op").isin("l", "p"),
             F.get_json_object(F.col("after_json"), "$.content"),
         ).alias("_ddl_text"),
-    )
+    ]
 
 
 def _schema_from_cols(cols: list[tuple]) -> StructType:
@@ -194,6 +201,10 @@ class MultiTableEngine:
         #: fused-probe facts about _tx_carry (tx id + max pos) — lets the
         #: dispatcher split carry-prefixed batches with one probe job
         self._carry_meta: dict | None = None
+        #: the tail probe's expressions, and (spec set, _RoutingExprs) —
+        #: built on first use (see ``_routing``)
+        self._tail_probe: TailProbe | None = None
+        self._routing_slot: tuple | None = None
         self.salt_factor = salt_factor
         self.compact_depth = compact_depth
         #: fold the catalog ledger into one checkpoint line once it exceeds
@@ -613,6 +624,14 @@ class MultiTableEngine:
             for k in spec.key_cols
         )
 
+    def _routing(self) -> "_RoutingExprs":
+        """The dispatcher's expressions for the current registered-spec
+        set, rebuilt when a table registers, renames or retires."""
+        key = tuple(self.specs.items())
+        if self._routing_slot is None or self._routing_slot[0] != key:
+            self._routing_slot = (key, _RoutingExprs(dict(self.specs)))
+        return self._routing_slot[1]
+
     def _prepass_stats(self, wire: DataFrame) -> DataFrame:
         """The per-batch pre-pass: ONE aggregation over the wire batch that
         yields, per (db, table) — its max offset, barrier presence, and a
@@ -621,105 +640,11 @@ class MultiTableEngine:
         offset, null payload — incl. JSON parse failures — or a MISSING key
         under that table's key columns). Keeping every probe inside this
         single job is the serial-cost contract: per-batch driver time is
-        the scaling bottleneck (asserted by tests/test_plans.py).
-
-        Single-parse: each payload JSON is parsed ONCE per row as a generic
-        ``map<string,string>`` (judge r2 flagged the old shape — one
-        ``from_json`` per REGISTERED SCHEMA inside a when-chain). The
-        per-table key-column sets ride a LITERAL map keyed by ``db.table``
-        probed with ``element_at`` + one ``exists`` over the key names —
-        the expression stays ONE flat constant however many tables are
-        registered (judge r3 watch-item #1: the old per-spec when-chain of
-        validity trees grew the codegen linearly per table). The key check
-        is presence-only (null/missing in the map ⇒ the typed parse nulls
-        too, so ``nb = 1`` is always a true positive); type-strictness
-        beyond presence is the engine's post-parse job (see
-        ``_prepass_key_provable``)."""
-        from debezium_spark.operators.quarantine import validity_reason
-
-        # materialize the two parses as named columns so the plan carries
-        # exactly two from_json nodes however many tables are registered
-        # (asserted by tests/test_plans.py). The before-side parse is
-        # CONDITIONAL (guide §2.3 — don't compute bytes the probe won't
-        # read): every consumer probes the after map first (``coalesce(
-        # am[k], bm[k])``; ``null_payload`` = both sides null), so the
-        # before doc only needs parsing when the after map is null or
-        # lacks one of this table's key columns — on an insert/update-
-        # heavy stream that halves the probe's JSON work. Semantics are
-        # unchanged by construction: whenever ``_bm`` is skipped,
-        # ``_am.isNull()`` is false (kills null_payload regardless of
-        # _bm) and every key resolved from ``_am`` alone (kills key_null
-        # regardless of _bm).
-        parsed = wire.select(
-            "op",
-            "source",
-            "before_json",
-            F.from_json("after_json", "map<string,string>").alias("_am"),
-        )
-        after_m = F.col("_am")
-        if self.specs:
-            # one flat literal: identity -> array of key column names. The
-            # lookup key joins (db, table) with NUL, not '.' — dotted names
-            # would otherwise alias two distinct identities onto one map
-            # key (('a.b','c') vs ('a','b.c')), which under ANSI's
-            # duplicate-map-key EXCEPTION policy fails the whole batch
-            entries = []
-            for (db_, tbl_), spec_ in self.specs.items():
-                entries.append(F.lit(f"{db_}\x00{tbl_}"))
-                entries.append(F.array(*[F.lit(k) for k in spec_.key_cols]))
-            key_lookup = F.create_map(*entries)
-            # try_element_at: ANSI-safe null (plain element_at THROWS on a
-            # missing map key under Spark 4's default ANSI mode)
-            spec_keys = F.try_element_at(
-                key_lookup,
-                F.concat_ws("\x00", F.col("source.db"), F.col("source.table")),
-            )
-            # parse the before doc only when the after map cannot answer
-            # alone; for unregistered tables (spec_keys null) the need is
-            # null -> parse skipped -> their nb flag sees a null _bm, fine
-            # because no dispatch consumer reads unregistered groups' nb
-            need_bm = after_m.isNull() | F.exists(
-                spec_keys, lambda k: F.try_element_at(after_m, k).isNull()
-            )
-            parsed = parsed.select(
-                "op",
-                "source",
-                "_am",
-                F.when(
-                    need_bm, F.from_json("before_json", "map<string,string>")
-                ).alias("_bm"),
-            )
-            before_m = F.col("_bm")
-            # null for unregistered tables -> exists() yields null -> the
-            # validity when-clause skips (those rows are dropped anyway)
-            key_null = F.exists(
-                spec_keys,
-                lambda k: F.coalesce(
-                    F.try_element_at(after_m, k), F.try_element_at(before_m, k)
-                ).isNull(),
-            )
-        else:
-            parsed = parsed.select(
-                "op", "source", "_am",
-                F.from_json("before_json", "map<string,string>").alias("_bm"),
-            )
-            before_m = F.col("_bm")
-            key_null = F.lit(False)
-        bad = validity_reason(
-            F.col("op"), F.col("source.pos"), after_m, before_m, key_null,
-            file=F.col("source.file"),
-        ).isNotNull()
-        from debezium_spark.streaming.engine import BARRIER_OPS
-
-        return parsed.groupBy(
-            F.col("source.db").alias("db"), F.col("source.table").alias("t")
-        ).agg(
-            F.max("source.pos").alias("p"),
-            F.max("source.file").alias("f"),
-            F.max(F.col("op").isin(BARRIER_OPS).cast("int")).alias("nd"),
-            F.max(bad.cast("int")).alias("nb"),
-            F.count(F.lit(1)).alias("n"),
-        )
+        the scaling bottleneck (asserted by tests/test_plans.py). The
+        expressions are built once per registered-spec set
+        (``_RoutingExprs.prepass``)."""
+        parse, probe, group, aggs = self._routing().prepass
+        return wire.select(*parse).select(*probe).groupBy(*group).agg(*aggs)
 
     def apply_wire_batch(self, wire: DataFrame, batch_id: str) -> dict[str, int | None]:
         """Fan one mixed wire batch out to the per-table engines.
@@ -751,7 +676,9 @@ class MultiTableEngine:
             had_carry = self._tx_carry is not None
             # ONE probe job on the incoming batch (carry facts ride its
             # persisted meta), instead of two aggregations over the union
-            bp = fused_tail_probe(wire)
+            if self._tail_probe is None:
+                self._tail_probe = TailProbe()
+            bp = fused_tail_probe(wire, self._tail_probe)
             if had_carry:
                 wire = self._tx_carry.unionByName(wire)
             cm = self._carry_meta
@@ -763,7 +690,7 @@ class MultiTableEngine:
                 }
             elif not had_carry:
                 probe = {"p": bp["p"], "tt": bp["tt"], "boundary": None}
-            closed, carry, _ = split_open_tail_tx(wire, probe=probe)
+            closed, carry, _ = split_open_tail_tx(wire, self._tail_probe, probe=probe)
             if (carry is not None and bp["p"] is not None
                     and (not had_carry or cm is not None)):
                 # nd/nb are conservative placeholders: the multi pre-pass
@@ -907,6 +834,8 @@ class MultiTableEngine:
                 else None
             )
 
+            routing = self._routing()
+
             def apply_one(key) -> tuple[str, int | None]:
                 eng = self.engines[key]
                 spec = self.specs[key]
@@ -920,12 +849,9 @@ class MultiTableEngine:
                     if global_fence is None:
                         return spec.fqn, None
                     return spec.fqn, eng.heartbeat(global_fence)
-                cond = F.lit(False)
-                for kdb, ktbl in match_keys:
-                    cond = cond | (
-                        (F.col("source.db") == kdb) & (F.col("source.table") == ktbl)
-                    )
-                env = wire_to_envelope(wire.filter(cond), spec.payload_schema)
+                env = wire.filter(routing.rows_of(match_keys)).select(
+                    *routing.envelope(key)
+                )
                 # null max-pos (or max-file) ⇒ every row in this table's
                 # group is missing part of its file-major offset: hand the
                 # engine fence=None/has_bad=None so its own probe
@@ -1089,6 +1015,132 @@ class MultiTableEngine:
     def read_all(self) -> dict[str, DataFrame]:
         """Final state per table (fqn → DataFrame)."""
         return {spec.fqn: self.engines[k].table.read() for k, spec in self.specs.items()}
+
+
+class _RoutingExprs:
+    """``MultiTableEngine``'s per-batch expressions for one registered-spec
+    set: the pre-pass's spec-key literal map, map parses and aggregates,
+    and each table's routing filter and typed parse. Built once per spec
+    set — every ``pyspark.sql.functions`` call costs Python→JVM round trips
+    (see ``plans.exprs``) — and replaced by ``MultiTableEngine._routing``
+    when a table registers, renames or retires."""
+
+    def __init__(self, specs: dict[tuple[str, str], TableSpec]) -> None:
+        self.specs = specs
+        self._rows: dict[frozenset, object] = {}
+        self._envelope: dict[tuple[str, str], list] = {}
+
+    @cached_property
+    def prepass(self) -> tuple[list, list, list, list]:
+        """(parse projection, probe projection, group keys, aggregates).
+
+        Single-parse: each payload JSON is parsed ONCE per row as a generic
+        ``map<string,string>`` (judge r2 flagged the old shape — one
+        ``from_json`` per REGISTERED SCHEMA inside a when-chain). The
+        per-table key-column sets ride a LITERAL map keyed by ``db.table``
+        probed with ``element_at`` + one ``exists`` over the key names —
+        the expression stays ONE flat constant however many tables are
+        registered (judge r3 watch-item #1: the old per-spec when-chain of
+        validity trees grew the codegen linearly per table). The key check
+        is presence-only (null/missing in the map ⇒ the typed parse nulls
+        too, so ``nb = 1`` is always a true positive); type-strictness
+        beyond presence is the engine's post-parse job (see
+        ``MultiTableEngine._prepass_key_provable``)."""
+        from debezium_spark.operators.quarantine import validity_reason
+
+        # materialize the two parses as named columns so the plan carries
+        # exactly two from_json nodes however many tables are registered
+        # (asserted by tests/test_plans.py). The before-side parse is
+        # CONDITIONAL (guide §2.3 — don't compute bytes the probe won't
+        # read): every consumer probes the after map first (``coalesce(
+        # am[k], bm[k])``; ``null_payload`` = both sides null), so the
+        # before doc only needs parsing when the after map is null or
+        # lacks one of this table's key columns — on an insert/update-
+        # heavy stream that halves the probe's JSON work. Semantics are
+        # unchanged by construction: whenever ``_bm`` is skipped,
+        # ``_am.isNull()`` is false (kills null_payload regardless of
+        # _bm) and every key resolved from ``_am`` alone (kills key_null
+        # regardless of _bm).
+        op, source = F.col("op"), F.col("source")
+        parse = [
+            op, source, F.col("before_json"),
+            F.from_json("after_json", "map<string,string>").alias("_am"),
+        ]
+        after_m = F.col("_am")
+        before_doc = F.from_json("before_json", "map<string,string>")
+        if self.specs:
+            # one flat literal: identity -> array of key column names. The
+            # lookup key joins (db, table) with NUL, not '.' — dotted names
+            # would otherwise alias two distinct identities onto one map
+            # key (('a.b','c') vs ('a','b.c')), which under ANSI's
+            # duplicate-map-key EXCEPTION policy fails the whole batch
+            entries = []
+            for (db_, tbl_), spec_ in self.specs.items():
+                entries.append(F.lit(f"{db_}\x00{tbl_}"))
+                entries.append(F.array(*[F.lit(k) for k in spec_.key_cols]))
+            key_lookup = F.create_map(*entries)
+            # try_element_at: ANSI-safe null (plain element_at THROWS on a
+            # missing map key under Spark 4's default ANSI mode)
+            spec_keys = F.try_element_at(
+                key_lookup,
+                F.concat_ws("\x00", F.col("source.db"), F.col("source.table")),
+            )
+            # parse the before doc only when the after map cannot answer
+            # alone; for unregistered tables (spec_keys null) the need is
+            # null -> parse skipped -> their nb flag sees a null _bm, fine
+            # because no dispatch consumer reads unregistered groups' nb
+            need_bm = after_m.isNull() | F.exists(
+                spec_keys, lambda k: F.try_element_at(after_m, k).isNull()
+            )
+            before_doc = F.when(need_bm, before_doc)
+            before_m = F.col("_bm")
+            # null for unregistered tables -> exists() yields null -> the
+            # validity when-clause skips (those rows are dropped anyway)
+            key_null = F.exists(
+                spec_keys,
+                lambda k: F.coalesce(
+                    F.try_element_at(after_m, k), F.try_element_at(before_m, k)
+                ).isNull(),
+            )
+        else:
+            before_m = F.col("_bm")
+            key_null = F.lit(False)
+        probe = [op, source, after_m, before_doc.alias("_bm")]
+        bad = validity_reason(
+            op, F.col("source.pos"), after_m, before_m, key_null,
+            file=F.col("source.file"),
+        ).isNotNull()
+        group = [F.col("source.db").alias("db"), F.col("source.table").alias("t")]
+        aggs = [
+            F.max("source.pos").alias("p"),
+            F.max("source.file").alias("f"),
+            F.max(op.isin(BARRIER_OPS).cast("int")).alias("nd"),
+            F.max(bad.cast("int")).alias("nb"),
+            F.count(F.lit(1)).alias("n"),
+        ]
+        return parse, probe, group, aggs
+
+    def rows_of(self, keys: set[tuple[str, str]]):
+        """Filter selecting the rows of the given (db, table) identities
+        (a renamed capture also owns this batch's rows under its former
+        names)."""
+        fk = frozenset(keys)
+        cond = self._rows.get(fk)
+        if cond is None:
+            cond = F.lit(False)
+            for kdb, ktbl in sorted(fk):
+                cond = cond | (
+                    (F.col("source.db") == kdb) & (F.col("source.table") == ktbl)
+                )
+            self._rows[fk] = cond
+        return cond
+
+    def envelope(self, key: tuple[str, str]) -> list:
+        """The typed-envelope projection under ``key``'s payload schema."""
+        cols = self._envelope.get(key)
+        if cols is None:
+            cols = self._envelope[key] = wire_envelope_cols(self.specs[key].payload_schema)
+        return cols
 
 
 __all__ = [

@@ -162,6 +162,67 @@ def test_multi_table_prepass_is_one_aggregation(spark, tmp_path):
     assert plan.lower().count("from_json") <= 2, plan.lower().count("from_json")
 
 
+def test_stream_carry_persist_is_one_job(spark, tmp_path, monkeypatch):
+    """A stream epoch's open-transaction carry persist writes the carry and
+    re-reads it under the schema it just wrote: exactly ONE Spark job per
+    persist (inferring the schema on the re-read would add a job to every
+    epoch). Counted per call with a job group around the engine's own
+    ``persist_tx_carry``."""
+    import debezium_spark.streaming.engine as eng_mod
+    from debezium_spark import CdcEngine, LakeTable
+
+    ddl = (
+        "before struct<repo:string,path:string,content:string>, "
+        "after struct<repo:string,path:string,content:string>, "
+        "op string, ts_ms long, "
+        "source struct<file:string,pos:bigint,gtid:string,snapshot:string,"
+        "db:string,table:string,ts_ms:bigint>, "
+        "transaction struct<id:string,total_order:bigint,data_collection_order:bigint>"
+    )
+
+    def epoch(rows):
+        return spark.createDataFrame([
+            {"before": None, "after": {"repo": "r", "path": p, "content": c},
+             "op": "c", "ts_ms": pos,
+             "source": {"file": "binlog.000001", "pos": pos, "gtid": None,
+                        "snapshot": None, "db": "app", "table": "t", "ts_ms": pos},
+             "transaction": {"id": tx, "total_order": pos,
+                             "data_collection_order": pos}}
+            for pos, p, c, tx in rows
+        ], ddl)
+
+    sc = spark.sparkContext
+    real = eng_mod.persist_tx_carry
+    groups: list[str] = []
+
+    def grouped(*args, **kwargs):
+        group = f"carry-persist-{os.getpid()}-{len(groups)}"
+        groups.append(group)
+        sc.setJobGroup(group, "carry persist")
+        try:
+            return real(*args, **kwargs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    monkeypatch.setattr(eng_mod, "persist_tx_carry", grouped)
+    table = LakeTable(spark, str(tmp_path / "t"), ["repo", "path"], n_buckets=2)
+    engine = CdcEngine(spark, table)
+    # each epoch leaves its last transaction open, so each persists a carry
+    engine.apply_stream_batch(epoch([(1, "a", "v1", "tx1"), (2, "b", "v1", "tx2")]),
+                              batch_id="epoch_00000")
+    engine.apply_stream_batch(epoch([(3, "c", "v1", "tx2"), (4, "d", "v1", "tx3")]),
+                              batch_id="epoch_00001")
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(groups) == 2
+    for group in groups:
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        assert len(jobs) == 1, (group, jobs)
+    assert {r["path"] for r in table.read().collect()} == {"a", "b", "c"}
+    engine.flush_tx_carry()
+    assert {r["path"] for r in table.read().collect()} == {"a", "b", "c", "d"}
+
+
 def test_merge_empty_changes_heartbeats_without_delta(spark, tmp_path):
     """An all-filtered batch (every row quarantined/split away) must still
     advance the fence via a heartbeat commit, leave NO delta dirs behind

@@ -529,7 +529,13 @@ def test_parse_default_backslash_normalization():
 def test_add_column_default_fills_pre_add_files(spark, tmp_path):
     """Iceberg initial-default semantics via EXISTS_DEFAULT metadata: rows
     written BEFORE the ADD surface the default; rows written after keep
-    their explicit values including null."""
+    their explicit values including null.
+
+    Also the table's expression set (``LakeTable.exprs``): two batches on
+    an unchanged table reuse the same expression objects; the mid-stream
+    ADD COLUMN rebuilds them, and so does a RENAME (the rename ledger feeds
+    the read aliases), after which old-name files still read back as the
+    oracle says."""
     from pyspark.sql.types import StructType
 
     t = LakeTable(spark, str(tmp_path / "t"), ["k"], n_buckets=2, mode="mor")
@@ -549,12 +555,21 @@ def test_add_column_default_fills_pre_add_files(spark, tmp_path):
         return df.withColumn("after", pay("after")).withColumn("before", pay("before"))
 
     base = gen.events(200)
-    eng.apply_envelope_batch(env(base.filter(F.col("source.pos") < 100), False, None),
-                             batch_id="a")
+    pos = F.col("source.pos")
+    eng.apply_envelope_batch(env(base.filter(pos < 50), False, None), batch_id="a1")
+    x_a = t.exprs()
+    split_a, dedupe_a = x_a.pk_split(False), x_a.dedupe(["k", "content"])
+    eng.apply_envelope_batch(env(base.filter((pos >= 50) & (pos < 100)), False, None),
+                             batch_id="a2")
+    # unchanged table: the second batch reused the first batch's objects
+    assert t.exprs() is x_a
+    assert x_a.pk_split(False) is split_a and x_a.dedupe(["k", "content"]) is dedupe_a
     eng.apply_envelope_batch(
         _ddl_row(spark, env(base, False, None).schema, 100,
                  "ALTER TABLE inventory.repo_files ADD COLUMN score BIGINT DEFAULT 42"),
         batch_id="ddl")
+    x_add = t.exprs()
+    assert x_add is not x_a and "score" in x_add.fields  # ADD COLUMN rebuilt it
     # post-ADD rows: score = pos, except pos % 10 == 0 carries EXPLICIT null
     score = F.when(F.pmod(F.col("source.pos"), F.lit(10)) == 0,
                    F.lit(None).cast("long")).otherwise(F.col("source.pos"))
@@ -570,6 +585,7 @@ def test_add_column_default_fills_pre_add_files(spark, tmp_path):
         .filter(F.col("op") != "d")
         .select(F.coalesce("after.k", "before.k").alias("k"),
                 F.col("source.pos").alias("pos"),
+                F.col("after.content").alias("content"),
                 F.col("after.score").alias("score"))
         .withColumn("rn", F.expr(
             "row_number() over (partition by k order by pos desc)"))
@@ -590,6 +606,25 @@ def test_add_column_default_fills_pre_add_files(spark, tmp_path):
             assert r["score"] == exp["pos"], r
             phase_b_keys += 1
     assert phase_a_keys > 0 and phase_b_keys > 0 and explicit_null_keys > 0
+    assert t.exprs() is x_add  # data batches keep the post-ADD set
+
+    # RENAME: the rename ledger changes the read aliases, so the set is
+    # rebuilt, and every file written under the old name reads back through
+    # the alias exactly as the oracle says
+    eng.apply_envelope_batch(
+        _ddl_row(spark, env(base, True, score).schema, 200,
+                 "ALTER TABLE inventory.repo_files RENAME COLUMN content TO body"),
+        batch_id="ddl-rename")
+    x_ren = t.exprs()
+    assert x_ren is not x_add and x_ren.renames == {"body": ["content"]}
+    renamed = {r["k"]: r for r in t.read().collect()}
+    assert renamed.keys() == {r["k"] for r in out}
+    for k, r in renamed.items():
+        exp = last.get(k)
+        if exp is None:
+            continue
+        assert r["body"] == exp["content"], r
+        assert r["score"] == (42 if exp["pos"] < 100 else exp["score"]), r
     # the default survives the manifest round-trip and a reopen
     t2 = LakeTable(spark, str(tmp_path / "t"), ["k"])
     assert t2.schema()["score"].metadata["EXISTS_DEFAULT"] == "42"
