@@ -15,6 +15,7 @@ Determinism rules shared by both sides (so value-hashes match):
 from __future__ import annotations
 
 import json
+import logging
 import os
 import sys
 import tempfile
@@ -58,6 +59,8 @@ from debezium_spark.dataops.text import (
 )
 
 SF_DEFAULT = "/root/testdata/sf0.001"
+
+_log = logging.getLogger(__name__)
 
 #: engine-backed queries build throwaway lake tables; scratch them on
 #: /dev/shm (this sandbox's one virtio disk serializes on writeback —
@@ -115,7 +118,13 @@ def _events_max_pos(spark: SparkSession, sf_dir: str) -> int:
     min/max stats are exact for int64 columns). ``pos`` is ``event_id``
     verbatim in the shared env derivation, so the value is identical to
     the old aggregation and batch boundaries do not move. Falls back to
-    the aggregation job when stats are missing (e.g. a rewritten file)."""
+    the aggregation job, with one logged warning, when the footers cannot
+    answer (stats missing, e.g. a rewritten file; column absent; file
+    unreadable).
+
+    Callers must size an UNFILTERED stream derived from the events table:
+    the value is the table's max ``event_id``, so a stream that filtered
+    rows out before batching would get a larger max than its own."""
     path = f"{sf_dir}/events.parquet"
     try:
         import pyarrow.parquet as pq
@@ -136,8 +145,9 @@ def _events_max_pos(spark: SparkSession, sf_dir: str) -> int:
                 mx = st.max if mx is None else max(mx, st.max)
         if mx is not None:
             return int(mx)
-    except Exception:
-        pass
+    except (ImportError, KeyError, ValueError, OSError) as e:
+        _log.warning("events max pos: footer statistics unusable (%s); "
+                     "falling back to a full-scan aggregation", e)
     return (
         spark.read.parquet(path).select(F.max("event_id")).first()[0] or 0
     )
@@ -171,7 +181,8 @@ def _read(spark: SparkSession, sf_dir: str, name: str, split: bool = True) -> Da
         return df  # ops/measurement escape hatch; default on
     try:
         groups, rows = _parquet_layout(path)
-    except Exception:
+    except (ImportError, KeyError, ValueError, OSError) as e:
+        _log.warning("%s: parquet layout unreadable (%s); read left unsplit", path, e)
         return df
     par = max(1, spark.sparkContext.defaultParallelism)
     # the marginal parallelism gain shrinks as groups→par while the

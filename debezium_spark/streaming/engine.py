@@ -15,6 +15,14 @@ transform → handle → offset-commit loop) and of the fork's sink replay task
 Exactly-once: the fence check in ``merge_changes`` skips any batch whose max
 offset <= the committed fence, and the commit is atomic, so re-running any
 prefix after a crash is a no-op (FIXTURES.md F4 idempotency).
+
+Transaction alignment is ONE protocol for every entry path (``replay``,
+``apply_stream_batch``, ``MultiTableEngine.apply_wire_batch``) and both
+``flush_tx_carry``: the pure planner ``plan_tail`` turns the batch's
+``fused_tail_probe`` row, the carry's meta and end-of-log into a fence, a
+tail boundary and the next carry's meta; the carry owner ``TxCarry`` loads,
+unions, splits, persists and clears ``<root>/_tx_carry/vN`` together with
+its ``_carry_meta.json``.
 """
 
 from __future__ import annotations
@@ -23,6 +31,7 @@ import json
 import os
 import time as _time
 from collections.abc import Callable
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -45,57 +54,25 @@ Smt = Callable[[DataFrame], DataFrame]
 
 
 def split_open_tail_tx(
-    env: DataFrame, tail: TailProbe, probe: dict | None = None
-) -> tuple[DataFrame | None, DataFrame | None, int | None]:
+    env: DataFrame, tail: TailProbe, boundary: int
+) -> tuple[DataFrame, DataFrame]:
     """Transaction-aligned batch segmentation (reference: whole transactions
     are assembled before apply, ``sink/replay/transaction/
     TransactionReplayTask.java``; the fork's binlog patch switches parse
     queues only on XID boundaries, ``mysql-binlog-connector-java-0.25.4.
     patch:230-330``).
 
-    In an ordered change log, transactions are contiguous pos runs. The only
-    transaction a batch can leave OPEN is the one owning its max-pos row —
-    every earlier transaction is proven closed by the existence of a later
-    event. If that tail transaction carries metadata (``transaction.id``
-    non-null), its run is split off and deferred to the next batch so one
-    transaction never commits across two fences; null-tx rows (autocommit)
-    are closed by definition.
-
-    Returns (closed, deferred, boundary_pos): ``closed`` = rows with pos <=
-    boundary (None if the whole batch is one open transaction), ``deferred``
-    = the open tail run (None if nothing defers).
-
-    ``probe`` (optional) carries the answers precomputed by the caller's
-    fused per-batch aggregation (``{"p", "tt", "boundary"}`` — see
-    ``CdcEngine.replay``), making this a zero-job pure plan transform; when
-    absent, two narrow driver aggregations compute them here. ``tail``: the
-    caller's ``TailProbe``, whose column references the split filters reuse
-    (only the boundary literal is per batch)."""
-    if probe is not None:
-        p, tail_tx, boundary = probe["p"], probe["tt"], probe["boundary"]
-    else:
-        agg = env.select(
-            F.max("source.pos").alias("p"),
-            F.max_by(F.col("transaction.id"), F.col("source.pos")).alias("tt"),
-        ).first()
-        p, tail_tx = agg["p"], agg["tt"]
-        boundary = (
-            env.filter(~F.col("transaction.id").eqNullSafe(F.lit(tail_tx)))
-            .select(F.max("source.pos"))
-            .first()[0]
-            if p is not None and tail_tx is not None
-            else None
-        )
-    if p is None or tail_tx is None:
-        return env, None, None
-    if boundary is None:
-        return None, env, None  # entire batch is one still-open transaction
+    Returns (closed, deferred): the rows with pos <= ``boundary`` and the
+    open tail run beyond it (``plan_tail`` finds the boundary). A pure plan
+    transform, no Spark job. ``tail``: the caller's ``TailProbe``, whose
+    column references the split filters reuse (only the boundary literal
+    is per batch)."""
     # null-pos poison records ride with the CLOSED part — a bare pos<=b
     # filter is NULL for them and they would vanish before ever reaching
     # quarantine ('one bad row never wedges OR vanishes')
     closed = env.filter((tail.pos <= boundary) | tail.pos_null)
     deferred = env.filter(tail.pos > boundary)
-    return closed, deferred, boundary
+    return closed, deferred
 
 
 def fused_tail_probe(env: DataFrame, probe: TailProbe) -> dict:
@@ -105,8 +82,7 @@ def fused_tail_probe(env: DataFrame, probe: TailProbe) -> dict:
     batch has rows, even if every offset is null), "n": total row count
     (feeds the progress committer's extract/skip counters)}``. Per-tx partial
     aggregate (tiny shuffle: one row per transaction) + global fold — THE
-    per-batch probe, shared by ``CdcEngine.replay`` and
-    ``MultiTableEngine``.
+    per-batch probe of every path (``TxCarry.plan``).
 
     ``probe`` holds the aggregates, built once per table or engine
     (``plans.exprs.TailProbe``): its optional named flags (e.g. barrier
@@ -136,21 +112,74 @@ def fused_tail_probe(env: DataFrame, probe: TailProbe) -> dict:
     return out
 
 
-def derive_tx_boundary(probe: dict, carry_meta: dict | None, had_carry: bool) -> int | None:
-    """Tail-run boundary from a batch's ``fused_tail_probe`` facts + the
-    carried transaction's meta (transactions are contiguous pos runs and
-    every carry pos < every batch pos — see ``CdcEngine.replay``):
-    other positioned groups in the batch → the tail run starts at its own
-    pmin; batch all-one-tx over a DIFFERENT carried tx → the new tx proves
-    the carried one closed at its max pos; same tx (or no carry) → still
-    open end-to-end (None)."""
-    if probe["tt"] is None:
-        return None
-    if probe["ng"] > 1:
-        return probe["pmin"] - 1
-    if had_carry and carry_meta is not None and carry_meta["tx"] != probe["tt"]:
-        return carry_meta["p"]
-    return None
+@dataclass(frozen=True)
+class TailPlan:
+    """One step's tail-transaction decision (``plan_tail``)."""
+
+    #: fence of the part that commits now; None = the apply derives it (a
+    #: flush, or a batch without one fully positioned row)
+    fence: tuple[str, int] | None
+    #: the committed part is pos <= boundary, the rest defers; None = no split
+    boundary: int | None
+    #: nothing commits: carry + batch are one still-open transaction
+    defer_all: bool
+    #: barrier / malformed-row presence in what commits (True may
+    #: over-approximate: it costs one empty control-plane pass)
+    nd: bool
+    nb: bool
+    #: the carried rows join this step (False: no carry, or the batch
+    #: cannot touch it)
+    with_carry: bool
+    #: the meta of the carry this step leaves; None = nothing carried
+    carry: dict | None
+
+
+def plan_tail(mm: dict | None, cm: dict | None, final: bool) -> TailPlan:
+    """THE tail-transaction planner, shared by every entry path and flush.
+    Pure: it runs no Spark job.
+
+    ``mm``: the batch's ``fused_tail_probe`` row (with ``f`` and the
+    ``nd``/``nb`` flags), or None for a flush (the log ended, no new
+    batch). ``cm``: the carry's meta ``{"tx", "p", "nd", "nb"}``, None when
+    nothing is carried. ``final``: the log ends at this batch, so its tail
+    transaction is closed (an unaligned apply is final too).
+
+    In an ordered change log transactions are contiguous pos runs and every
+    carried pos precedes every batch pos. The only transaction a batch can
+    leave OPEN is the one owning its max-pos row — every earlier one is
+    proven closed by a later event; null-tx rows (autocommit) are closed
+    by definition. So the tail run starts at the tail group's own ``pmin``
+    when the batch holds other positioned groups; a batch that is one
+    transaction over a DIFFERENT carried one proves the carry closed at its
+    max pos; the same transaction (or no carry) stays open end to end.
+
+    A batch without one fully positioned row (null pos or, under the
+    file-major key, null file) can neither close nor open a transaction:
+    it applies alone, so its rows reach quarantine, and the carry stays."""
+    has = cm is not None
+    carry_nd, carry_nb = has and bool(cm["nd"]), has and bool(cm["nb"])
+    if mm is None:
+        return TailPlan(None, None, False, carry_nd, carry_nb, has, None)
+    if mm["p"] is None or mm["f"] is None:
+        return TailPlan(None, None, False, bool(mm["nd"]), bool(mm["nb"]), False, cm)
+    nd, nb = bool(mm["nd"]) or carry_nd, bool(mm["nb"]) or carry_nb
+    tt = mm["tt"]
+    if final or tt is None:
+        return TailPlan((mm["f"], mm["p"]), None, False, nd, nb, has, None)
+    if mm["ng"] > 1:
+        boundary = mm["pmin"] - 1
+    elif has and cm["tx"] != tt:
+        boundary = cm["p"]
+    else:
+        meta = {"tx": tt, "p": mm["p"], "nd": nd, "nb": nb}
+        return TailPlan(None, None, True, nd, nb, has, meta)
+    # the deferred run is the batch's tail group (plus a carry of the same
+    # transaction, conservatively)
+    same = has and cm["tx"] == tt
+    meta = {"tx": tt, "p": mm["p"],
+            "nd": bool(mm["tail_nd"]) or (same and carry_nd),
+            "nb": bool(mm["tail_nb"]) or (same and carry_nb)}
+    return TailPlan((mm["f"], boundary), boundary, False, nd, nb, has, meta)
 
 
 def _carry_versions(root: str) -> list[tuple[int, str]]:
@@ -191,13 +220,11 @@ def persist_tx_carry(
     Returns the re-read (flat-scan) DataFrame, read with the schema just
     written (inferring it would cost a Spark job per persist).
 
-    ``meta`` (optional): the carry's fused-probe facts ``{"tx", "p", "nd",
-    "nb"}`` — its transaction id, max pos, and barrier/bad flags — written
-    as ``_carry_meta.json`` inside the version dir (underscore-prefixed
-    files are invisible to the parquet reader). They let the NEXT batch's
-    split stay a zero-job plan transform (see ``CdcEngine.replay``); a
-    carry without meta is handled by the probing fallback."""
-    import json as _json
+    ``meta``: the carry's facts ``{"tx", "p", "nd", "nb"}`` (``plan_tail``)
+    — its transaction id, max pos, and barrier/bad flags — written as
+    ``_carry_meta.json`` inside the version dir (underscore-prefixed files
+    are invisible to the parquet reader). They let the NEXT batch plan its
+    split without probing the carry."""
     import shutil
 
     versions = _carry_versions(root)
@@ -208,9 +235,8 @@ def persist_tx_carry(
     nxt = (versions[-1][0] + 1) if versions else 1
     d = os.path.join(root, "_tx_carry", f"v{nxt}")
     carry.write.mode("overwrite").parquet(d)  # reads vN while writing vN+1
-    if meta is not None:
-        with open(os.path.join(d, "_carry_meta.json"), "w") as f:
-            _json.dump(meta, f)
+    with open(os.path.join(d, "_carry_meta.json"), "w") as f:
+        json.dump(meta, f)
     for _, p in versions:
         shutil.rmtree(p, ignore_errors=True)
     return spark.read.schema(carry.schema).parquet(d)
@@ -225,10 +251,8 @@ def load_tx_carry(spark: SparkSession, root: str) -> DataFrame | None:
 
 
 def load_tx_carry_meta(root: str) -> dict | None:
-    """The persisted carry's fused-probe facts (see ``persist_tx_carry``),
-    or None for a missing/legacy carry."""
-    import json as _json
-
+    """The persisted carry's meta (see ``persist_tx_carry``), or None when
+    there is no carry or it was written without one."""
     versions = _carry_versions(root)
     if not versions:
         return None
@@ -236,7 +260,70 @@ def load_tx_carry_meta(root: str) -> dict | None:
     if not os.path.exists(path):
         return None
     with open(path) as f:
-        return _json.load(f)
+        return json.load(f)
+
+
+class TxCarry:
+    """THE owner of one engine's open-tail-transaction carry: the rows and
+    meta held between batches, and ``<root>/_tx_carry/vN`` with its
+    ``_carry_meta.json`` on disk. Every entry path runs the same protocol
+    through it: ``plan`` (probe → ``plan_tail``), ``split`` (carry union →
+    tail split), the caller's commit, then ``settle`` (persist the carry
+    the step leaves)."""
+
+    def __init__(self, spark: SparkSession, root: str) -> None:
+        self.spark = spark
+        self.root = root
+        self.df: DataFrame | None = None
+        self.meta: dict | None = None
+        self._loaded = False
+
+    def load(self, tail: TailProbe) -> dict | None:
+        """The carry's meta, reloading a persisted carry on first use (a
+        restart). A carry on disk without ``_carry_meta.json`` is probed
+        once, one job, to rebuild it."""
+        if not self._loaded:
+            self._loaded = True
+            self.df = load_tx_carry(self.spark, self.root)
+            if self.df is not None:
+                self.meta = load_tx_carry_meta(self.root)
+                if self.meta is None:
+                    mm = fused_tail_probe(self.df, tail)
+                    self.meta = {"tx": mm["tt"], "p": mm["p"],
+                                 "nd": bool(mm["nd"]), "nb": bool(mm["nb"])}
+        return self.meta
+
+    def plan(
+        self, env: DataFrame | None, tail: TailProbe, final: bool
+    ) -> tuple[dict | None, TailPlan]:
+        """Probe the batch (ONE job; none for a flush, ``env=None``) and
+        plan it against the carry. Returns (probe row, plan)."""
+        mm = fused_tail_probe(env, tail) if env is not None else None
+        return mm, plan_tail(mm, self.load(tail), final)
+
+    def split(
+        self, env: DataFrame | None, plan: TailPlan, tail: TailProbe
+    ) -> tuple[DataFrame | None, DataFrame | None]:
+        """(commit now, defer): the carry joins the batch when the plan
+        says so, then the tail run splits off. No Spark job."""
+        if plan.with_carry:
+            env = self.df if env is None else self.df.unionByName(env)
+        if plan.defer_all:
+            return None, env
+        if plan.boundary is None:
+            return env, None
+        return split_open_tail_tx(env, tail, plan.boundary)
+
+    def settle(self, deferred: DataFrame | None, plan: TailPlan) -> None:
+        """Persist the carry the step leaves — AFTER its commits: the
+        committed plan lazily reads the previous carry version, and a crash
+        mid-step must resume from the carry as it was before the step. A
+        carry drained to nothing clears the disk version (a stale one would
+        re-merge old events over newer table state on restart)."""
+        if deferred is None and not plan.with_carry:
+            return
+        self.df = persist_tx_carry(self.spark, deferred, self.root, meta=plan.carry)
+        self.meta = plan.carry if deferred is not None else None
 
 
 class CdcEngine:
@@ -298,11 +385,8 @@ class CdcEngine:
         #: the per-version lineage with it. None (default) keeps every
         #: version for time travel; long-running streams should set it.
         self.expire_keep = expire_keep
-        #: open-tail-transaction rows deferred across replay calls
-        self._tx_carry: DataFrame | None = None
-        #: fused-probe facts about _tx_carry ({"tx","p","nd","nb"}) — lets
-        #: the replay loop split carry-prefixed batches with zero extra jobs
-        self._carry_meta: dict | None = None
+        #: the open tail transaction deferred across batches and calls
+        self._carry = TxCarry(spark, table.root)
         if not table.exists():
             table.create(REPO_PAYLOAD_SCHEMA)
 
@@ -962,7 +1046,7 @@ class CdcEngine:
         must not commit as two fenced commits (a crash between them would
         expose a half-applied transaction — the reference applies whole
         transactions, TransactionReplayTask.java). The batch's open tail
-        transaction (see ``split_open_tail_tx``) is deferred into the next
+        transaction (see ``plan_tail``) is deferred into the next
         batch; the split is a pure function of the batch content, so a
         crash-resume recomputes the identical segmentation and the
         fence-check keeps everything idempotent. After the last batch the
@@ -982,58 +1066,36 @@ class CdcEngine:
         re-carried duplicate rows collapse in the merge's last-wins
         dedupe)."""
         versions = []
-        # open-tail tx awaiting its END — reload from disk after a restart,
-        # together with its fused-probe meta (tx id, max pos, flags)
-        carry: DataFrame | None = self._tx_carry
-        cm: dict | None = self._carry_meta
-        if carry is None:
-            carry = load_tx_carry(self.spark, self.table.root)
-            cm = load_tx_carry_meta(self.table.root) if carry is not None else None
-        if not tx_aligned and carry is not None:
-            # a previously deferred transaction predates every batch here
-            # (ordered log) — flush it FIRST: applying the new batches would
-            # advance the fence past the carry's offsets and the end-of-loop
-            # flush would then fence-skip it into oblivion (review r4: the
-            # carried transaction's rows were permanently lost)
-            self._tx_carry, self._carry_meta = carry, cm
+        if not tx_aligned:
+            # a carry deferred by an earlier aligned run predates every
+            # batch here (ordered log) — commit it FIRST: applying the new
+            # batches would advance the fence past the carry's offsets and a
+            # later flush would fence-skip it into oblivion (review r4)
             v = self.flush_tx_carry()
             if v is not None:
                 versions.append(v)
-            carry, cm = None, None
         paths = list_batches(batch_dir)
-        for i, path in enumerate(paths):
-            is_final_batch = final and i == len(paths) - 1
+        for path in paths:
+            # the id names the batch FILE (a missing file must not shift
+            # the quarantine dirs of every later batch)
+            batch_id = os.path.basename(path).removesuffix(".parquet")
             env = read_batch(self.spark, path)
             # ONE narrow-column pass answers every per-batch probe: offset
             # fence, DDL presence, malformed-row presence, tail-transaction
             # id AND the tail-transaction boundary (per-batch serial driver
             # time is the scaling bottleneck, so everything rides this
-            # single job — fused_tail_probe, shared with MultiTableEngine).
+            # single job)
             man = self.table.manifest()
-            probe_x = self.table.exprs(man).probe
-            mm = fused_tail_probe(env, probe_x)
+            tail = self.table.exprs(man).probe
+            mm, plan = self._carry.plan(
+                env, tail, final=not tx_aligned or (final and path == paths[-1])
+            )
+            if not mm["ngrp"]:
+                continue  # an empty batch file
             cur = self.table.fence(man)
-            if mm["p"] is None or mm["f"] is None:
-                # no fully-positioned row in the whole batch (null pos, or
-                # null file under the file-major key — offset_key(None, p)
-                # sorts below every real fence, so the skip below would
-                # silently drop such rows; review r5) — but ngrp > 0 means
-                # the batch HAS rows (all-null-offset poison): they must
-                # reach quarantine, not silently vanish with the skip
-                # ('one bad row never wedges OR vanishes')
-                if mm["ngrp"]:
-                    t0 = _time.time()
-                    self.apply_envelope_batch(env, batch_id=f"batch_{i:05d}")
-                    if self.committer:
-                        self.committer.record_sink_batch(
-                            extracted=mm["n"], success=0,
-                            failed=self._quarantine_rows(
-                                f"batch_{i:05d}", since=t0),
-                        )
-                continue
             if (
-                carry is None
-                and cur is not None
+                self._carry.df is None
+                and None not in (mm["f"], mm["p"], cur)
                 and offset_key(mm["f"], mm["p"]) <= offset_key(*cur)
             ):
                 if self.committer:
@@ -1043,95 +1105,11 @@ class CdcEngine:
                         extracted=mm["n"], success=0, skipped=mm["n"]
                     )
                 continue
-            fence = (mm["f"], mm["p"])
-            has_ddl: bool | None = bool(mm["nd"])
-            # the fused probe sees pre-SMT rows; with SMTs installed a
-            # transform could corrupt a row, so fall back to the
-            # post-SMT probe in that case
-            has_bad: bool | None = bool(mm["nb"]) if not self.smt_chain else None
-            tail_tx = mm["tt"]
-            had_carry = carry is not None
-            tx_engaged = tx_aligned and (had_carry or tail_tx is not None)
-            if tx_engaged:
-                fused = not had_carry or cm is not None  # legacy carry: probe
-                if had_carry:
-                    env = carry.unionByName(env)
-                    # the union's flags = this batch's OR the carry's (the
-                    # carry meta recorded its own); True is a safe over-
-                    # approximation (costs one empty control-plane pass),
-                    # False is exact. A meta-less legacy carry → re-probe.
-                    if fused:
-                        has_ddl = bool(mm["nd"]) or bool(cm["nd"])
-                        has_bad = (
-                            (bool(mm["nb"]) or bool(cm["nb"]))
-                            if not self.smt_chain else None
-                        )
-                    else:
-                        has_ddl = None
-                        has_bad = None
-                if is_final_batch:
-                    # log complete: the last batch's tail transaction is
-                    # closed by end-of-log — commit it in THIS batch (no
-                    # separate flush commit; disk carry clears after the
-                    # apply below, which still lazily reads it)
-                    carry, cm = None, None
-                else:
-                    # zero-job split: the fused probe already knows the tail
-                    # tx and its run start; boundary cases live in ONE place
-                    # (derive_tx_boundary, shared with MultiTableEngine)
-                    probe = None
-                    if fused:
-                        probe = {
-                            "p": mm["p"], "tt": tail_tx,
-                            "boundary": derive_tx_boundary(mm, cm, had_carry),
-                        }
-                    closed, carry, boundary = split_open_tail_tx(
-                        env, probe_x, probe=probe
-                    )
-                    whole_open = closed is None
-                    if carry is not None and fused:
-                        # meta for the NEW carry: the deferred run is the
-                        # batch's tail group (+ the old carry when the same
-                        # tx straddles); whole-union deferral folds the
-                        # global flags in
-                        nd_c = bool(mm["nd"] if whole_open else mm["tail_nd"])
-                        nb_c = bool(mm["nb"] if whole_open else mm["tail_nb"])
-                        if had_carry and (whole_open or cm["tx"] == tail_tx):
-                            nd_c = nd_c or bool(cm["nd"])
-                            nb_c = nb_c or bool(cm["nb"])
-                        cm = {"tx": tail_tx, "p": mm["p"], "nd": nd_c, "nb": nb_c}
-                    elif carry is not None:
-                        cm = None  # legacy carry stays legacy until flushed
-                    else:
-                        cm = None
-                    if whole_open:
-                        # whole batch = one still-open transaction; nothing
-                        # commits, so materialize the carry immediately
-                        carry = persist_tx_carry(
-                            self.spark, carry, self.table.root, meta=cm
-                        )
-                        if self.committer:
-                            # extracted but deferred whole: parked rows
-                            # surface as the reference's `rest` (in-pipe)
-                            self.committer.record_sink_batch(
-                                extracted=mm["n"], success=0,
-                                deferred=mm["n"],
-                            )
-                        continue
-                    env = closed
-                    if carry is not None:
-                        fence = (mm["f"], boundary)
             v_before = (
                 self.table.manifest()["version"] if self.committer else 0
             )
             t0 = _time.time()
-            v = self.apply_envelope_batch(
-                env,
-                batch_id=f"batch_{i:05d}",
-                fence=fence,
-                has_ddl=has_ddl,
-                has_bad=has_bad,
-            )
+            v = self._apply_step(env, plan, batch_id, tail)
             if self.committer:
                 # extracted = THIS file's rows; a deferred tail parks
                 # (exact count from the fused probe's tail group) and
@@ -1139,34 +1117,23 @@ class CdcEngine:
                 self.committer.record_sink_batch(
                     extracted=mm["n"],
                     success=self._lineage_events_since(v_before),
-                    failed=self._quarantine_rows(f"batch_{i:05d}", since=t0),
+                    failed=self._quarantine_rows(batch_id, since=t0),
                     deferred=(
-                        mm["tail_n"]
-                        if tx_engaged and carry is not None
-                        else 0
+                        mm["n"] if plan.defer_all
+                        else mm["tail_n"] if plan.boundary is not None else 0
                     ),
                     # a closed batch prepends the WHOLE persisted carry, so
                     # the parked pool drains here — explicit, not inferred
                     # from the residual (final review r5: the inference
                     # confounded carry-drain with last-wins collapse)
-                    drained_carry=tx_engaged and had_carry,
+                    drained_carry=plan.with_carry and not plan.defer_all,
                 )
-            if tx_engaged:
-                # materialize AFTER the closed part committed: the closed
-                # plan lazily reads the previous carry version, and a crash
-                # mid-batch must resume from the PRE-batch carry (lineage
-                # truncation + crash recovery; see persist_tx_carry). A
-                # carry that went back to None must CLEAR the disk version
-                # — a stale persisted carry would re-merge old events over
-                # newer table state on restart.
-                carry = persist_tx_carry(self.spark, carry, self.table.root, meta=cm)
             if v is not None:
                 versions.append(v)
-        self._tx_carry = carry
-        self._carry_meta = cm if carry is not None else None
-        if final and carry is not None:
-            # only reachable when the directory was empty or every batch
-            # was skipped — flush whatever was carried in from before
+        if final and self._carry.df is not None:
+            # only reachable when the directory was empty, every batch was
+            # skipped or the last one had no offsets — flush whatever was
+            # carried in from before
             v = self.flush_tx_carry()
             if v is not None:
                 versions.append(v)
@@ -1177,6 +1144,27 @@ class CdcEngine:
             # first batch forever (review r5 finding)
             self.committer.commit(force=True)
         return versions
+
+    def _apply_step(
+        self, env: DataFrame | None, plan: TailPlan, batch_id: str, tail: TailProbe
+    ) -> int | None:
+        """Commit one planned step: the carry joins the batch, the part
+        that closes applies under the plan's fence and flags, then the
+        carry the step leaves is persisted (``TxCarry.settle``)."""
+        closed, deferred = self._carry.split(env, plan, tail)
+        v = None
+        if closed is not None:
+            v = self.apply_envelope_batch(
+                closed,
+                batch_id=batch_id,
+                fence=plan.fence,
+                has_ddl=plan.nd,
+                # the fused probe sees pre-SMT rows; with SMTs installed a
+                # transform could corrupt a row, so the apply re-probes
+                has_bad=None if self.smt_chain else plan.nb,
+            )
+        self._carry.settle(deferred, plan)
+        return v
 
     def _report_apply(self, v_before: int, batch_id: str,
                       flush: bool = False, since: float | None = None) -> None:
@@ -1206,79 +1194,31 @@ class CdcEngine:
         transaction alignment as ``replay``: the epoch's open tail
         transaction defers (persisted carry — a checkpoint will not
         redeliver this epoch) and rejoins when its END arrives. Call
-        ``flush_tx_carry`` at end of stream."""
+        ``flush_tx_carry`` at end of stream. ``tx_aligned=False`` commits a
+        carry left by earlier aligned epochs first, then the whole epoch."""
+        if not tx_aligned:
+            self.flush_tx_carry()
         v_before = self.table.manifest()["version"] if self.committer else 0
         t0 = _time.time()
-        if not tx_aligned:
-            v = self.apply_envelope_batch(env, batch_id=batch_id)
+        tail = self.table.exprs().probe
+        _, plan = self._carry.plan(env, tail, final=not tx_aligned)
+        v = self._apply_step(env, plan, batch_id, tail)
+        if not plan.defer_all:
             self._report_apply(v_before, batch_id, since=t0)
-            return v
-        carry = self._tx_carry
-        if carry is None:
-            carry = load_tx_carry(self.spark, self.table.root)
-        had_carry = carry is not None
-        if had_carry:
-            env = carry.unionByName(env)
-        # ONE fused probe per epoch (same job the replay loop runs): fence
-        # offsets, tail-transaction id + run start, barrier/malformed flags.
-        # Previously the stream path paid 4 separate narrow jobs per epoch —
-        # the split's two aggregations plus apply_envelope_batch's fence and
-        # has_bad/has_ddl probes; at 4M-event epochs each is a full-batch
-        # column scan. The carry (if any) is already unioned in, so the
-        # no-carry boundary derivation applies.
-        probe_x = self.table.exprs().probe
-        mm = fused_tail_probe(env, probe_x)
-        self._carry_meta = None  # stream-path carries have no fused meta
-        boundary = derive_tx_boundary(mm, None, False)
-        closed, carry, boundary = split_open_tail_tx(
-            env, probe_x, probe={"p": mm["p"], "tt": mm["tt"], "boundary": boundary}
-        )
-        engaged = had_carry or carry is not None
-        if closed is None:
-            self._tx_carry = persist_tx_carry(self.spark, carry, self.table.root)
-            return None
-        kwargs = {}
-        if mm["p"] is not None and mm["f"] is not None:
-            # the closed part's fence: the tail-run boundary when a tail
-            # defers, else the epoch max — in the epoch's max file, exactly
-            # as the replay loop fences a deferred tail
-            kwargs["fence"] = (
-                mm["f"], boundary if carry is not None else mm["p"]
-            )
-        v = self.apply_envelope_batch(
-            closed,
-            batch_id=batch_id,
-            has_ddl=bool(mm["nd"]),
-            # pre-SMT probe: with SMTs installed a transform could corrupt
-            # a row after the probe — fall back to the post-SMT probe then
-            has_bad=(bool(mm["nb"]) if not self.smt_chain else None),
-            **kwargs,
-        )
-        self._report_apply(v_before, batch_id, since=t0)
-        if engaged:
-            carry = persist_tx_carry(self.spark, carry, self.table.root)
-        self._tx_carry = carry
         return v
 
     def flush_tx_carry(self, batch_id: str = "batch_txflush") -> int | None:
         """Apply the deferred open-tail transaction — call when the log is
         known complete (a binlog only ever contains committed transactions,
         so end-of-log closes it). No-op if nothing is carried."""
-        carry, self._tx_carry = self._tx_carry, None
-        self._carry_meta = None
-        if carry is None:
-            carry = load_tx_carry(self.spark, self.table.root)
-        if carry is None:
-            return None
-        mm = carry.select(*self.table.exprs().fence_probe[:2]).first()
-        if mm["p"] is None:
-            persist_tx_carry(self.spark, None, self.table.root)
+        tail = self.table.exprs().probe
+        _, plan = self._carry.plan(None, tail, final=True)
+        if not plan.with_carry:
             return None
         v_before = self.table.manifest()["version"] if self.committer else 0
         t0 = _time.time()
-        v = self.apply_envelope_batch(carry, batch_id=batch_id, fence=(mm["f"], mm["p"]))
+        v = self._apply_step(None, plan, batch_id, tail)
         self._report_apply(v_before, batch_id, flush=True, since=t0)
         if self.committer:
             self.committer.commit(force=True)  # end-of-stream terminal line
-        persist_tx_carry(self.spark, None, self.table.root)
         return v

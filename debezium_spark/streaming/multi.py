@@ -40,7 +40,7 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 from debezium_spark.plans.exprs import TailProbe
 from debezium_spark.plans.table import LakeTable
 from debezium_spark.schema import BARRIER_OPS, SOURCE_SCHEMA, TRANSACTION_SCHEMA, offset_key
-from debezium_spark.streaming.engine import CdcEngine
+from debezium_spark.streaming.engine import CdcEngine, TxCarry
 
 #: wire-format envelope: payloads as JSON strings (per-table schemas are
 #: applied at parse time, one from_json per registered table)
@@ -177,9 +177,9 @@ class MultiTableEngine:
         data stays on disk (capture stops; nothing is deleted).
 
         ``tx_aligned``: defer the batch's open tail transaction to the next
-        batch (see ``engine.split_open_tail_tx``) so no per-table commit
-        ever contains a partial transaction; call ``flush_tx_carry()`` at
-        end of stream.
+        batch (see ``engine.plan_tail``) so no per-table commit ever
+        contains a partial transaction; call ``flush_tx_carry()`` at end of
+        stream. False commits a carry left by an aligned run first.
 
         ``committer``: optional ``streaming.progress.ProcessCommitter``
         (role='sink') — ONE progress reporter for the whole multi-table
@@ -197,13 +197,9 @@ class MultiTableEngine:
         self.default_mode = default_mode
         self.tx_aligned = tx_aligned
         self.committer = committer
-        self._tx_carry: DataFrame | None = None
-        #: fused-probe facts about _tx_carry (tx id + max pos) — lets the
-        #: dispatcher split carry-prefixed batches with one probe job
-        self._carry_meta: dict | None = None
-        #: the tail probe's expressions, and (spec set, _RoutingExprs) —
-        #: built on first use (see ``_routing``)
-        self._tail_probe: TailProbe | None = None
+        #: the open tail transaction deferred across wire batches
+        self._carry = TxCarry(spark, self.root)
+        #: (spec set, _RoutingExprs), built on first use (see ``_routing``)
         self._routing_slot: tuple | None = None
         self.salt_factor = salt_factor
         self.compact_depth = compact_depth
@@ -646,71 +642,47 @@ class MultiTableEngine:
         parse, probe, group, aggs = self._routing().prepass
         return wire.select(*parse).select(*probe).groupBy(*group).agg(*aggs)
 
+    @cached_property
+    def _tail_probe(self) -> TailProbe:
+        """The fused tail probe over wire rows. Its flags are measured on
+        the wire: barrier presence, and rows failing the table-independent
+        validity checks (unknown op, null offset, null payload); the
+        pre-pass re-derives each table's flags on the dispatched part."""
+        from debezium_spark.operators.quarantine import validity_reason
+
+        op = F.col("op")
+        bad = validity_reason(
+            op, F.col("source.pos"), F.col("after_json"), F.col("before_json"),
+            F.lit(False), file=F.col("source.file"),
+        )
+        return TailProbe(
+            {"nd": op.isin(BARRIER_OPS), "nb": bad.isNotNull()}, with_file=True
+        )
+
     def apply_wire_batch(self, wire: DataFrame, batch_id: str) -> dict[str, int | None]:
         """Fan one mixed wire batch out to the per-table engines.
 
-        One narrow pre-pass (source columns only — parquet-prunable) yields
-        each table's max offset, the global max, and barrier presence;
-        then each registered table parses + merges only its rows. Tables
-        with no rows in the batch get an offset-bearing heartbeat at the
-        global max so idle fences advance (Heartbeat.java:27-79).
-        Unregistered tables are dropped (include-list semantics)."""
-        tx_engaged = False
-        if self.tx_aligned:
-            from debezium_spark.streaming.engine import (
-                derive_tx_boundary,
-                fused_tail_probe,
-                load_tx_carry,
-                load_tx_carry_meta,
-                persist_tx_carry,
-                split_open_tail_tx,
-            )
+        With ``tx_aligned`` the batch's open tail transaction defers to the
+        carry first (the engine's shared protocol: ``TxCarry`` +
+        ``plan_tail``); without it a carry left by an aligned run commits
+        first, then the whole batch. See ``_dispatch`` for the fan-out."""
+        if not self.tx_aligned:
+            self.flush_tx_carry()
+            return self._dispatch(wire, batch_id)
+        _, plan = self._carry.plan(wire, self._tail_probe, final=False)
+        closed, deferred = self._carry.split(wire, plan, self._tail_probe)
+        out = self._dispatch(closed, batch_id) if closed is not None else {}
+        # persisted AFTER the per-table commits (TxCarry.settle)
+        self._carry.settle(deferred, plan)
+        return out
 
-            if self._tx_carry is None:
-                # restart recovery: a streaming checkpoint will not
-                # redeliver the epoch whose tail we deferred
-                self._tx_carry = load_tx_carry(self.spark, self.root)
-                self._carry_meta = (
-                    load_tx_carry_meta(self.root) if self._tx_carry is not None else None
-                )
-            had_carry = self._tx_carry is not None
-            # ONE probe job on the incoming batch (carry facts ride its
-            # persisted meta), instead of two aggregations over the union
-            if self._tail_probe is None:
-                self._tail_probe = TailProbe()
-            bp = fused_tail_probe(wire, self._tail_probe)
-            if had_carry:
-                wire = self._tx_carry.unionByName(wire)
-            cm = self._carry_meta
-            probe = None
-            if (not had_carry or cm is not None) and bp["p"] is not None:
-                probe = {
-                    "p": bp["p"], "tt": bp["tt"],
-                    "boundary": derive_tx_boundary(bp, cm, had_carry),
-                }
-            elif not had_carry:
-                probe = {"p": bp["p"], "tt": bp["tt"], "boundary": None}
-            closed, carry, _ = split_open_tail_tx(wire, self._tail_probe, probe=probe)
-            if (carry is not None and bp["p"] is not None
-                    and (not had_carry or cm is not None)):
-                # nd/nb are conservative placeholders: the multi pre-pass
-                # re-derives per-table flags from the dispatched part, so
-                # only tx/p are consumed here
-                self._carry_meta = {"tx": bp["tt"], "p": bp["p"],
-                                    "nd": True, "nb": True}
-            else:
-                # empty batch or legacy (meta-less) carry: keep what we had
-                self._carry_meta = None if carry is None else cm
-            tx_engaged = had_carry or carry is not None
-            if closed is None:
-                # whole batch = one still-open transaction: nothing
-                # dispatches, materialize the carry now
-                self._tx_carry = persist_tx_carry(
-                    self.spark, carry, self.root, meta=self._carry_meta
-                )
-                return {}
-            self._tx_carry = carry  # materialized AFTER dispatch below
-            wire = closed
+    def _dispatch(self, wire: DataFrame, batch_id: str) -> dict[str, int | None]:
+        """One narrow pre-pass (source columns only — parquet-prunable)
+        yields each table's max offset, the global max, and barrier
+        presence; then each registered table parses + merges only its rows.
+        Tables with no rows in the batch get an offset-bearing heartbeat at
+        the global max so idle fences advance (Heartbeat.java:27-79).
+        Unregistered tables are dropped (include-list semantics)."""
         wire = wire.persist()
         try:
             stats = self._prepass_stats(wire).collect()
@@ -962,16 +934,6 @@ class MultiTableEngine:
             for key in pending_drops:
                 self._catalog_append({"op": "drop", "db": key[0], "table": key[1]})
                 self._retire(key)
-            if tx_engaged:
-                # materialize AFTER the per-table commits (the dispatched
-                # plans lazily read the previous carry version; a crash
-                # mid-epoch must resume from the PRE-epoch carry); a
-                # carry gone back to None clears the disk version
-                from debezium_spark.streaming.engine import persist_tx_carry
-
-                self._tx_carry = persist_tx_carry(
-                    self.spark, self._tx_carry, self.root, meta=self._carry_meta
-                )
             if (
                 self.catalog_compact_threshold
                 and self._catalog_lines > self.catalog_compact_threshold
@@ -993,23 +955,14 @@ class MultiTableEngine:
     def flush_tx_carry(self, batch_id: str = "txflush") -> dict[str, int | None]:
         """Apply the deferred open-tail transaction (end of stream closes
         it). No-op if nothing is carried."""
-        from debezium_spark.streaming.engine import load_tx_carry, persist_tx_carry
-
-        c, self._tx_carry = self._tx_carry, None
-        self._carry_meta = None
-        if c is None:
-            c = load_tx_carry(self.spark, self.root)
-        if c is None:
+        _, plan = self._carry.plan(None, self._tail_probe, final=True)
+        if not plan.with_carry:
             return {}
-        old = self.tx_aligned
-        self.tx_aligned = False
-        try:
-            out = self.apply_wire_batch(c, batch_id)
-        finally:
-            self.tx_aligned = old
+        closed, _ = self._carry.split(None, plan, self._tail_probe)
+        out = self._dispatch(closed, batch_id)
         if self.committer:
             self.committer.commit(force=True)  # end-of-stream terminal line
-        persist_tx_carry(self.spark, None, self.root)
+        self._carry.settle(None, plan)
         return out
 
     def read_all(self) -> dict[str, DataFrame]:

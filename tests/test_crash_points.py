@@ -88,12 +88,21 @@ def test_crash_at_every_publish_point_converges(spark, tmp_path, monkeypatch):
         assert engine2.replay(batch_dir) == []
 
 
-def test_crash_during_tx_carry_persistence_converges(spark, tmp_path, monkeypatch):
+@pytest.mark.parametrize("path", ["replay", "stream", "multi"])
+def test_crash_during_tx_carry_persistence_converges(spark, tmp_path, monkeypatch, path):
     """The carry write is NOT a manifest publish — crash between the
     closed-part commit and the carry materialization, then resume: the
     re-read batch regenerates the identical carry (deterministic split)
-    and the fence dedupes the re-applied closed part."""
+    and the fence dedupes the re-applied closed part. Swept over every
+    path the tail-transaction planner serves: ``replay`` re-reads its batch
+    files; a stream epoch (``apply_stream_batch``) and a multi-table wire
+    batch (``apply_wire_batch``) are redelivered after the restart, as a
+    checkpoint that never committed the epoch would."""
     import pyspark.sql.functions as F
+
+    from debezium_spark import MultiTableEngine
+    from debezium_spark.schema import REPO_PAYLOAD_SCHEMA
+    from debezium_spark.streaming.multi import TableSpec, envelope_to_wire
 
     gen = ChangeLogGenerator(spark, seed=31, n_repos=8)
     env = gen.events(600)
@@ -110,15 +119,39 @@ def test_crash_during_tx_carry_persistence_converges(spark, tmp_path, monkeypatc
     # split mid-tx: batch 0 ends inside tx-5 (pos 275), so its tail defers
     env.where(F.col("source.pos") <= 275).write.parquet(str(bdir / "batch_00000.parquet"))
     env.where(F.col("source.pos") > 275).write.parquet(str(bdir / "batch_00001.parquet"))
+    epochs = [spark.read.parquet(str(bdir / f"batch_{i:05d}.parquet")) for i in (0, 1)]
 
-    clean = LakeTable(spark, str(tmp_path / "clean"), ["repo", "path"], n_buckets=4)
-    CdcEngine(spark, clean).replay(str(bdir))
+    def start(root):
+        """(engine, its table, one run over the input → commit results)."""
+        if path == "multi":
+            spec = TableSpec("inventory", "repo_files", REPO_PAYLOAD_SCHEMA,
+                             ["repo", "path"], n_buckets=4)
+            mte = MultiTableEngine(spark, root, [spec], max_parallel_tables=1)
+
+            def run():
+                out = [mte.apply_wire_batch(envelope_to_wire(e), f"e{i}")
+                       for i, e in enumerate(epochs)]
+                return [v for d in out + [mte.flush_tx_carry()] for v in d.values()]
+            return mte, mte.table("inventory", "repo_files"), run
+        table = LakeTable(spark, root, ["repo", "path"], n_buckets=4)
+        engine = CdcEngine(spark, table)
+        if path == "replay":
+            return engine, table, lambda: engine.replay(str(bdir))
+
+        def run():
+            out = [engine.apply_stream_batch(e, f"epoch_{i:05d}")
+                   for i, e in enumerate(epochs)]
+            return out + [engine.flush_tx_carry()]
+        return engine, table, run
+
+    _, clean, run = start(str(tmp_path / "clean"))
+    run()
     want = _sha_state(clean)
 
     from debezium_spark.streaming import engine as eng_mod
 
-    table = LakeTable(spark, str(tmp_path / "t"), ["repo", "path"], n_buckets=4)
-    engine = CdcEngine(spark, table)
+    root = str(tmp_path / "t")
+    _, table, run = start(root)
     real = eng_mod.persist_tx_carry
     calls = {"n": 0}
 
@@ -131,11 +164,14 @@ def test_crash_during_tx_carry_persistence_converges(spark, tmp_path, monkeypatc
     monkeypatch.setattr(eng_mod, "persist_tx_carry", wedge)
     try:
         with pytest.raises(_Boom):
-            engine.replay(str(bdir))
+            run()
     finally:
         monkeypatch.setattr(eng_mod, "persist_tx_carry", real)
+    assert calls["n"] == 1
 
-    engine2 = CdcEngine(spark, table)  # restart
-    engine2.replay(str(bdir))
+    _, table, run = start(root)  # restart; the input is redelivered
+    run()
     assert _sha_state(table) == want
-    assert engine2.replay(str(bdir)) == []
+    # a second run commits nothing (exactly-once held through the crash)
+    assert [v for v in run() if v is not None] == []
+    assert _sha_state(table) == want

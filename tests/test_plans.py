@@ -338,11 +338,18 @@ def test_resolution_tie_deterministic_with_map_payload(spark, tmp_path):
     assert {r["m"]["x"] for r in t.read().collect()} == {winner}
 
 
-def test_events_max_pos_footer_equals_aggregation(spark):
+def test_events_max_pos_footer_equals_aggregation(spark, tmp_path, caplog):
     """The footer-statistics max(pos) (round-6: replaces a full-scan
     aggregation job in eight engine-drive queries) must equal the
     aggregation it replaced at every SF — batch boundaries derive from it,
-    so a drift here would silently change what the queries compute."""
+    so a drift here would silently change what the queries compute. A file
+    written without statistics falls back to the aggregation, and says so
+    in one logged warning."""
+    import logging
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     for sf in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
         agg = (
             spark.read.parquet(f"{sf}/events.parquet")
@@ -350,3 +357,10 @@ def test_events_max_pos_footer_equals_aggregation(spark):
             .first()[0]
         )
         assert entry._events_max_pos(spark, sf) == agg
+
+    pq.write_table(pa.table({"event_id": pa.array([3, 9, 5], pa.int64())}),
+                   str(tmp_path / "events.parquet"), write_statistics=False)
+    with caplog.at_level(logging.WARNING, logger=entry.__name__):
+        assert entry._events_max_pos(spark, str(tmp_path)) == 9
+    warnings = [r for r in caplog.records if r.levelno == logging.WARNING]
+    assert len(warnings) == 1, warnings

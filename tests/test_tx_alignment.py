@@ -275,6 +275,25 @@ def test_replay_probe_is_one_job_per_batch(spark, tmp_path):
     engine.flush_tx_carry()
     assert {r["path"]: r["content"] for r in table.read().collect()}["d"] == "v1"
 
+    # the stream path runs the same protocol: a carry-prefixed epoch is one
+    # probe too (the carry's meta comes from the epoch that deferred it)
+    engine.apply_stream_batch(
+        _env(spark, [(9, "c", "e", "v1", "tx5"), (10, "c", "f", "v1", "tx6")]),
+        batch_id="epoch_00000",
+    )
+    cls.first = counting_first
+    try:
+        calls["first"] = 0
+        engine.apply_stream_batch(
+            _env(spark, [(11, "u", "f", "v2", "tx6"), (12, "c", "g", "v1", "tx7")]),
+            batch_id="epoch_00001",
+        )
+    finally:
+        cls.first = orig_first
+    assert calls["first"] == 1, f"carry-prefixed epoch: {calls['first']} probes"
+    state = {r["path"]: r["content"] for r in table.read().collect()}
+    assert state["f"] == "v2" and "g" not in state
+
 
 def test_carry_meta_survives_restart(spark, tmp_path):
     """The persisted carry's meta reloads on restart, so a restarted engine
@@ -302,6 +321,77 @@ def test_carry_meta_survives_restart(spark, tmp_path):
     meta = load_tx_carry_meta(str(tmp_path / "t"))
     assert meta["tx"] == "tx3" and meta["p"] == 4
 
+    # a carry written by the STREAM path has the same meta, and a replay on
+    # the same root resumes from it with one probe per batch (no re-probe of
+    # the carry to find its split)
+    root = str(tmp_path / "s")
+    CdcEngine(spark, LakeTable(spark, root, ["repo", "path"], n_buckets=2)) \
+        .apply_stream_batch(_env(spark, [(1, "c", "a", "v1", "tx1"),
+                                         (2, "c", "b", "v1", "tx2")]), "epoch_00000")
+    assert load_tx_carry_meta(root) == {"tx": "tx2", "p": 2, "nd": False, "nb": False}
+    sdir = str(tmp_path / "sb")
+    os.makedirs(sdir)
+    _write_batch(spark, sdir, 1, [
+        (3, "u", "b", "v2", "tx2"), (4, "c", "c", "v1", "tx3"),
+    ])
+    t3 = LakeTable(spark, root, ["repo", "path"])
+    calls = {"first": 0}
+    cls = type(spark.range(1))
+    orig_first = cls.first
+
+    def counting_first(self):
+        calls["first"] += 1
+        return orig_first(self)
+
+    cls.first = counting_first
+    try:
+        CdcEngine(spark, t3).replay(sdir, final=False)
+    finally:
+        cls.first = orig_first
+    assert calls["first"] == 1, calls
+    assert {r["path"]: r["content"] for r in t3.read().collect()} == {"a": "v1", "b": "v2"}
+    assert load_tx_carry_meta(root) == {"tx": "tx3", "p": 4, "nd": False, "nb": False}
+
+
+def test_carry_without_meta_file_converges(spark, tmp_path):
+    """A carry on disk whose ``_carry_meta.json`` is gone is probed once on
+    load to rebuild its meta, and the replay converges to the same state
+    as a run that kept it."""
+    from debezium_spark.streaming.engine import load_tx_carry_meta
+
+    bdir = str(tmp_path / "b")
+    os.makedirs(bdir)
+    _write_batch(spark, bdir, 0, [
+        (1, "c", "a", "v1", "tx1"), (2, "c", "b", "v1", "tx2"),
+        (3, "c", "c", "v1", "tx2"),
+    ])
+
+    def run(name, drop_meta):
+        t = LakeTable(spark, str(tmp_path / name), ["repo", "path"], n_buckets=2)
+        CdcEngine(spark, t).replay(bdir, final=False)
+        if drop_meta:
+            carry = os.path.join(t.root, "_tx_carry")
+            (ver,) = os.listdir(carry)
+            os.remove(os.path.join(carry, ver, "_carry_meta.json"))
+            assert load_tx_carry_meta(t.root) is None
+        return t
+
+    kept, lost = run("kept", False), run("lost", True)
+    _write_batch(spark, bdir, 1, [
+        (4, "u", "b", "v2", "tx2"), (5, "c", "d", "v1", "tx3"),
+        (6, "u", "a", "v2", "tx3"),
+    ])
+    for t in (kept, lost):
+        CdcEngine(spark, LakeTable(spark, t.root, ["repo", "path"])).replay(bdir, final=False)
+    assert load_tx_carry_meta(lost.root) == load_tx_carry_meta(kept.root) == {
+        "tx": "tx3", "p": 6, "nd": False, "nb": False}
+    for t in (kept, lost):
+        CdcEngine(spark, LakeTable(spark, t.root, ["repo", "path"])).flush_tx_carry()
+    want = {r["path"]: r["content"] for r in kept.read().collect()}
+    assert want == {"a": "v2", "b": "v2", "c": "v1", "d": "v1"}
+    assert {r["path"]: r["content"] for r in lost.read().collect()} == want
+    assert lost.fence() == kept.fence() == ("binlog.000001", 6)
+
 
 def test_unaligned_replay_flushes_preexisting_carry_first(spark, tmp_path):
     """Review r4 deep-pass: replay(tx_aligned=False) over a table with a
@@ -325,6 +415,83 @@ def test_unaligned_replay_flushes_preexisting_carry_first(spark, tmp_path):
     e2.replay(bdir2, tx_aligned=False)
     state = {r["path"]: r["content"] for r in table.read().collect()}
     assert state == {"a": "v1", "b": "v1", "c": "v1"}, state
+
+
+def test_unaligned_stream_batch_commits_preexisting_carry_first(spark, tmp_path):
+    """``apply_stream_batch(..., tx_aligned=False)`` on a root holding a
+    carry deferred by an aligned epoch commits the carry before the epoch
+    — applying the epoch first advanced the fence past the carry, and the
+    later flush fence-skipped the carried transaction away."""
+    from debezium_spark.streaming.engine import load_tx_carry_meta
+
+    root = str(tmp_path / "t")
+    e1 = CdcEngine(spark, LakeTable(spark, root, ["repo", "path"], n_buckets=2))
+    e1.apply_stream_batch(
+        _env(spark, [(1, "c", "a", "v1", "tx1"), (2, "c", "b", "v1", "tx2")]), "epoch_00000"
+    )
+    assert load_tx_carry_meta(root) == {"tx": "tx2", "p": 2, "nd": False, "nb": False}
+
+    table = LakeTable(spark, root, ["repo", "path"])
+    e2 = CdcEngine(spark, table)  # restart, alignment off
+    e2.apply_stream_batch(_env(spark, [(3, "c", "c", "v1", None)]), "epoch_00001",
+                          tx_aligned=False)
+    e2.flush_tx_carry()
+    assert sorted(r["path"] for r in table.read().collect()) == ["a", "b", "c"]
+    assert table.fence() == ("binlog.000001", 3)
+
+
+def test_unaligned_multi_restart_commits_preexisting_carry_first(spark, tmp_path):
+    """A ``MultiTableEngine(tx_aligned=False)`` restarted on a root holding
+    a carry commits the carried transaction before the new batch. The carry
+    meta holds the flags the probe measured, not placeholders."""
+    from pyspark.sql.types import StructType
+    from debezium_spark.streaming.engine import load_tx_carry_meta
+    from debezium_spark.streaming.multi import (
+        MultiTableEngine, TableSpec, WIRE_SCHEMA,
+    )
+
+    def row(pos, k, tx):
+        return {
+            "before_json": None, "after_json": f'{{"k": {k}, "v": "x"}}',
+            "op": "c", "ts_ms": 0,
+            "source": {"file": "f", "pos": pos, "gtid": None, "snapshot": None,
+                       "db": "app", "table": "t", "ts_ms": 0},
+            "transaction": None if tx is None else
+                {"id": tx, "total_order": 0, "data_collection_order": 0},
+        }
+
+    def spec():
+        return [TableSpec("app", "t", StructType.fromDDL("k long, v string"), ["k"],
+                          n_buckets=2)]
+
+    lake = str(tmp_path / "lake")
+    m1 = MultiTableEngine(spark, lake, spec())
+    m1.apply_wire_batch(
+        spark.createDataFrame([row(1, 1, "tx1"), row(2, 2, "tx2")], WIRE_SCHEMA), "b0"
+    )
+    assert load_tx_carry_meta(lake) == {"tx": "tx2", "p": 2, "nd": False, "nb": False}
+
+    m2 = MultiTableEngine(spark, lake, spec(), tx_aligned=False)  # restart
+    m2.apply_wire_batch(spark.createDataFrame([row(3, 3, None)], WIRE_SCHEMA), "b1")
+    m2.flush_tx_carry()
+    assert sorted(r["k"] for r in m2.table("app", "t").read().collect()) == [1, 2, 3]
+    assert m2.table("app", "t").fence() == ("f", 3)
+
+
+def test_replay_batch_ids_follow_file_names(spark, tmp_path):
+    """Replay names each batch after its FILE: with ``batch_00001`` absent,
+    a malformed row in ``batch_00002`` quarantines under ``batch_00002``
+    (an id from the loop index would have said ``batch_00001``)."""
+    bdir = str(tmp_path / "b")
+    os.makedirs(bdir)
+    _write_batch(spark, bdir, 0, [(1, "c", "a", "v1", None)])
+    _write_batch(spark, bdir, 2, [(2, "c", "b", "v1", None), (3, "zz", "c", "v1", None)])
+    table = LakeTable(spark, str(tmp_path / "t"), ["repo", "path"], n_buckets=2)
+    engine = CdcEngine(spark, table)
+    engine.replay(bdir)
+    q = engine.read_quarantine().collect()
+    assert [(r["batch_id"], r["reason"]) for r in q] == [("batch_00002", "unknown_op")]
+    assert sorted(r["path"] for r in table.read().collect()) == ["a", "b"]
 
 
 def test_all_null_pos_batch_quarantines_in_replay(spark, tmp_path):
