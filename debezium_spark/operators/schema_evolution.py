@@ -21,9 +21,17 @@ carries either:
 
 Applying a DDL is a **batch barrier**: events before it merge with the old
 schema, events after with the new — enforced by the engine's segmentation
-(SURVEY §3.3). Applied DDLs append to a ``schema_history`` ledger and every
-application is idempotent (re-add/re-drop/re-rename/re-widen no-op), so
-crash/replay across a DDL is safe.
+(SURVEY §3.3). One applier serves the per-table schema-history ledger
+(``_schema_history.jsonl``): ``apply_schema_op`` applies one recorded
+column op; live ``apply_ddl`` only decides what each parsed op becomes
+(default resolution, degrade rules), applies it and appends the entry;
+restart recovery (``replay_schema_history``) replays the recorded ops
+through the same applier. Every alter is idempotent (re-add/re-drop/
+re-rename/re-widen no-op), so crash/replay across a DDL is safe.
+
+The JSONL ledger helpers at the end of this module (``ledger_read``,
+``ledger_append``, ``ledger_fold``) are the file format of both control
+ledgers: this one and ``MultiTableEngine``'s ``_catalog.jsonl``.
 """
 
 from __future__ import annotations
@@ -737,6 +745,50 @@ def resolve_default_marker(default: str | None, ts_ms: int | None) -> str | None
     )
 
 
+def apply_schema_op(table: LakeTable, op) -> bool:
+    """THE schema-op applier: live ``apply_ddl`` and restart recovery
+    (``replay_schema_history``) apply every column op through it. Each
+    alter is idempotent, so replaying an applied op is a no-op.
+
+    Returns False for an op that stays history-only: a ``set_default``
+    still holding ``CURRENT_TS_MARKER`` (no barrier ``ts_ms`` resolved it)
+    must never reach field metadata — as CURRENT_DEFAULT it would re-emit
+    the NUL sentinel through the schema-changes signal (review r5).
+    ValueErrors from the alters' guards propagate; each caller decides
+    what a raise means. ``drop_pk`` (paired with a following ``set_pk``,
+    MySQL drop-then-re-add; alone the capture key stays in force) and the
+    table-level ops are history-only here."""
+    kind = op[0]
+    if kind == "add":
+        # 3-element ops come from pre-default ledgers; the 4th element is
+        # the DEFAULT literal (Iceberg initial-default: pre-ADD files
+        # surface it instead of null)
+        table.alter_add_columns([tuple(op[1:4])])
+    elif kind == "drop":
+        table.alter_drop_columns([op[1]])
+    elif kind == "rename":
+        table.alter_rename_column(op[1], op[2])
+    elif kind == "widen":
+        table.alter_widen_column(op[1], op[2])
+    elif kind == "reorder":
+        table.alter_reorder_column(op[1], op[2])
+    elif kind == "set_default":
+        if op[2] == CURRENT_TS_MARKER:
+            return False
+        table.alter_set_default(op[1], op[2])
+    elif kind == "set_pk" and sorted(op[1]) != sorted(table.key_cols):
+        # a PK equal to the capture key is the idempotent replay /
+        # re-add-after-drop case; anything else is a RE-KEY, which cannot
+        # apply to a bucketed-by-key lake table without a full rewrite —
+        # fail loudly (a silent no-op would keep merging on a stale key)
+        raise ValueError(
+            f"DDL changes the primary key to {op[1]} but the table "
+            f"is keyed/bucketed by {table.key_cols}; re-keying "
+            "requires a full table rebuild (create a new capture)"
+        )
+    return True
+
+
 def apply_ddl(
     table: LakeTable,
     text: str,
@@ -744,24 +796,31 @@ def apply_ddl(
     ts_ms: int | None = None,
 ) -> None:
     """Apply one DDL (either form) to the target and append the history
-    ledger row (offset_file, offset_pos, ops, raw) — FIXTURES.md F5. Every
-    alter is idempotent, so replay across a crash is safe.
+    ledger row (offset_file, offset_pos, ops, raw) — FIXTURES.md F5.
 
-    Exact-replay guard: a ledger entry at this offset with this raw text
-    means the WHOLE op list already applied (the ledger appends last) —
-    skip instead of re-running. Individually-idempotent alters are not
-    enough for replay of SELF-UNDOING sequences ('ADD c; DROP c',
-    'RENAME a TO b; RENAME b TO c'): re-running the first op hits the
-    burned-name / missing-column guards and a crash-resume would wedge in
-    a permanent ValueError loop.
+    This is the live POLICY around ``apply_schema_op``: it decides what
+    each parsed op becomes, applies it, and records the ops that took
+    effect, so ``replay_schema_history`` replays exactly them.
 
-    Defaults: ``CURRENT_TS_MARKER`` resolves to the barrier's ``ts_ms``
-    (see ``resolve_default_marker``); a literal that fails Spark evaluation
-    DEGRADES to no-default — column still added, raw text still ledgered —
-    instead of raising (ADVICE r4: a raise here, before the ledger write,
-    crash-loops the stream forever on one malformed DDL event). The ledger
-    records the RESOLVED/degraded ops, so ``recover_schema`` replay
-    converges to the identical schema without needing ``ts_ms`` again."""
+    - Exact-replay guard: a ledger entry at this offset with this raw text
+      (or a checkpoint at or past it) means the WHOLE op list already
+      applied — the ledger appends last — so skip. Individually idempotent
+      alters are not enough for SELF-UNDOING sequences ('ADD c; DROP c',
+      'RENAME a TO b; RENAME b TO c'): re-running the first op hits the
+      burned-name / missing-column guards and a crash-resume would wedge
+      in a permanent ValueError loop.
+    - ``CURRENT_TS_MARKER`` defaults resolve to the barrier's ``ts_ms``
+      (``resolve_default_marker``); SET DEFAULT also takes the zero-date
+      rule from the column's current type (lake columns are nullable, so
+      SET DEFAULT '0000-00-00' on a temporal column means DROP DEFAULT).
+    - Degrade instead of raising before the ledger write (ADVICE r4: a
+      raise there crash-loops the stream forever on one DDL event): an
+      ADD whose literal fails Spark evaluation adds the column without a
+      default; an incompatible widen or an unplaceable reorder stays
+      history-only. Structural errors (burned name, re-key) still raise.
+
+    The ledger records the RESOLVED/degraded ops, so recovery converges to
+    the identical schema without needing ``ts_ms`` again."""
     cp, history = schema_history_split(table)
     if cp is not None and offset_key(offset[0], offset[1]) <= offset_key(
         cp["offset_file"], cp["offset_pos"]
@@ -780,196 +839,198 @@ def apply_ddl(
             and entry.get("raw") == text
         ):
             return  # already fully applied + ledgered
-    ops = parse_ddl(text)
     applied: list[DdlOp] = []
-    for op in ops:
+    for op in parse_ddl(text):
         if op[0] == "add":
-            # 3-tuples come from pre-default ledgers/TableChanges; 4th
-            # element is the DEFAULT literal (Iceberg initial-default:
-            # pre-ADD files surface it instead of null)
-            default = resolve_default_marker(
-                op[3] if len(op) > 3 else None, ts_ms
-            )
+            op = (*op[:3], resolve_default_marker(op[3] if len(op) > 3 else None, ts_ms))
+        elif op[0] == "set_default" and (op[2] != CURRENT_TS_MARKER or ts_ms is not None):
             try:
-                table.alter_add_columns([(op[1], op[2], default)])
-                op = (op[0], op[1], op[2], default)
-            except DefaultEvaluationError:
-                # structural errors (burned name, re-key) still raise —
-                # only the unevaluable-default case degrades
-                table.alter_add_columns([(op[1], op[2])])
-                op = (op[0], op[1], op[2], None)
-        elif op[0] == "set_default":
-            resolved = resolve_default_marker(op[2], ts_ms)
-            if op[2] == CURRENT_TS_MARKER and resolved is None:
-                # no barrier timestamp to resolve against: history-only —
-                # executing as DROP DEFAULT was the review-r4 #6 regression.
-                # continue, not pass: the UNAPPLIED op must not be recorded
-                # in the ledger's ops (raw text still ledgers below), or the
-                # NUL marker would replay into field metadata via
-                # recover_schema and re-emit through the schema-changes
-                # signal (review r5 final sweep)
+                styp = table.schema()[op[1]].dataType.simpleString()
+            except KeyError:
+                styp = "string"
+            op = (*op[:2], _zero_date_rule(
+                resolve_default_marker(op[2], ts_ms), styp, not_null=False))
+        try:
+            if not apply_schema_op(table, op):
                 continue
-            else:
-                # zero-date rule at apply time (the statement carries no
-                # column type; the table schema does) — lake columns are
-                # nullable, so SET DEFAULT '0000-00-00' on a temporal
-                # column means default-null, i.e. DROP DEFAULT
-                try:
-                    styp = table.schema()[op[1]].dataType.simpleString()
-                except KeyError:
-                    styp = "string"
-                resolved = _zero_date_rule(resolved, styp, not_null=False)
-                op = (op[0], op[1], resolved)
-                table.alter_set_default(op[1], op[2])
-        elif op[0] == "drop":
-            table.alter_drop_columns([op[1]])
-        elif op[0] == "rename":
-            table.alter_rename_column(op[1], op[2])
-        elif op[0] == "widen":
-            # CHANGE/MODIFY to the same type is a no-op inside alter_widen;
-            # an INCOMPATIBLE retype (int → string) or a retype of an
-            # unknown/dropped column raises from the alter's safety guards
-            # BEFORE the ledger write — degrade to history-only instead of
-            # crash-looping the stream on one DDL event (the same wedge
-            # class _type_or_none bans for unmapped types; final review r5)
-            try:
-                table.alter_widen_column(op[1], op[2])
-            except ValueError:
-                continue  # raw text still ledgers below; op itself is not
-        elif op[0] == "reorder":
-            # FIRST/AFTER placement is cosmetic in a name-resolved lake
-            # (only SELECT-* order changes); a missing column/anchor must
-            # not wedge the stream — degrade to history-only
-            try:
-                table.alter_reorder_column(op[1], op[2])
-            except ValueError:
-                continue  # raw text still ledgered below; op itself is not
-        elif op[0] == "set_pk":
-            # a PK identical to the capture key is the idempotent replay /
-            # re-add-after-drop case; anything else is a RE-KEY, which
-            # cannot apply to a bucketed-by-key lake table without a full
-            # rewrite — fail loudly (the silent no-op was the dangerous
-            # case: downstream merges would keep the stale key)
-            if sorted(op[1]) != sorted(table.key_cols):
-                raise ValueError(
-                    f"DDL changes the primary key to {op[1]} but the table "
-                    f"is keyed/bucketed by {table.key_cols}; re-keying "
-                    "requires a full table rebuild (create a new capture)"
-                )
-        # drop_pk: paired with a following set_pk (MySQL drop-then-re-add);
-        # alone it leaves the capture key in force (message.key.columns
-        # semantics — the capture key need not equal the source PK)
+        except DefaultEvaluationError:
+            op = (*op[:3], None)
+            apply_schema_op(table, op)
+        except ValueError:
+            if op[0] not in ("widen", "reorder"):
+                raise
+            continue  # raw text still ledgers below; the op itself does not
         applied.append(op)
-    ledger = os.path.join(table.root, "_schema_history.jsonl")
-    with open(ledger, "a") as f:
-        f.write(
-            json.dumps(
-                {
-                    "offset_file": offset[0],
-                    "offset_pos": offset[1],
-                    "ops": [list(o) for o in applied],
-                    "raw": text,
-                    "schema_version": table.manifest()["version"],
-                }
-            )
-            + "\n"
+    ledger_append(_history_path(table), {
+        "offset_file": offset[0],
+        "offset_pos": offset[1],
+        "ops": [list(o) for o in applied],
+        "raw": text,
+        "schema_version": table.manifest()["version"],
+    })
+
+
+def replay_schema_history(table: LakeTable) -> int:
+    """Restart recovery of the schema-history ledger: replay every
+    recorded op through ``apply_schema_op`` — the applier live DDL uses —
+    and return the number of entries replayed. The ledger itself is not
+    re-appended (``CdcEngine.recover_schema``).
+
+    Replay tolerance: every recorded op applied once live, so a ValueError
+    here can only mean the table already carries the op's effect in a
+    later-evolved form (replaying ``add x`` after ``x`` was renamed hits
+    the burned-name guard; the first hop of a rename chain ``a→b→c`` finds
+    neither name) — the op is skipped and recovery converges.
+
+    A compacted ledger starts from its checkpoint's schema state: restore
+    and tail replay compose in a SCRATCH manifest dir, and the final state
+    publishes to the live table in ONE ``restore_schema`` call (review r5:
+    restoring the live table first opened a crash window in which a
+    current table reverted to the checkpoint state for good, because
+    ``apply_ddl``'s exact-replay guard skips redelivered barriers).
+    ``restore_schema`` no-ops when the state already matches."""
+    import shutil
+    import tempfile
+
+    from pyspark.sql.types import StructType
+
+    cp, entries = schema_history_split(table)
+
+    def replay(t: LakeTable) -> None:
+        for e in entries:
+            for op in e["ops"]:
+                try:
+                    apply_schema_op(t, op)
+                except ValueError:
+                    continue
+
+    if cp is None:
+        # per-op onto the live table: each alter no-ops when applied, so
+        # there is no transient revert and no crash window on this path
+        replay(table)
+        return len(entries)
+    scratch_dir = tempfile.mkdtemp(prefix="recover_schema_")
+    try:
+        scratch = LakeTable(
+            table.spark, scratch_dir, list(table.key_cols),
+            n_buckets=table.n_buckets, mode=table.mode,
         )
+        scratch.create(StructType.fromJson(json.loads(cp["schema"])))
+        scratch.restore_schema(
+            cp["schema"], renames=cp.get("renames"), dropped=cp.get("dropped")
+        )
+        replay(scratch)
+        man = scratch.manifest()
+    finally:
+        shutil.rmtree(scratch_dir, ignore_errors=True)
+    table.restore_schema(
+        man["schema"], renames=man.get("renames", {}), dropped=man.get("dropped", [])
+    )
+    return len(entries)
+
+
+# ---- the JSONL ledger format of both control ledgers (this module's
+# ---- per-table ``_schema_history.jsonl`` and MultiTableEngine's
+# ---- ``_catalog.jsonl``): append-only entry lines, optionally preceded
+# ---- by ONE checkpoint line (``"checkpoint": true``) that a fold wrote
+
+
+def ledger_read(path: str) -> tuple[dict | None, list[dict]]:
+    """ONE read of a ledger → ``(checkpoint-or-None, entries after it)``."""
+    cp, entries = None, []
+    if os.path.exists(path):
+        with open(path) as f:
+            for line in f:
+                if line.strip():
+                    e = json.loads(line)
+                    if "checkpoint" in e:
+                        cp = e
+                    else:
+                        entries.append(e)
+    return cp, entries
+
+
+def ledger_append(path: str, entry: dict) -> None:
+    """Append one entry line to a ledger."""
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    with open(path, "a") as f:
+        f.write(json.dumps(entry) + "\n")
+
+
+def ledger_fold(path: str, prev: dict | None, entries: list[dict], state: dict) -> int:
+    """Checkpoint-and-truncate: atomically rewrite the ledger as ONE
+    checkpoint line carrying ``state`` and the running ``folded`` count.
+    The rewrite goes through a temp file + ``os.replace``, so a crash
+    mid-fold leaves the previous ledger intact. Returns the number of
+    entries folded."""
+    cp = {"checkpoint": True, **state,
+          "folded": len(entries) + (prev.get("folded", 0) if prev else 0)}
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        f.write(json.dumps(cp) + "\n")
+    os.replace(tmp, path)
+    return len(entries)
 
 
 def _history_path(table: LakeTable) -> str:
     return os.path.join(table.root, "_schema_history.jsonl")
 
 
-def _history_lines(table: LakeTable) -> list[dict]:
-    path = _history_path(table)
-    if not os.path.exists(path):
-        return []
-    with open(path) as f:
-        return [json.loads(line) for line in f if line.strip()]
-
-
 def schema_history(table: LakeTable) -> list[dict]:
     """The table's DDL op entries, in apply order — entries folded into a
     checkpoint (see ``compact_schema_history``) are gone; use
     ``schema_history_checkpoint`` for the folded state."""
-    return [e for e in _history_lines(table) if "checkpoint" not in e]
+    return schema_history_split(table)[1]
 
 
 def schema_history_checkpoint(table: LakeTable) -> dict | None:
     """The ledger's checkpoint line, or None for a never-compacted ledger:
     ``{"checkpoint": True, "offset_file", "offset_pos", "schema",
-    "renames", "schema_version", "folded"}`` — the complete schema state at
-    the fold fence."""
+    "renames", "dropped", "schema_version", "folded"}`` — the complete
+    schema state at the fold fence."""
     return schema_history_split(table)[0]
 
 
 def schema_history_split(table: LakeTable) -> tuple[dict | None, list[dict]]:
     """ONE ledger read → ``(checkpoint-or-None, post-checkpoint entries)``.
     The per-batch serial path (``apply_ddl`` fence + idempotency scan,
-    compaction trigger, recovery) shares this single read instead of
-    re-reading and re-parsing the file per question (review r5 finding:
+    compaction trigger, recovery) shares this single read (review r5:
     up to five full reads per barrier-carrying batch)."""
-    cp = None
-    entries = []
-    for e in _history_lines(table):
-        if "checkpoint" in e:
-            cp = e
-        else:
-            entries.append(e)
-    return cp, entries
+    return ledger_read(_history_path(table))
 
 
 def compact_schema_history(table: LakeTable, min_entries: int = 0) -> int:
     """Checkpoint-and-truncate the schema-history ledger (VERDICT r4 #1;
     reference analog: the breakpoint ledger expires applied offsets,
-    ``connector/breakpoint/BreakPointRecord.java:116`` ``toDeleteOffsets``
-    with the size cap at ``README.md:332``).
+    ``connector/breakpoint/BreakPointRecord.java:116`` ``toDeleteOffsets``).
 
-    Folds every current entry into ONE checkpoint line carrying the
-    table's full schema state (schema JSON + rename ledger + manifest
-    version) at the max folded offset, then atomically rewrites the ledger
-    as just that line. Restart replay (``CdcEngine.recover_schema``) and
-    the ``apply_ddl`` idempotency scan both become O(entries-since-last-
-    compaction) instead of O(stream lifetime); without this the ledger
-    grows append-only forever at the 10^5–10^6-batch design point.
-
-    Crash-safe: the rewrite goes through a temp file + ``os.replace`` —
-    a crash mid-compaction leaves the previous ledger intact. Returns the
-    number of entries folded (0 = nothing to do, ledger untouched).
+    Folds every current entry into ONE checkpoint line (``ledger_fold``)
+    carrying the table's full schema state (schema JSON + rename ledger +
+    burned names + manifest version) at the max folded offset. Restart
+    replay and the ``apply_ddl`` idempotency scan both become
+    O(entries-since-last-compaction) instead of O(stream lifetime).
+    Returns the number of entries folded (0 = ledger untouched).
 
     ``min_entries``: fold only when MORE than this many entries exist —
-    lets the engine's per-batch maintenance trigger share this function's
-    single ledger read instead of counting with a separate read first."""
+    lets the engine's per-batch trigger share this function's single
+    ledger read."""
     prev, entries = schema_history_split(table)
     if len(entries) <= min_entries:
         return 0
-    # entries append in apply order, but fold to the MAX offset — file-major
-    # via offset_key (schema.py contract, null-file tolerant: a poison
-    # offset in the ledger must not crash maintenance) — so an out-of-order
-    # ledger (multi-file streams) can never fence out a not-yet-applied
-    # barrier
+    # fold to the MAX offset, file-major via offset_key (null-file
+    # tolerant), never below the previous checkpoint — entries append in
+    # apply order, and an out-of-order ledger (multi-file streams) must
+    # never fence out a not-yet-applied barrier
     fold_file, fold_pos = max(
-        ((e["offset_file"], e["offset_pos"]) for e in entries),
+        ((e["offset_file"], e["offset_pos"]) for e in ([prev] if prev else []) + entries),
         key=lambda fp: offset_key(*fp),
     )
-    if prev is not None and offset_key(
-        prev["offset_file"], prev["offset_pos"]
-    ) > offset_key(fold_file, fold_pos):
-        fold_file, fold_pos = prev["offset_file"], prev["offset_pos"]
     man = table.manifest()
-    cp = {
-        "checkpoint": True,
+    return ledger_fold(_history_path(table), prev, entries, {
         "offset_file": fold_file,
         "offset_pos": fold_pos,
         "schema": man["schema"],
         "renames": man.get("renames", {}),
         "dropped": man.get("dropped", []),
         "schema_version": man["version"],
-        "folded": len(entries) + (prev.get("folded", 0) if prev else 0),
-    }
-    path = _history_path(table)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(json.dumps(cp) + "\n")
-    os.replace(tmp, path)
-    return len(entries)
+    })

@@ -54,14 +54,17 @@ OP_ROLLBACK = 36
 
 _DML = [OP_INSERT, OP_DELETE, OP_UPDATE]
 
-#: intra-transaction sequence occupies the low bits of source.pos; one
-#: transaction holds < 2^20 change rows per mining window. High-bit budget
+#: intra-commit sequence occupies the low bits of source.pos; one commit
+#: group holds < 2^20 change rows per mining window. High-bit budget
 #: (ADVICE r5): pos is a signed 64-bit long, so commit SCNs must stay
-#: below 2^43 — beyond that pos wraps negative and silently violates the
-#: stream-monotone OFFSET-ORDER CONTRACT. Oracle SCNs are 48-bit
-#: quantities, so a deployment near that ceiling must widen pos to
-#: decimal(38,0) (same exact-arithmetic move as packing.py's prefix sums)
-#: before this source is safe there.
+#: below 2^43. Under Spark's default ANSI mode a larger product does not
+#: wrap — it raises ARITHMETIC_OVERFLOW and fails the whole batch — so
+#: a row outside the budget (SCN outside [0, 2^43) or sequence >= 2^20)
+#: gets a NULL pos instead, and the engine's validity split quarantines
+#: it as a null offset while the rest of the batch applies. Oracle SCNs
+#: are 48-bit quantities, so a deployment near that ceiling must widen
+#: pos to decimal(38,0) (same exact-arithmetic move as packing.py's
+#: prefix sums) before this source is usable there.
 _SEQ_BITS = 20
 
 
@@ -134,7 +137,11 @@ def redo_to_envelope(
     )
     before = _payload(payload_cols, "before")
     after = _payload(payload_cols, "after")
-    pos = F.col("commit_scn") * F.lit(1 << _SEQ_BITS) + seq
+    scn = F.col("commit_scn")
+    pos = F.when(
+        scn.between(0, (1 << 43) - 1) & (seq < 1 << _SEQ_BITS),
+        scn * F.lit(1 << _SEQ_BITS) + seq,
+    )
 
     return out.select(
         F.when(op != "c", before).alias("before"),

@@ -49,9 +49,13 @@ OP_UPDATE_AFTER = 4
 #: seqval occupies the low bits of the synthetic stream position; one LSN
 #: (= one source transaction) holds < 2^20 statements. High-bit budget
 #: (ADVICE r5): pos is a signed 64-bit long, so the numeric start_lsn must
-#: stay below 2^43 — SQL Server's 10-byte LSNs modeled as a long wrap
-#: negative beyond that and break the OFFSET-ORDER CONTRACT; widen pos to
-#: decimal(38,0) before running against LSNs near the ceiling.
+#: stay below 2^43. Under Spark's default ANSI mode a larger product does
+#: not wrap — it raises ARITHMETIC_OVERFLOW and fails the whole batch —
+#: so a row outside the budget (start_lsn outside [0, 2^43) or seqval
+#: outside [0, 2^20)) gets a NULL pos instead, and the engine's validity
+#: split quarantines it as a null offset while the rest of the batch
+#: applies. SQL Server's 10-byte LSNs need pos widened to decimal(38,0)
+#: before this source is usable near that ceiling.
 _SEQVAL_BITS = 20
 
 
@@ -122,7 +126,11 @@ def cdc_table_to_envelope(
         .otherwise(F.lit("u"))
     )
     file_label = capture_instance or table.replace(".", "_")
-    pos = F.col("start_lsn") * F.lit(1 << _SEQVAL_BITS) + F.col("seqval")
+    lsn, seqval = F.col("start_lsn"), F.col("seqval")
+    pos = F.when(
+        lsn.between(0, (1 << 43) - 1) & seqval.between(0, (1 << _SEQVAL_BITS) - 1),
+        lsn * F.lit(1 << _SEQVAL_BITS) + seqval,
+    )
 
     return g.select(
         F.when(ok & op.isin("d", "u"), F.col("before")).alias("before"),

@@ -35,11 +35,15 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 from debezium_spark.operators.apply import compute_changes, split_pk_changes
 from debezium_spark.operators.quarantine import split_valid, write_quarantine
-from debezium_spark.operators.schema_evolution import apply_ddl, parse_ddl
+from debezium_spark.operators.schema_evolution import (
+    apply_ddl,
+    compact_schema_history,
+    parse_ddl,
+    replay_schema_history,
+)
 from debezium_spark.plans.exprs import TableExprs, TailProbe
 from debezium_spark.plans.merge import merge_changes
 from debezium_spark.plans.table import LakeTable
@@ -739,10 +743,6 @@ class CdcEngine:
         ``expire_keep`` after a committed batch. Both are driver-local file
         operations, O(threshold) and O(n_versions) — no Spark jobs."""
         if applied_ddl and self.history_compact_threshold:
-            from debezium_spark.operators.schema_evolution import (
-                compact_schema_history,
-            )
-
             # threshold check and fold share ONE ledger read (review r5)
             compact_schema_history(
                 self.table, min_entries=self.history_compact_threshold
@@ -924,114 +924,13 @@ class CdcEngine:
         return self.replay(batch_dir)
 
     def recover_schema(self) -> int:
-        """Replay the ``_schema_history.jsonl`` ledger onto the table —
-        every alter is idempotent, so replaying the full history converges
-        to the pre-loss schema (``AbstractDatabaseHistory.java`` recovery;
-        reference mode SCHEMA_ONLY_RECOVERY). Returns the number of ledger
-        entries replayed. The ledger itself is NOT re-appended.
-
-        Compacted ledgers: entries folded into a checkpoint
-        (``compact_schema_history``) no longer exist per-op, so recovery
-        must start from the checkpoint's full schema state and replay the
-        post-checkpoint tail on top — correct from ANY starting incarnation
-        by construction (the checkpoint pins the exact state the tail
-        entries originally applied from; every alter is idempotent). The
-        restore+replay composes in a SCRATCH manifest dir and publishes the
-        final state to the live table in ONE ``restore_schema`` call
-        (review r5: restoring the live table first and replaying the tail
-        as separate manifest publishes opened a crash window — a current
-        table transiently reverted to the checkpoint state, and a crash
-        before the tail replay made the revert permanent because
-        ``apply_ddl``'s idempotency scan skips redelivered barriers).
-        ``restore_schema`` no-ops when the live state already matches, so
-        recovery on a current table publishes nothing."""
-        import shutil
-        import tempfile
-
-        from debezium_spark.operators.schema_evolution import (
-            schema_history_split,
-        )
-
-        cp, entries = schema_history_split(self.table)
-        if cp is None:
-            # no checkpoint: replay per-op onto the live table — every
-            # alter no-ops when already applied, so there is no transient
-            # revert and no crash window on this path
-            self._replay_history_ops(self.table, entries)
-            return len(entries)
-        scratch_dir = tempfile.mkdtemp(prefix="recover_schema_")
-        try:
-            scratch = LakeTable(
-                self.spark, scratch_dir, list(self.table.key_cols),
-                n_buckets=self.table.n_buckets, mode=self.table.mode,
-            )
-            scratch.create(StructType.fromJson(json.loads(cp["schema"])))
-            scratch.restore_schema(
-                cp["schema"], renames=cp.get("renames"), dropped=cp.get("dropped")
-            )
-            self._replay_history_ops(scratch, entries)
-            man = scratch.manifest()
-            final_schema = man["schema"]
-            final_renames = man.get("renames", {})
-            final_dropped = man.get("dropped", [])
-        finally:
-            shutil.rmtree(scratch_dir, ignore_errors=True)
-        self.table.restore_schema(
-            final_schema, renames=final_renames, dropped=final_dropped
-        )
-        return len(entries)
-
-    @staticmethod
-    def _replay_history_ops(table: LakeTable, entries: list[dict]) -> None:
-        """Apply schema-history ledger entries per-op onto ``table`` —
-        the shared tail-replay used by ``recover_schema`` both directly
-        (no checkpoint) and against the scratch manifest (checkpointed
-        ledgers).
-
-        Replay tolerance: every op recorded here was applied ONCE by
-        ``apply_ddl``, so when a replay raises from an alter's strictness
-        guard the only possible cause is that the table already carries
-        the op's effect in a later-evolved form — e.g. replaying
-        ``add x`` after ``x`` was renamed to ``y`` hits the burned-name
-        guard, and the first hop of a rename chain ``a→b→c`` finds
-        neither name (final review r5: the raise wedged no-checkpoint
-        recovery on a healthy table, where the docstring promised
-        convergence). Those ops skip; recovery converges to the evolved
-        state. The checkpoint path replays from the exact pinned state,
-        so the tolerance never engages there."""
-        for e in entries:
-            for op in e.get("ops", []):
-                kind = op[0]
-                try:
-                    CdcEngine._replay_one_history_op(table, kind, op)
-                except ValueError:
-                    continue
-
-    @staticmethod
-    def _replay_one_history_op(table: LakeTable, kind: str, op) -> None:
-        if kind == "add":
-            # 4-element ops carry a DEFAULT literal (r4+ ledgers)
-            table.alter_add_columns([tuple(op[1:4])])
-        elif kind == "drop":
-            table.alter_drop_columns([op[1]])
-        elif kind == "rename":
-            table.alter_rename_column(op[1], op[2])
-        elif kind == "widen":
-            table.alter_widen_column(op[1], op[2])
-        elif kind == "reorder":
-            # cosmetic placement only — tolerance in the caller
-            table.alter_reorder_column(op[1], op[2])
-        elif kind == "set_default":
-            from debezium_spark.operators.schema_evolution import (
-                CURRENT_TS_MARKER,
-            )
-
-            # an unresolved now-function marker is history-only
-            # (apply_ddl had no barrier ts); replaying it would set
-            # CURRENT_DEFAULT to the raw sentinel
-            if op[2] != CURRENT_TS_MARKER:
-                table.alter_set_default(op[1], op[2])
-        # table-level ops are catalog history, not column state
+        """Replay the ``_schema_history.jsonl`` ledger onto the table
+        (``AbstractDatabaseHistory.java`` recovery; reference mode
+        SCHEMA_ONLY_RECOVERY) through the same op applier live DDL uses —
+        see ``schema_evolution.replay_schema_history``. Converges to the
+        pre-loss schema from any starting incarnation, compacted ledgers
+        included; returns the number of ledger entries replayed."""
+        return replay_schema_history(self.table)
 
     # ---- replay loop -------------------------------------------------------
 

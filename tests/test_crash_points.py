@@ -175,3 +175,121 @@ def test_crash_during_tx_carry_persistence_converges(spark, tmp_path, monkeypatc
     # a second run commits nothing (exactly-once held through the crash)
     assert [v for v in run() if v is not None] == []
     assert _sha_state(table) == want
+
+
+def test_crash_before_each_catalog_append_converges(spark, tmp_path, monkeypatch):
+    """Catalog-ledger crash sweep: ``_catalog.jsonl`` is the multi-table
+    engine's other commit point (append before apply). Crash before EACH
+    catalog append of one DDL-bearing wire batch — CREATE with a DEFAULT,
+    RENAME, RENAME into a new database then CREATE there, DROP, and a
+    same-batch DROP;CREATE — restart with the original static specs and
+    redeliver the batch: the registry (specs, roots, retired and
+    ledger-derived sets) and every table's rows must equal the uncrashed
+    run's, and a second redelivery must commit nothing."""
+    import json
+    import os
+
+    from pyspark.sql.types import StructType
+
+    from debezium_spark import MultiTableEngine
+    from debezium_spark.operators.schema_evolution import ledger_read
+    from debezium_spark.streaming import multi as multi_mod
+    from debezium_spark.streaming.multi import WIRE_SCHEMA, TableSpec
+
+    statics = [
+        TableSpec("app", t, StructType.fromDDL(ddl), [k], n_buckets=2)
+        for t, ddl, k in [("users", "uid long, name string", "uid"),
+                          ("audit", "aid long, msg string", "aid"),
+                          ("logs", "lid long", "lid"),
+                          ("sess", "sid long, v string", "sid")]
+    ]
+
+    def row(pos, db, table, op, after):
+        return {"before_json": None, "after_json": after, "op": op,
+                "ts_ms": 1000 + pos,
+                "source": {"file": "binlog.000001", "pos": pos, "gtid": None,
+                           "snapshot": None, "db": db, "table": table,
+                           "ts_ms": 1000 + pos},
+                "transaction": None}
+
+    def ddl(pos, db, table, sql):
+        return row(pos, db, table, "l", json.dumps({"content": sql}))
+
+    batch = spark.createDataFrame([
+        row(1, "app", "users", "c", '{"uid": 1, "name": "ada"}'),
+        ddl(2, "app", "orders", "CREATE TABLE app.orders (order_no BIGINT,"
+            " v VARCHAR(10) DEFAULT 'n', PRIMARY KEY (order_no))"),
+        row(3, "app", "orders", "c", '{"order_no": 7, "v": "a"}'),
+        ddl(4, "app", "users", "RENAME TABLE app.users TO app.accounts"),
+        row(5, "app", "audit", "c", '{"aid": 10, "msg": "boot"}'),
+        ddl(6, "app", "audit", "RENAME TABLE app.audit TO newdb.audit2"),
+        ddl(7, "newdb", "items",
+            "CREATE TABLE newdb.items (iid BIGINT, PRIMARY KEY (iid))"),
+        row(8, "newdb", "items", "c", '{"iid": 3}'),
+        row(9, "app", "logs", "c", '{"lid": 1}'),
+        ddl(10, "app", "logs", "DROP TABLE app.logs"),
+        row(11, "app", "sess", "c", '{"sid": 1, "v": "old"}'),
+        ddl(12, "app", "sess", "DROP TABLE app.sess;"
+            " CREATE TABLE app.sess (sid BIGINT, w INT, PRIMARY KEY (sid))"),
+        row(13, "app", "sess", "c", '{"sid": 2, "w": 5}'),
+    ], WIRE_SCHEMA)
+
+    def start(lake):
+        return MultiTableEngine(spark, lake, statics, default_buckets=2)
+
+    def registry(mte, lake):
+        return {
+            "specs": {k: (s.payload_schema.json(), s.key_cols, s.n_buckets, s.mode)
+                      for k, s in mte.specs.items()},
+            "roots": {k: os.path.relpath(e.table.root, lake)
+                      for k, e in mte.engines.items()},
+            "retired": set(mte.retired),
+            "ledgered": set(mte._ledgered),
+        }
+
+    def state(mte, lake):
+        return {**registry(mte, lake),
+                "rows": {fqn: sorted(repr(tuple(r)) for r in df.collect())
+                         for fqn, df in mte.read_all().items()}}
+
+    def committed(out):
+        return [v for v in out.values() if v is not None]
+
+    lake = str(tmp_path / "clean")
+    mte = start(lake)
+    mte.apply_wire_batch(batch, "b0")
+    want = state(mte, lake)
+    want_registry = registry(mte, lake)
+    assert set(want["specs"]) == {("app", "orders"), ("app", "accounts"),
+                                  ("newdb", "audit2"), ("newdb", "items"),
+                                  ("app", "sess")}
+    assert want["rows"]["app.accounts"] == [repr((1, "ada"))]
+    assert want["rows"]["app.sess"] == [repr((1, None)), repr((2, 5))]
+    assert want["retired"] == {("app", "logs")}
+    n_appends = len(ledger_read(os.path.join(lake, "_catalog.jsonl"))[1])
+    assert n_appends == 7
+    assert committed(mte.apply_wire_batch(batch, "b0")) == []
+
+    real = multi_mod.ledger_append
+    for k in range(n_appends):
+        lake = str(tmp_path / f"crash_{k}")
+        calls = {"n": 0}
+
+        def wedge(path, entry):
+            if calls["n"] == k:
+                raise _Boom(f"crash before catalog append #{k}")
+            calls["n"] += 1
+            return real(path, entry)
+
+        monkeypatch.setattr(multi_mod, "ledger_append", wedge)
+        try:
+            with pytest.raises(_Boom):
+                start(lake).apply_wire_batch(batch, "b0")
+        finally:
+            monkeypatch.setattr(multi_mod, "ledger_append", real)
+        mte = start(lake)  # restart; the batch is redelivered
+        mte.apply_wire_batch(batch, "b0")
+        assert state(mte, lake) == want, f"diverged after crash before append {k}"
+        # a second redelivery commits nothing, so the rows stay as checked
+        assert committed(mte.apply_wire_batch(batch, "b0")) == [], k
+        assert registry(mte, lake) == want_registry, k

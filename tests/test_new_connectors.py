@@ -852,3 +852,75 @@ def test_sink_dialect_kwarg_guards(spark):
         to_kinesis_records(env, topic_prefix="x")
     with pytest.raises(ValueError, match="single shard"):
         to_redis_stream_entries(env, n_partitions=2)
+
+
+def _replay_kv_envelope(spark, env, tmp_path):
+    """Replay a (k, v)-payload connector envelope through the real engine
+    (k → repo, v → content); returns the engine."""
+    from debezium_spark import CdcEngine, LakeTable
+
+    def pad(side):
+        return F.when(
+            F.col(side).isNotNull(),
+            F.struct(
+                F.col(f"{side}.k").alias("repo"), F.lit("p").alias("path"),
+                F.lit("c").alias("commit"), F.lit("sql").alias("lang"),
+                F.col(f"{side}.v").alias("content"),
+            ),
+        )
+
+    binlog = tmp_path / "binlog"
+    env.select(
+        pad("before").alias("before"), pad("after").alias("after"),
+        "op", "ts_ms", "source", "transaction",
+    ).coalesce(1).write.parquet(str(binlog / "batch_00000.parquet"))
+    table = LakeTable(spark, str(tmp_path / "table"), ["repo", "path"], n_buckets=2)
+    engine = CdcEngine(spark, table)
+    assert engine.replay(str(binlog)) != []
+    return engine
+
+
+def test_sqlserver_over_budget_lsn_quarantines_not_fails(spark, tmp_path):
+    """An LSN at 2^43 overflows the long pos (start_lsn * 2^20 + seqval);
+    under ANSI that raised ARITHMETIC_OVERFLOW and failed the whole batch,
+    so one poison row wedged the stream. The row must get a null pos and
+    quarantine as a null offset while the rest of the batch applies."""
+    from debezium_spark.sources.sqlserver import cdc_table_to_envelope
+
+    ct = spark.createDataFrame(
+        [(1 << 43, 1, 2, 1000, "x", "x0"), (10, 1, 2, 1000, "a", "a0")],
+        "start_lsn long, seqval long, operation int, commit_ts_ms long,"
+        " k string, v string",
+    )
+    env = cdc_table_to_envelope(ct, ["k", "v"]).filter(~F.col("pair_error"))
+    pos = {r["after"]["k"]: r["source"]["pos"] for r in env.collect()}
+    assert pos == {"x": None, "a": (10 << 20) + 1}
+    engine = _replay_kv_envelope(spark, env, tmp_path)
+    assert [(r["repo"], r["content"]) for r in engine.table.read().collect()] == [("a", "a0")]
+    assert [r["reason"] for r in engine.read_quarantine().collect()] == ["null_offset"]
+
+
+def test_logminer_over_budget_scn_quarantines_not_fails(spark, tmp_path):
+    """A commit SCN at 2^43 overflows the long pos (commit_scn * 2^20 +
+    seq): the row gets a null pos and quarantines as a null offset instead
+    of failing the batch with ARITHMETIC_OVERFLOW."""
+    from debezium_spark.sources.oracle_logminer import redo_to_envelope
+
+    big = 1 << 43
+    redo = spark.createDataFrame(
+        [
+            (101, "tx1", 1, "t", "r1", 0, 1001, None, None, "a", "a0"),
+            (150, "tx1", 7, None, None, 0, 1050, None, None, None, None),
+            (big - 5, "txB", 1, "t", "r2", 0, 1100, None, None, "x", "x0"),
+            (big, "txB", 7, None, None, 0, 1101, None, None, None, None),
+        ],
+        "scn long, tx_id string, event_type int, tbl string, row_id string,"
+        " rollback_flag int, ts_ms long, before_k string, before_v string,"
+        " after_k string, after_v string",
+    )
+    env = redo_to_envelope(redo, ["k", "v"])
+    pos = {r["after"]["k"]: r["source"]["pos"] for r in env.collect()}
+    assert pos == {"x": None, "a": (150 << 20) + 1}
+    engine = _replay_kv_envelope(spark, env, tmp_path)
+    assert [(r["repo"], r["content"]) for r in engine.table.read().collect()] == [("a", "a0")]
+    assert [r["reason"] for r in engine.read_quarantine().collect()] == ["null_offset"]

@@ -1115,33 +1115,80 @@ def test_apply_ddl_degrades_incompatible_retype(spark, tmp_path):
         t.alter_widen_column("c", "string")
 
 
-def test_recover_schema_converges_on_add_then_rename(spark, tmp_path):
+@pytest.mark.parametrize("script", [
+    pytest.param([
+        "ALTER TABLE t ADD COLUMN x INT",
+        "ALTER TABLE t RENAME COLUMN x TO y",
+        "ALTER TABLE t RENAME COLUMN y TO z",
+    ], id="add_then_rename"),
+    pytest.param([
+        "ALTER TABLE t ADD COLUMN d1 INT DEFAULT 7",
+        # unevaluable under ANSI cast: degrades to no default
+        "ALTER TABLE t ADD COLUMN d2 SMALLINT DEFAULT 9999999999999",
+        # no barrier ts_ms to resolve against: history-only
+        "ALTER TABLE t ALTER COLUMN d1 SET DEFAULT CURRENT_TIMESTAMP",
+        "ALTER TABLE t DROP COLUMN gone",
+        "ALTER TABLE t RENAME COLUMN r1 TO r2",
+        "ALTER TABLE t RENAME COLUMN r2 TO r3",
+        "ALTER TABLE t MODIFY COLUMN w BIGINT",
+        # string -> int is not a safe widening: history-only
+        "ALTER TABLE t MODIFY COLUMN s INT",
+        "ALTER TABLE t MODIFY COLUMN d1 INT FIRST",
+        "ALTER TABLE t ADD COLUMN z INT DEFAULT 3 AFTER k",
+        "ALTER TABLE t ADD PRIMARY KEY (k)",
+    ], id="every_op_kind"),
+])
+def test_recover_schema_converges_on_add_then_rename(spark, tmp_path, script):
     """Final review r5: the NO-checkpoint recovery path replays per-op
     onto the live table, and replaying 'add x' after x was renamed to y
     hit the burned-name guard (and a rename chain a→b→c wedged on its
     first hop) — recovery crashed on a healthy table where the contract
     is convergence. Ledgered ops were each applied once, so a replay
-    raise can only mean already-applied-in-evolved-form: skip."""
-    from pyspark.sql.types import StructType
-    from debezium_spark.operators.schema_evolution import apply_ddl
+    raise can only mean already-applied-in-evolved-form: skip.
 
-    t = LakeTable(spark, str(tmp_path / "t"), ["k"], n_buckets=2)
-    t.create(StructType.fromDDL("k string, a int"))
-    apply_ddl(t, "ALTER TABLE t ADD COLUMN x INT", ("f", 1))
-    apply_ddl(t, "ALTER TABLE t RENAME COLUMN x TO y", ("f", 2))
-    apply_ddl(t, "ALTER TABLE t RENAME COLUMN y TO z", ("f", 3))
-    want = [f.name for f in t.schema().fields]
-
-    # recovery on the CURRENT table (healthy restart) must no-op cleanly
-    assert CdcEngine(spark, t).recover_schema() == 3
-    assert [f.name for f in t.schema().fields] == want
-
-    # recovery onto a fresh table from the copied ledger converges too
+    Live apply and recovery share one op applier, so recovery must
+    reproduce live apply's exact schema state — manifest schema JSON
+    (field metadata included), renames and dropped names — for every
+    recorded op kind, three ways: on the live table, on a fresh
+    incarnation, and from the compacted ledger."""
     import shutil as _sh
 
-    rest = LakeTable(spark, str(tmp_path / "rest"), ["k"], n_buckets=2)
-    rest.create(StructType.fromDDL("k string, a int"))
-    _sh.copy(str(tmp_path / "t" / "_schema_history.jsonl"),
-             str(tmp_path / "rest" / "_schema_history.jsonl"))
-    assert CdcEngine(spark, rest).recover_schema() == 3
-    assert [f.name for f in rest.schema().fields] == want
+    from pyspark.sql.types import StructType
+    from debezium_spark.operators.schema_evolution import (
+        apply_ddl,
+        compact_schema_history,
+    )
+
+    base = "k string, a int, gone int, r1 int, w int, s string"
+    t = LakeTable(spark, str(tmp_path / "t"), ["k"], n_buckets=2)
+    t.create(StructType.fromDDL(base))
+    for i, sql in enumerate(script, 1):
+        apply_ddl(t, sql, ("f", i))
+
+    def state(tbl):
+        man = tbl.manifest()
+        return man["schema"], man.get("renames", {}), man.get("dropped", [])
+
+    want = state(t)
+
+    # recovery on the CURRENT table (healthy restart) must no-op cleanly
+    assert CdcEngine(spark, t).recover_schema() == len(script)
+    assert state(t) == want
+
+    def fresh(name):
+        rest = LakeTable(spark, str(tmp_path / name), ["k"], n_buckets=2)
+        rest.create(StructType.fromDDL(base))
+        _sh.copy(str(tmp_path / "t" / "_schema_history.jsonl"),
+                 str(tmp_path / name / "_schema_history.jsonl"))
+        return rest
+
+    # recovery onto a fresh table from the copied ledger converges too
+    rest = fresh("rest")
+    assert CdcEngine(spark, rest).recover_schema() == len(script)
+    assert state(rest) == want
+
+    # ...and so does recovery from the compacted ledger
+    assert compact_schema_history(t) == len(script)
+    rest = fresh("rest_cp")
+    assert CdcEngine(spark, rest).recover_schema() == 0
+    assert state(rest) == want

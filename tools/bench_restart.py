@@ -11,10 +11,11 @@ quantifies what checkpoint-and-truncate compaction buys at the
   (b) lost-schema recovery onto a fresh incarnation
   (``CdcEngine.recover_schema``), with and without the engine's
   compaction trigger.
-- catalog: K rename mutations through the engine's own append+apply pair
-  (``_catalog_append`` + ``_rename_table`` — exactly what
-  ``apply_wire_batch`` does per catalog DDL), then time a full
-  ``MultiTableEngine`` restart before and after ``compact_catalog()``.
+- catalog: K rename mutations through the engine's own append-then-apply
+  step (``_record``: ``ledger_append`` + the catalog applier
+  ``_apply_catalog_entry`` — exactly what ``apply_wire_batch`` does per
+  catalog DDL), then time a full ``MultiTableEngine`` restart before and
+  after ``compact_catalog()``.
 
 Mutation counts, not event counts, drive the cost — so the bench
 synthesizes mutations directly instead of pushing 10^5 micro-batches
@@ -116,21 +117,16 @@ def main() -> None:
             ["uid"], n_buckets=2,
         )
         mte = MultiTableEngine(spark, lake, [users], default_buckets=2)
-        spec = mte.specs[("app", "users")]
         live_root = mte.engines[("app", "users")].table.root
         names = [("app", "users"), ("app", "accounts")]
         t0 = time.perf_counter()
         for i in range(args.k_catalog):
             old, new = names[i % 2], names[(i + 1) % 2]
-            mte._catalog_append({
-                "op": "rename", "db": old[0], "table": old[1],
-                "new_db": new[0], "new_table": new[1],
-                "schema_json": spec.payload_schema.json(),
-                "key_cols": list(spec.key_cols),
-                "n_buckets": spec.n_buckets, "mode": spec.mode,
-                "root": live_root,
+            mte._record({
+                "op": "rename", "from": list(old),
+                **mte.specs[old].record(live_root),
+                "db": new[0], "table": new[1], "at": ["", 0, i],
             })
-            mte._rename_table(old, new)
         append_s = time.perf_counter() - t0
         cat = os.path.join(lake, "_catalog.jsonl")
         size_unbounded = os.path.getsize(cat)
