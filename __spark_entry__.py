@@ -3410,7 +3410,7 @@ def q_sink_per_table_stream(spark, sf_dir):
     channel — the precondition for parallel apply."""
     from pyspark.sql.types import StructType
 
-    from debezium_spark.sink import per_table_statement_streams
+    from debezium_spark.sink import channel_statements
     from debezium_spark.streaming.multi import TableSpec, envelope_to_wire
 
     wire = envelope_to_wire(_env_struct(spark, sf_dir))
@@ -3418,14 +3418,11 @@ def q_sink_per_table_stream(spark, sf_dir):
     specs = [
         TableSpec("app", f"t{i}", schema, ["repo", "path"]) for i in range(5)
     ]
-    streams = per_table_statement_streams(wire, specs, {"app": "sink_app"})
-    out = None
-    for (_db, tbl), df in sorted(streams.items()):
-        part = df.select(
-            F.lit(tbl).alias("channel"), "file", "pos", "sub", "seq", "stmt"
-        )
-        out = part if out is None else out.unionByName(part)
-    return out
+    # channel_statements names each channel "db.table"; the oracle keys on table
+    return channel_statements(wire, specs, {"app": "sink_app"}).select(
+        F.substring_index("channel", ".", -1).alias("channel"),
+        "file", "pos", "sub", "seq", "stmt",
+    )
 
 
 SQL_sink_per_table_stream = f"""WITH {ENV_SQL},

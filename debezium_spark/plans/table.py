@@ -287,13 +287,33 @@ class LakeTable:
 
     # ---- commit (called by plans.merge) ----------------------------------
 
+    def _publish_next(
+        self, man: dict, fence: tuple[str, int] | None = None, **fields
+    ) -> int:
+        """Publish the version that follows ``man``; returns its number.
+
+        ``fields`` replace and a given ``fence`` advances; every other field
+        carries over, so the schema-evolution ledgers (``renames``,
+        ``dropped``, ``table_meta``) survive data commits. The lineage is
+        the new version's own (empty unless given): ``lineage()``
+        concatenates versions, so a copied parent lineage would count its
+        batch twice."""
+        nxt = {
+            "renames": {}, "dropped": [], "table_meta": None, **man,
+            "lineage": [], **fields,
+            "version": man["version"] + 1, "parent": man["version"],
+        }
+        if fence:
+            nxt["fence"] = {"file": fence[0], "pos": fence[1]}
+        self._publish(nxt)
+        return nxt["version"]
+
     def commit_buckets(
         self,
         new_bucket_dirs: dict[int, list[str]],
         touched: list[int],
         fence: tuple[str, int] | None,
         lineage: list[dict],
-        schema: StructType | None = None,
     ) -> int:
         """Publish a new version: touched buckets point at the new dirs,
         untouched buckets carry over; fence + lineage ride the same commit."""
@@ -301,20 +321,7 @@ class LakeTable:
         buckets = dict(man["buckets"])
         for b in touched:
             buckets[str(b)] = new_bucket_dirs.get(b, [])
-        new_man = {
-            "version": man["version"] + 1,
-            "schema": schema.json() if schema is not None else man["schema"],
-            "buckets": buckets,
-            "fence": {"file": fence[0], "pos": fence[1]} if fence else man["fence"],
-            "lineage": lineage,
-            # schema-evolution ledgers survive data commits
-            "renames": man.get("renames", {}),
-            "dropped": man.get("dropped", []),
-            "table_meta": man.get("table_meta"),
-            "parent": man["version"],
-        }
-        self._publish(new_man)
-        return new_man["version"]
+        return self._publish_next(man, fence, buckets=buckets, lineage=lineage)
 
     def delta_depth(self, bucket: int | None = None) -> int:
         """Max number of delta dirs on any (or one) bucket — the compaction
@@ -401,37 +408,16 @@ class LakeTable:
         sink-side replay analog in the fork's DML path): publish a version
         with every bucket empty. O(1) — no data files touched; old versions
         remain time-travelable until expired."""
-        man = self.manifest()
-        new_man = {
-            "version": man["version"] + 1,
-            "schema": man["schema"],
-            "buckets": {},
-            "fence": {"file": fence[0], "pos": fence[1]} if fence else man["fence"],
-            "lineage": [
+        return self._publish_next(
+            self.manifest(),
+            fence,
+            buckets={},
+            lineage=[
                 {"batch": batch_id, "bucket": -1, "events": 1, "deletes": 0,
                  "upserts": 0, "truncate": True,
                  "fence_pos": fence[1] if fence else None}
             ],
-            "renames": man.get("renames", {}),
-            "dropped": man.get("dropped", []),
-            "table_meta": man.get("table_meta"),
-            "parent": man["version"],
-        }
-        self._publish(new_man)
-        return new_man["version"]
-
-    def _publish_schema(self, man: dict, schema: StructType, renames: dict | None = None) -> None:
-        man2 = dict(man)
-        man2["version"] = man["version"] + 1
-        man2["schema"] = schema.json()
-        # a schema commit carries NO batch metrics — copying the parent's
-        # lineage verbatim would double-count it in lineage() (which
-        # concatenates across versions)
-        man2["lineage"] = []
-        if renames is not None:
-            man2["renames"] = renames
-        man2["parent"] = man["version"]
-        self._publish(man2)
+        )
 
     def restore_schema(
         self,
@@ -457,9 +443,9 @@ class LakeTable:
             and man.get("dropped", []) == dropped
         ):
             return
-        man2 = dict(man)
-        man2["dropped"] = dropped
-        self._publish_schema(man2, schema, renames=renames)
+        self._publish_next(
+            man, schema=schema.json(), renames=renames, dropped=dropped
+        )
 
     def _burned_names(self, man: dict) -> set[str]:
         """Names that may still exist in old data files under a *previous*
@@ -530,7 +516,7 @@ class LakeTable:
                 changed = True
         if not changed:
             return
-        self._publish_schema(man, schema)
+        self._publish_next(man, schema=schema.json())
 
     def alter_drop_columns(self, cols: list[str]) -> None:
         """``ALTER TABLE DROP COLUMN`` — removes the field from the schema;
@@ -552,9 +538,10 @@ class LakeTable:
         for c in cols:
             dropped.add(c)
             dropped.update(renames.pop(c, []))  # aliases of a dropped column burn too
-        man2 = dict(man)
-        man2["dropped"] = sorted(dropped)
-        self._publish_schema(man2, StructType(keep), renames)
+        self._publish_next(
+            man, schema=StructType(keep).json(), renames=renames,
+            dropped=sorted(dropped),
+        )
 
     def alter_rename_column(self, old: str, new: str) -> None:
         """``ALTER TABLE RENAME COLUMN old TO new`` — schema-only commit;
@@ -588,7 +575,7 @@ class LakeTable:
         renames = {k: list(v) for k, v in man.get("renames", {}).items()}
         aliases = renames.pop(old, [])  # chain renames: a→b→c keeps alias a
         renames[new] = aliases + [old]
-        self._publish_schema(man, StructType(fields), renames)
+        self._publish_next(man, schema=StructType(fields).json(), renames=renames)
 
     def alter_reorder_column(self, name: str, after: str | None) -> None:
         """MySQL ``ALTER ... <col> ... FIRST`` / ``AFTER <anchor>``
@@ -620,7 +607,7 @@ class LakeTable:
         reordered = StructType(fields)
         if reordered.json() == man["schema"]:
             return  # already in place — idempotent DDL replay
-        self._publish_schema(man, reordered)
+        self._publish_next(man, schema=reordered.json())
 
     def alter_set_default(self, name: str, default_sql: str | None) -> None:
         """``ALTER COLUMN x SET DEFAULT <lit>`` / ``DROP DEFAULT`` —
@@ -649,7 +636,7 @@ class LakeTable:
             else:
                 fields.append(f)
         if changed:
-            self._publish_schema(man, StructType(fields))
+            self._publish_next(man, schema=StructType(fields).json())
 
     #: widening promotions the parquet reader performs across old files
     #: (Spark 4 type-widening; anything else would corrupt or fail reads)
@@ -686,7 +673,7 @@ class LakeTable:
                         metadata=f.metadata)
             for f in schema.fields
         ]
-        self._publish_schema(man, StructType(fields))
+        self._publish_next(man, schema=StructType(fields).json())
 
     # ---- maintenance -----------------------------------------------------
 

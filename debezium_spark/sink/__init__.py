@@ -24,9 +24,8 @@ from debezium_spark.sink.metadata import ColumnMeta, TableMeta, table_meta_from_
 from debezium_spark.sink.pg_deparse import expand_ddl_json, expand_ddl_json_batch
 from debezium_spark.sink.replay import (
     apply_statement_stream,
-    per_table_statement_streams,
+    channel_statements,
     statement_stream,
-    statement_stream_multi,
     write_statement_stream,
     write_statement_streams,
 )
@@ -44,8 +43,7 @@ __all__ = [
     "expand_ddl_json_batch",
     "statement_stream",
     "apply_statement_stream",
-    "statement_stream_multi",
-    "per_table_statement_streams",
+    "channel_statements",
     "write_statement_stream",
     "write_statement_streams",
 ]

@@ -12,6 +12,8 @@ with statement files) are:
   (whole transactions in source order, one stream), ``false`` (the
   reference's default) replays TABLE-parallel (one order-safe channel per
   table, cross-table transactions split per fragment) — ``README.md:199``;
+  ``tx_parallel`` is the mode argument of
+  :func:`debezium_spark.sink.replay.write_statement_streams`;
 * ``fail.sql.path`` — where failed units divert (``README.md:321``);
 * ``max.thread.count`` / ``parallel.replay.thread.num`` — table-parallel
   worker cap (``README.md:314,1427``; the reference defaults to 30);
@@ -30,8 +32,6 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 from typing import Mapping
-
-from pyspark.sql import DataFrame
 
 
 @dataclass
@@ -74,32 +74,3 @@ class SinkConfig:
             else:
                 cfg.extras[k] = val
         return cfg
-
-    def statement_streams(
-        self, wire_df: DataFrame, specs, metas=None
-    ) -> dict[tuple[str, str], DataFrame]:
-        """Route a mixed wire batch per the configured replay mode.
-
-        ``provide.transaction.metadata=true`` → ONE channel (whole-tx
-        order, :func:`statement_stream_multi`), keyed ``("", "")``;
-        ``false`` → one channel per registered table
-        (:func:`per_table_statement_streams`). Either way the result is a
-        dict of independently writable/appliable statement streams, so the
-        caller's write/apply loop is mode-agnostic.
-        """
-        from debezium_spark.sink.replay import (
-            per_table_statement_streams,
-            statement_stream_multi,
-        )
-
-        if self.tx_parallel:
-            return {
-                ("", ""): statement_stream_multi(
-                    wire_df, specs, self.schema_mappings,
-                    dialect=self.dialect, metas=metas,
-                )
-            }
-        return per_table_statement_streams(
-            wire_df, specs, self.schema_mappings,
-            dialect=self.dialect, metas=metas,
-        )

@@ -1,4 +1,4 @@
-"""Sink replay: one batch of envelopes → an ordered SQL statement stream.
+"""Sink replay: one batch of envelopes → ordered SQL statement streams.
 
 The reference's sink tasks turn each polled batch into per-transaction
 statement lists and apply them in source order
@@ -13,27 +13,35 @@ Spark-first shape:
 
 * statement TEXT is the narrow per-row map from :mod:`sqlgen` (DML) and the
   Arrow-batched control-plane translators (DDL) — no shuffle;
+* a *channel* is one order-safe statement stream: a name, the wire rows it
+  reads and the specs whose DML it carries. The reference's two replay
+  modes are two channel layouts over one statement-row source
+  (:func:`channel_statements`): table-parallel (``TableReplayTask``, its
+  default and the config behind its published throughput number) has one
+  channel per registered table over that table's rows; transaction-
+  parallel (``TransactionReplayTask``) has one channel over the whole
+  batch;
 * ``begin;``/``commit;`` wrappers are O(transactions) rows produced by ONE
-  partial aggregation over the transaction id (min/max offset per tx), not
-  a global window — transactions wrap exactly like the reference's
-  whole-tx dispatch, and untagged rows stay autocommit;
-* global replay order is materialized exactly once, at the writer, by a
-  range repartition on the offset key — part files are range-ordered, so
-  their concatenation IS the total order. Offset-range part files apply
-  SEQUENTIALLY (two updates to one row may land in different ranges, so
-  ranges are not mutually order-safe); order-safe PARALLEL apply comes from
-  :func:`per_table_statement_streams` — one channel per table, the
-  reference's table-parallel mode and the config behind its published
-  throughput number.
+  partial aggregation over (channel, transaction id) — not a global
+  window — so transactions wrap like the reference's whole-tx dispatch
+  within each channel, and untagged rows stay autocommit;
+* replay order is materialized exactly once, at the writer
+  (:func:`write_statement_streams`), by a range repartition on (channel,
+  offset) — part files are range-ordered, so a channel's concatenation IS
+  its total order. Offset-range part files apply SEQUENTIALLY (two updates
+  to one row may land in different ranges, so ranges are not mutually
+  order-safe); order-safe PARALLEL apply comes from the table-parallel
+  channels, one session each.
 """
 
 from __future__ import annotations
 
 import json
 import os
-from typing import Mapping
+from functools import reduce
+from typing import Mapping, NamedTuple
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from debezium_spark.sink.ddl_translate import iter_translations
@@ -105,32 +113,39 @@ def _ddl_stmt_rows(
     return ddl_rows.mapInPandas(gen, _STMT_SCHEMA)
 
 
-def _wrap_tx(all_stmts: DataFrame) -> DataFrame:
+def _wrap_tx(stmts: DataFrame) -> DataFrame:
     """Add begin;/commit; rows at each transaction's first/last offset.
 
-    ONE partial aggregation per transaction id → two rows each. Computed
-    over the FULL statement set, so a transaction spanning several tables
-    wraps once — whole-transaction dispatch
-    (``TransactionReplayTask.java``), not per-table wrapping."""
-    tx_bounds = (
-        all_stmts.where(F.col("_tx").isNotNull())
-        .groupBy("_tx")
+    ONE partial aggregation over (channel, transaction id) → two rows per
+    transaction and channel, at any channel count. A transaction wraps
+    once per channel it touches: once per table fragment in table-parallel
+    mode, once in the transaction-parallel channel, which carries every
+    table (whole-transaction dispatch, ``TransactionReplayTask.java``).
+    A typed single-table stream has no channel column and groups by
+    transaction alone."""
+    by = [c for c in ("channel", "_tx") if c in stmts.columns]
+    bounds = (
+        stmts.where(F.col("_tx").isNotNull())
+        .groupBy(*by)
         .agg(
             F.min(F.struct("file", "pos")).alias("lo"),
             F.max(F.struct("file", "pos")).alias("hi"),
         )
     )
-    begins = tx_bounds.select(
-        F.col("lo.file").alias("file"), F.col("lo.pos").alias("pos"),
-        F.lit(_SUB_BEGIN).alias("sub"), F.lit(0).alias("seq"),
-        F.lit("begin;").alias("stmt"), F.col("_tx"),
+
+    def edge(end: str, sub: int, stmt: str) -> DataFrame:
+        return bounds.select(
+            *by[:-1], F.col(f"{end}.file").alias("file"),
+            F.col(f"{end}.pos").alias("pos"),
+            F.lit(sub).alias("sub"), F.lit(0).alias("seq"),
+            F.lit(stmt).alias("stmt"), F.col("_tx"),
+        )
+
+    return (
+        stmts.unionByName(edge("lo", _SUB_BEGIN, "begin;"))
+        .unionByName(edge("hi", _SUB_COMMIT, "commit;"))
+        .drop("_tx")
     )
-    commits = tx_bounds.select(
-        F.col("hi.file").alias("file"), F.col("hi.pos").alias("pos"),
-        F.lit(_SUB_COMMIT).alias("sub"), F.lit(0).alias("seq"),
-        F.lit("commit;").alias("stmt"), F.col("_tx"),
-    )
-    return all_stmts.unionByName(begins).unionByName(commits).drop("_tx")
 
 
 def statement_stream(
@@ -172,55 +187,53 @@ def statement_stream(
     return _wrap_tx(stmts.unionByName(ddl_stmts))
 
 
-def statement_stream_multi(
-    wire_df: DataFrame,
-    specs,
-    schema_mapping: Mapping[str, str] | None = None,
-    dialect: str = "opengauss",
-    metas: Mapping[tuple[str, str], TableMeta] | None = None,
-) -> DataFrame:
-    """Mixed-table WIRE batch → one ordered statement stream.
+class _Channel(NamedTuple):
+    """One order-safe statement stream: its name (the ``channel`` value and
+    its directory under the writer's root), the filter picking its wire
+    rows (None: the whole batch) and the specs whose DML it carries."""
 
-    The reference sink routes replay by fully-qualified table name into
-    per-table work threads
-    (``sink/replay/table/TableReplayTask.java:401-426``); this is that
-    routing for statement generation. ``specs`` is the engine's own
-    registry (:class:`debezium_spark.streaming.multi.TableSpec` — db,
-    table, payload_schema, key_cols); each table's rows parse with its own
-    ``from_json`` and map through its own pure-Catalyst statement
-    expression, so the plan is a union of per-table narrow maps — no
-    shuffle, no Python on the DML path. Rows for unregistered tables are
-    dropped (include-list semantics, ``relational/Selectors.java``); DDL
-    rows translate once regardless of registration (the reference forwards
-    DDL for any table in the include list's databases).
+    name: str
+    rows: Column | None
+    specs: tuple
 
-    Transaction wrappers are computed over the UNION, so a source
-    transaction touching several tables wraps once — the reference applies
-    whole transactions, not per-table fragments.
 
-    ``metas`` overrides the derived :class:`TableMeta` for tables whose
-    target types differ from what the Spark schema implies (the
-    information_schema facts, e.g. json/enum/point columns).
-    """
-    mapping = dict(schema_mapping or {})
-    metas = dict(metas or {})
+def _channels(specs, tx_parallel: bool) -> dict[tuple[str, str], _Channel]:
+    """The replay mode's channels, keyed as the writer reports them.
 
-    all_stmts = _wire_ddl_rows(wire_df, mapping)
-    for spec in specs:
-        all_stmts = all_stmts.unionByName(
-            _spec_dml_rows(wire_df, spec, mapping, dialect, metas)
+    Transaction-parallel (``provide.transaction.metadata=true``): one
+    channel ``all``, keyed ``("", "")``, over the whole batch and carrying
+    every spec — DDL for any table translates once and a cross-table
+    transaction wraps once. Table-parallel (the default): one channel
+    ``db.table`` per registered table over that table's rows, in key
+    order — DDL routes to its own table's channel, and a transaction
+    touching several tables is re-wrapped per fragment, exactly like the
+    reference (``TableReplayTask.java``, one work thread per table).
+    DML of unregistered tables is dropped (include-list semantics,
+    ``relational/Selectors.java``); so is their DDL in table-parallel mode,
+    while the transaction-parallel channel translates DDL for any table
+    (the reference forwards DDL for the include list's databases)."""
+    if tx_parallel:
+        return {("", ""): _Channel("all", None, tuple(specs))}
+    by_key = {(s.db, s.table): s for s in specs}
+    return {
+        k: _Channel(
+            f"{k[0]}.{k[1]}",
+            (F.col("source.db") == k[0]) & (F.col("source.table") == k[1]),
+            (by_key[k],),
         )
-    return _wrap_tx(all_stmts)
+        for k in sorted(by_key)
+    }
 
 
 def _spec_dml_rows(
     wire_df: DataFrame, spec, mapping: dict, dialect: str, metas: dict
 ) -> DataFrame:
-    """One registered TableSpec's wire rows → its DML statement rows.
-
-    Shared by the unified (:func:`statement_stream_multi`) and per-table
-    (:func:`per_table_statement_streams`) modes so routing, meta override,
-    and envelope-parse semantics cannot diverge between them."""
+    """One registered TableSpec's wire rows → its DML statement rows: its
+    own ``from_json`` parse and its own pure-Catalyst statement map, so a
+    channel's plan is a union of per-table narrow maps — no shuffle, no
+    Python on the DML path. ``metas`` overrides the derived
+    :class:`TableMeta` where target types differ from what the Spark
+    schema implies (information_schema facts: json/enum/point columns)."""
     from debezium_spark.sink.metadata import table_meta_from_schema
     from debezium_spark.streaming.multi import wire_to_envelope
 
@@ -253,132 +266,47 @@ def _wire_ddl_rows(wire_df: DataFrame, mapping: dict) -> DataFrame:
     )
 
 
-def per_table_statement_streams(
+def _channel_rows(
+    wire_df: DataFrame, channels, schema_mapping, dialect: str, metas
+) -> DataFrame:
+    """Every wire batch's statement rows come from here: for each channel,
+    the DML of each of its specs plus the DDL over its rows, tagged with
+    its name, then every channel's transactions wrapped in one
+    aggregation."""
+    mapping = dict(schema_mapping or {})
+    metas = dict(metas or {})
+
+    def part(ch: _Channel) -> DataFrame:
+        rows = wire_df if ch.rows is None else wire_df.where(ch.rows)
+        stmts = [_spec_dml_rows(rows, s, mapping, dialect, metas) for s in ch.specs]
+        return reduce(
+            DataFrame.unionByName, [*stmts, _wire_ddl_rows(rows, mapping)]
+        ).select(F.lit(ch.name).alias("channel"), "*")
+
+    return _wrap_tx(reduce(DataFrame.unionByName, map(part, channels)))
+
+
+def channel_statements(
     wire_df: DataFrame,
     specs,
     schema_mapping: Mapping[str, str] | None = None,
     dialect: str = "opengauss",
     metas: Mapping[tuple[str, str], TableMeta] | None = None,
-) -> dict[tuple[str, str], DataFrame]:
-    """Mixed-table WIRE batch → one statement stream PER table.
+    tx_parallel: bool = False,
+) -> DataFrame:
+    """Mixed-table WIRE batch → ``(channel, file, pos, sub, seq, stmt)``
+    statement rows for either replay mode (see :func:`_channels`).
 
-    The reference's table-parallel replay mode
-    (``provide.transaction.metadata=false``, the default — one work thread
-    per table, ``sink/replay/table/TableReplayTask.java``; its published
-    30k-tps number is measured in THIS mode at 50 tables / 50 threads,
-    ``README.md:407``): each table's statements apply on their own session
-    concurrently, which preserves per-table order but — exactly like the
-    reference — abandons cross-table transaction atomicity; a transaction
-    touching several tables is re-wrapped per table fragment. Use
-    :func:`statement_stream_multi` (one stream, whole-tx wrappers) for the
-    transaction-parallel posture (``provide.transaction.metadata=true``).
-
-    DDL routes to its OWN table's channel at its offset, like the
-    reference's per-table queues; DDL for unregistered tables is dropped
-    with the rest of their rows (include-list semantics).
-
-    Each returned stream writes independently with
-    :func:`write_statement_stream` (its own batch directory) and applies on
-    its own session via :func:`apply_statement_stream` — N tables = N
-    order-safe parallel channels.
-    """
-    mapping = dict(schema_mapping or {})
-    metas = dict(metas or {})
-
-    out: dict[tuple[str, str], DataFrame] = {}
-    for spec in specs:
-        table_rows = wire_df.where(
-            (F.col("source.db") == spec.db)
-            & (F.col("source.table") == spec.table)
-        )
-        dml = _spec_dml_rows(table_rows, spec, mapping, dialect, metas)
-        ddl = _wire_ddl_rows(table_rows, mapping)
-        out[(spec.db, spec.table)] = _wrap_tx(dml.unionByName(ddl))
-    return out
-
-
-def write_statement_stream(
-    stmt_df: DataFrame, out_dir: str, batch_id: int, n_files: int = 8
-) -> int:
-    """Write one batch's statements as range-ordered text part files.
-
-    ``part-00000 … part-NNNNN`` sorted by (file, pos, sub, seq): each part
-    is internally ordered and parts are range-ordered, so concatenation is
-    the total replay order (apply offset ranges sequentially — parallel
-    channels come from per-table streams, see the module docstring).
-    Idempotent on redelivery: a committed batch directory
-    (``_done`` marker) is never rewritten — the statement-file analog of the
-    offset fence (JdbcDbWriter's breakpoint table).
-
-    Returns the statement count (0 for a skipped redelivery).
-    """
-    batch_dir = os.path.join(out_dir, f"batch-{batch_id:06d}")
-    done = os.path.join(batch_dir, "_done")
-    if os.path.exists(done):
-        return 0
-    from pyspark.sql import Observation
-
-    obs = Observation(f"stmt-stream-{batch_id}")
-    ordered = (
-        stmt_df.repartitionByRange(n_files, "file", "pos", "sub", "seq")
-        .sortWithinPartitions("file", "pos", "sub", "seq")
-        .select("stmt")
-        .observe(
-            obs,
-            F.count(F.lit(1)).alias("n"),
-            # transport invariant: one statement per line. The literal/DDL
-            # escape rules (sqlgen, _ddl_stmt_rows) make this structural;
-            # this guard rides the SAME observation (no extra job) and
-            # fails loudly if a future statement source regresses it.
-            F.sum(
-                F.when(F.col("stmt").rlike("[\\n\\r]"), 1).otherwise(0)
-            ).alias("multiline"),
-        )
+    The reference sink routes replay by fully-qualified table name
+    (``sink/replay/table/TableReplayTask.java:401-426``); ``specs`` is the
+    engine's own registry (:class:`debezium_spark.streaming.multi.TableSpec`
+    — db, table, payload_schema, key_cols). Sorting one channel's rows by
+    (file, pos, sub, seq) reproduces the reference's apply order; the sort
+    itself happens at the writer (:func:`write_statement_streams`)."""
+    return _channel_rows(
+        wire_df, _channels(specs, tx_parallel).values(), schema_mapping,
+        dialect, metas,
     )
-    ordered.write.mode("overwrite").text(batch_dir)
-    multiline = int(obs.get["multiline"] or 0)
-    if multiline:
-        raise ValueError(
-            f"statement stream batch {batch_id}: {multiline} statement(s) "
-            "contain raw newlines and would split across part-file lines — "
-            "the written batch is NOT committed (_done withheld)"
-        )
-    n = int(obs.get["n"])
-    tmp = done + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"batch_id": batch_id, "statements": n}, f)
-    os.replace(tmp, done)
-    return n
-
-
-def _wrap_tx_channels(all_stmts: DataFrame) -> DataFrame:
-    """Channel-aware tx wrapping: ONE aggregation over every channel.
-
-    Per-channel :func:`_wrap_tx` calls cost one shuffle (and, under AQE,
-    one stage-materialization job) EACH; grouping by (channel, _tx) wraps
-    every channel's fragments in a single partial aggregation, so wrapper
-    cost is O(1) jobs at any channel count. Row-for-row equal to mapping
-    :func:`_wrap_tx` over the per-channel streams (each transaction's
-    bounds are computed within its channel either way)."""
-    tx_bounds = (
-        all_stmts.where(F.col("_tx").isNotNull())
-        .groupBy("channel", "_tx")
-        .agg(
-            F.min(F.struct("file", "pos")).alias("lo"),
-            F.max(F.struct("file", "pos")).alias("hi"),
-        )
-    )
-    begins = tx_bounds.select(
-        "channel", F.col("lo.file").alias("file"), F.col("lo.pos").alias("pos"),
-        F.lit(_SUB_BEGIN).alias("sub"), F.lit(0).alias("seq"),
-        F.lit("begin;").alias("stmt"), F.col("_tx"),
-    )
-    commits = tx_bounds.select(
-        "channel", F.col("hi.file").alias("file"), F.col("hi.pos").alias("pos"),
-        F.lit(_SUB_COMMIT).alias("sub"), F.lit(0).alias("seq"),
-        F.lit("commit;").alias("stmt"), F.col("_tx"),
-    )
-    return all_stmts.unionByName(begins).unionByName(commits).drop("_tx")
 
 
 def write_statement_streams(
@@ -390,78 +318,93 @@ def write_statement_streams(
     dialect: str = "opengauss",
     metas: Mapping[tuple[str, str], TableMeta] | None = None,
     files_per_channel: int = 1,
+    tx_parallel: bool = False,
 ) -> dict[tuple[str, str], int]:
-    """Write EVERY table channel's statement batch with O(1) Spark jobs.
+    """Write one wire batch's statements for every channel of the replay
+    mode with O(1) Spark jobs, under ``<out_root>/<channel>/batch-NNNNNN/``
+    (``db.table`` per table, or ``all`` in transaction-parallel mode).
 
-    Looping :func:`per_table_statement_streams` through the per-channel
-    writer costs jobs LINEAR in the table count — one write action per
-    channel plus one AQE stage materialization per channel's tx-wrapper
-    aggregation; at the reference's 50-table config that is ~100 jobs of
-    serial driver work per batch, the generation bottleneck at a 500-table
-    deployment. This writer builds the same statement rows as one union
-    tagged by a ``channel`` column, wraps transactions for every channel in
-    ONE (channel, _tx) aggregation, range-partitions by (channel, offset)
-    and lets ONE dynamic-partitioned text write emit every channel's
-    range-ordered part files. The injected dynamic-partition sort is
-    satisfied by the explicit (channel, offset) sort, so within-channel
-    offset order is preserved (asserted by the cross-writer equivalence
-    test, which also pins row-for-row equality with the per-channel path).
+    Returns ``{key: statement_count}`` keyed ``(db, table)``, or ``("",
+    "")`` for the transaction-parallel channel (0 for skipped
+    redeliveries). See :func:`_write_channels` for the write itself."""
+    channels = _channels(specs, tx_parallel)
+    return _write_channels(
+        lambda keys: _channel_rows(
+            wire_df, [channels[k] for k in keys], schema_mapping, dialect,
+            metas,
+        ),
+        {k: ch.name for k, ch in channels.items()},
+        out_root, batch_id, files_per_channel,
+    )
 
-    Layout and receipts match the per-channel writer exactly
-    (``<out_root>/<db.table>/batch-NNNNNN/part-* + _done``), so
-    :func:`apply_statement_stream` consumes either writer's output.
-    Channels whose receipt already exists are EXCLUDED from the job
-    (idempotent redelivery, per channel); empty channels get an empty
-    directory with a 0-statement receipt. Per-channel statement counts and
-    the one-statement-per-line guard ride the single write as O(channels)
-    fixed-width conditional sums on one Observation.
 
-    Returns ``{(db, table): statement_count}`` (0 for skipped redeliveries).
-    """
-    specs = list(specs)
-    if not specs:
-        return {}
+def write_statement_stream(
+    stmt_df: DataFrame, out_dir: str, batch_id: int, files_per_channel: int = 1
+) -> int:
+    """Write one statement stream (:func:`statement_stream`) as
+    ``<out_dir>/batch-NNNNNN/`` — the writer's one-channel call: the
+    channel is ``out_dir``'s last path component under its parent.
+
+    Returns the statement count (0 for a skipped redelivery)."""
+    out_root, name = os.path.split(os.path.normpath(out_dir))
+    return _write_channels(
+        lambda _: stmt_df.select(F.lit(name).alias("channel"), "*"),
+        {name: name}, out_root, batch_id, files_per_channel,
+    )[name]
+
+
+def _write_channels(
+    build, names: dict, out_root: str, batch_id: int, files_per_channel: int
+) -> dict:
+    """THE statement writer: every pending channel's range-ordered part
+    files in ONE write action, then one ``_done`` receipt per channel.
+
+    ``names`` maps each channel key to its name; ``build(keys)`` returns
+    the listed channels' statement rows, tagged by a ``channel`` column.
+    A channel whose receipt already exists is EXCLUDED from the job
+    (idempotent redelivery per channel — the statement-file analog of the
+    offset fence, JdbcDbWriter's breakpoint table). The rows are
+    range-partitioned by (channel, offset) and ONE dynamic-partitioned text
+    write emits every channel's part files; its injected sort is satisfied
+    by the explicit (channel, offset) sort, so each channel's part files
+    are range-ordered and their concatenation is its total replay order.
+    Per-channel statement counts and the one-statement-per-line guard ride
+    the write as O(channels) fixed-width conditional sums on one
+    Observation. An empty channel gets an empty directory with a
+    0-statement receipt.
+
+    Looping a per-channel writer instead would cost jobs LINEAR in the
+    channel count — one write action plus one AQE stage materialization
+    per channel's tx-wrapper aggregation; at the reference's 50-table
+    config that is ~100 serially planned and scheduled jobs per batch.
+
+    Returns ``{key: statement_count}`` (0 for skipped redeliveries)."""
     from pyspark.sql import Observation
 
-    mapping = dict(schema_mapping or {})
-    metas = dict(metas or {})
-    keys = sorted((s.db, s.table) for s in specs)
-    by_key = {(s.db, s.table): s for s in specs}
-    cids = {k: f"{k[0]}.{k[1]}" for k in keys}
     batch_name = f"batch-{batch_id:06d}"
     pending = [
-        k for k in keys
+        k for k in names
         if not os.path.exists(
-            os.path.join(out_root, cids[k], batch_name, "_done")
+            os.path.join(out_root, names[k], batch_name, "_done")
         )
     ]
-    counts: dict[tuple[str, str], int] = {k: 0 for k in keys}
+    counts = {k: 0 for k in names}
     if not pending:
         return counts
-
-    union = None
-    for k in pending:
-        spec = by_key[k]
-        table_rows = wire_df.where(
-            (F.col("source.db") == spec.db)
-            & (F.col("source.table") == spec.table)
-        )
-        part = (
-            _spec_dml_rows(table_rows, spec, mapping, dialect, metas)
-            .unionByName(_wire_ddl_rows(table_rows, mapping))
-            .select(F.lit(cids[k]).alias("channel"), "*")
-        )
-        union = part if union is None else union.unionByName(part)
-    union = _wrap_tx_channels(union)
+    union = build(pending)
 
     obs = Observation(f"stmt-streams-{batch_id}")
     metrics = [
         F.sum(
-            F.when(F.col("channel") == cids[k], 1).otherwise(0)
+            F.when(F.col("channel") == names[k], 1).otherwise(0)
         ).alias(f"n_{i}")
         for i, k in enumerate(pending)
     ]
     metrics.append(
+        # transport invariant: one statement per line. The literal/DDL
+        # escape rules (sqlgen, _ddl_stmt_rows) make this structural; this
+        # guard rides the SAME observation (no extra job) and fails loudly
+        # if a future statement source regresses it.
         F.sum(
             F.when(F.col("stmt").rlike("[\\n\\r]"), 1).otherwise(0)
         ).alias("multiline")
@@ -503,11 +446,11 @@ def write_statement_streams(
 
     for i, k in enumerate(pending):
         counts[k] = int(vals[f"n_{i}"] or 0)
-        dst = os.path.join(out_root, cids[k], batch_name)
+        dst = os.path.join(out_root, names[k], batch_name)
         if os.path.exists(dst):  # partial leftovers from a crashed write
             _shutil.rmtree(dst)
         os.makedirs(os.path.dirname(dst), exist_ok=True)
-        src_name = part_dirs.get(cids[k])
+        src_name = part_dirs.get(names[k])
         if src_name is not None:
             os.replace(os.path.join(tmp_root, src_name), dst)
         elif counts[k]:
@@ -516,7 +459,7 @@ def write_statement_streams(
             # withhold _done so the batch is retried, and keep tmp_root
             # for inspection
             raise RuntimeError(
-                f"statement stream batch {batch_id}: channel {cids[k]!r} "
+                f"statement stream batch {batch_id}: channel {names[k]!r} "
                 f"observed {counts[k]} statement(s) but no partition "
                 f"directory was written under {tmp_root!r} — receipt "
                 "withheld"
@@ -614,8 +557,9 @@ def apply_statement_stream(
     subsequent unit. Statements within
     one call share one session, sequentially — parallelism comes from
     applying different TABLES' batch directories on different sessions
-    (:func:`per_table_statement_streams`), exactly the reference's
-    per-table work threads; this function is one ordered channel.
+    (the table-parallel channels of :func:`write_statement_streams`),
+    exactly the reference's per-table work threads; this function is one
+    ordered channel.
 
     Idempotent on redelivery: a batch directory already applied (its
     ``_applied`` marker exists) is skipped and the recorded counts are

@@ -45,7 +45,7 @@ from debezium_spark.operators.schema_evolution import (
     replay_schema_history,
 )
 from debezium_spark.plans.exprs import TableExprs, TailProbe
-from debezium_spark.plans.merge import merge_changes
+from debezium_spark.plans.merge import _heartbeat_lineage, merge_changes
 from debezium_spark.plans.table import LakeTable
 from debezium_spark.schema import BARRIER_OPS, offset_key
 from debezium_spark.schema import OP_PATH as PATH_OP
@@ -759,13 +759,7 @@ class CdcEngine:
         cur = self.table.fence()
         if cur is not None and offset_key(*fence) <= offset_key(*cur):
             return None
-        self.table.commit_buckets(
-            {},
-            [],
-            fence,
-            [{"batch": "heartbeat", "bucket": -1, "events": 0, "deletes": 0,
-              "upserts": 0, "heartbeat": True, "fence_pos": fence[1]}],
-        )
+        self.table.commit_buckets({}, [], fence, _heartbeat_lineage("heartbeat", fence))
         if self.committer:
             # liveness line: counters unchanged, timestamp fresh — the
             # reference's idle reporter keeps emitting so controllers can

@@ -253,13 +253,25 @@ class MultiTableEngine:
         #: spec list drops a table must stop capturing it (include-list
         #: semantics; review r5 finding #2)
         self._ledgered: set[tuple[str, str]] = set()
+        # registering creates a missing table, so a static spec without one
+        # waits until recovery has left its key live: the catalog may have
+        # dropped it or renamed it away before this restart
+        unborn = []
         for spec in specs:
-            self._register(spec)
+            if os.path.isdir(os.path.join(self.root, spec.db, spec.table)):
+                self._register(spec)
+            else:
+                unborn.append(spec)
         # replay persisted catalog mutations (mid-stream CREATE/DROP/RENAME
         # survive a restart — ADVICE r3 #1: without this a dropped table
         # silently resumed capture and a created/renamed table's events
         # silently vanished under include-list semantics)
         self.recover_catalog()
+        for spec in unborn:
+            key = (spec.db, spec.table)
+            if (key not in self.specs and key not in self.retired
+                    and os.path.join(self.root, *key) not in self._live_roots()):
+                self._register(spec)
 
     # ---- catalog persistence (reference: schema-history recovery of
     # ---- Tables, AbstractDatabaseHistory.java) ---------------------------

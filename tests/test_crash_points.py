@@ -184,8 +184,9 @@ def test_crash_before_each_catalog_append_converges(spark, tmp_path, monkeypatch
     RENAME, RENAME into a new database then CREATE there, DROP, and a
     same-batch DROP;CREATE — restart with the original static specs and
     redeliver the batch: the registry (specs, roots, retired and
-    ledger-derived sets) and every table's rows must equal the uncrashed
-    run's, and a second redelivery must commit nothing."""
+    ledger-derived sets), every table's rows and the set of table
+    directories on disk must equal the uncrashed run's, and a second
+    redelivery must commit nothing."""
     import json
     import os
 
@@ -255,6 +256,12 @@ def test_crash_before_each_catalog_append_converges(spark, tmp_path, monkeypatch
     def committed(out):
         return [v for v in out.values() if v is not None]
 
+    def table_dirs(lake):
+        # every lake table directory, archived (@dropped.N) and fresh
+        # (@gen.N) incarnations included
+        return {os.path.relpath(d, lake)
+                for d, subdirs, _ in os.walk(lake) if "_manifests" in subdirs}
+
     lake = str(tmp_path / "clean")
     mte = start(lake)
     mte.apply_wire_batch(batch, "b0")
@@ -269,6 +276,7 @@ def test_crash_before_each_catalog_append_converges(spark, tmp_path, monkeypatch
     n_appends = len(ledger_read(os.path.join(lake, "_catalog.jsonl"))[1])
     assert n_appends == 7
     assert committed(mte.apply_wire_batch(batch, "b0")) == []
+    want_dirs = table_dirs(lake)
 
     real = multi_mod.ledger_append
     for k in range(n_appends):
@@ -293,3 +301,5 @@ def test_crash_before_each_catalog_append_converges(spark, tmp_path, monkeypatch
         # a second redelivery commits nothing, so the rows stay as checked
         assert committed(mte.apply_wire_batch(batch, "b0")) == [], k
         assert registry(mte, lake) == want_registry, k
+        # a restart creates no table the catalog has retired or re-keyed
+        assert table_dirs(lake) == want_dirs, k

@@ -649,7 +649,7 @@ class TestStatementStream:
         meta = table_meta_from_schema("sink1", "widgets", PAYLOAD, ["id"])
         stream = statement_stream(self._stream_df(spark), meta, {"db1": "sink1"})
         out_dir = str(tmp_path / "stmts")
-        n = write_statement_stream(stream, out_dir, batch_id=7, n_files=3)
+        n = write_statement_stream(stream, out_dir, batch_id=7, files_per_channel=3)
         assert n == 9
         parts = sorted(glob.glob(os.path.join(out_dir, "batch-000007", "part-*")))
         lines = []
@@ -687,7 +687,7 @@ class TestStatementStream:
         meta = table_meta_from_schema("sink1", "widgets", PAYLOAD, ["id"])
         stream = statement_stream(env, meta, {"db1": "sink1"})
         out_dir = str(tmp_path / "stmts")
-        n = write_statement_stream(stream, out_dir, batch_id=1, n_files=2)
+        n = write_statement_stream(stream, out_dir, batch_id=1, files_per_channel=2)
         lines = []
         for p in sorted(glob.glob(os.path.join(out_dir, "batch-000001", "part-*"))):
             with open(p) as f:
@@ -811,7 +811,7 @@ class TestDuckDbReplayE2E:
         )
         stream = statement_stream(env, meta)
         out_dir = str(tmp_path / "stmts")
-        n = write_statement_stream(stream, out_dir, batch_id=0, n_files=4)
+        n = write_statement_stream(stream, out_dir, batch_id=0, files_per_channel=4)
         assert n == len(self._events()) + 2 * 4  # 9 DML + begin/commit × 4 txs
         parts = sorted(glob.glob(os.path.join(out_dir, "batch-000000", "part-*")))
         lines = []
@@ -1026,40 +1026,43 @@ class TestStatementStreamMulti:
             TableSpec("db1", "tags", tags_schema, ["id"]),
         ]
 
-    def test_routing_order_and_cross_table_tx(self, spark):
-        from debezium_spark.sink import statement_stream_multi
+    #: the transaction-parallel channel's statements in replay order
+    TX_PARALLEL_STMTS = [
+        "begin;",
+        'insert into "sink1"."files" values (\'r1\', \'a.py\', \'c1\', \'py\', \'v1\');',
+        'insert into "sink1"."tags" values (7, \'x\');',
+        'insert into "sink1"."files" values (\'r2\', \'b.py\', \'c2\', \'py\', \'v2\');',
+        "commit;",
+        "set current_schema to sink1;",
+        "alter table `files` add note int",
+        # tx-b: the ghost-table row is dropped, so the wrapper bounds
+        # shrink to the surviving statement at pos 6
+        "begin;",
+        'update "sink1"."tags" set "id" = 7, "label" = \'y\' where "id" = 7;',
+        "commit;",
+        'delete from "sink1"."files" where "repo" = \'r1\' and "path" = \'a.py\';',
+    ]
 
-        out = statement_stream_multi(
-            self._wire(spark), self._specs(), {"db1": "sink1"}
+    def _tx_parallel(self, spark):
+        from debezium_spark.sink import channel_statements
+
+        return channel_statements(
+            self._wire(spark), self._specs(), {"db1": "sink1"},
+            tx_parallel=True,
         ).orderBy("file", "pos", "sub", "seq")
-        stmts = [r.stmt for r in out.collect()]
-        assert stmts == [
-            "begin;",
-            'insert into "sink1"."files" values (\'r1\', \'a.py\', \'c1\', \'py\', \'v1\');',
-            'insert into "sink1"."tags" values (7, \'x\');',
-            'insert into "sink1"."files" values (\'r2\', \'b.py\', \'c2\', \'py\', \'v2\');',
-            "commit;",
-            "set current_schema to sink1;",
-            "alter table `files` add note int",
-            # tx-b: the ghost-table row is dropped, so the wrapper bounds
-            # shrink to the surviving statement at pos 6
-            "begin;",
-            'update "sink1"."tags" set "id" = 7, "label" = \'y\' where "id" = 7;',
-            "commit;",
-            'delete from "sink1"."files" where "repo" = \'r1\' and "path" = \'a.py\';',
-        ]
+
+    def test_routing_order_and_cross_table_tx(self, spark):
+        rows = self._tx_parallel(spark).collect()
+        assert {r.channel for r in rows} == {"all"}
+        stmts = [r.stmt for r in rows]
+        assert stmts == self.TX_PARALLEL_STMTS
         # cross-table tx-a wraps exactly once
         assert stmts.count("begin;") == 2
 
     def test_duckdb_apply_two_tables(self, spark):
         import duckdb
 
-        from debezium_spark.sink import statement_stream_multi
-
-        out = statement_stream_multi(
-            self._wire(spark), self._specs(), {"db1": "sink1"}
-        ).orderBy("file", "pos", "sub", "seq")
-        stmts = [r.stmt for r in out.collect()]
+        stmts = [r.stmt for r in self._tx_parallel(spark).collect()]
 
         con = duckdb.connect()
         con.execute("create schema sink1")
@@ -1079,9 +1082,10 @@ class TestStatementStreamMulti:
 
 
 class TestWriteStatementStreams:
-    """The single-job multi-channel writer: byte-identical output to the
-    per-channel writer, O(1) Spark jobs in the channel count, per-channel
-    idempotent redelivery, empty-channel receipts."""
+    """The single-job multi-channel writer: each channel's part files equal
+    the rows channel_statements builds for that channel in replay order,
+    O(1) Spark jobs in the channel count, per-channel idempotent
+    redelivery, empty-channel receipts."""
 
     @staticmethod
     def _channel_lines(root, cid, batch="batch-000000"):
@@ -1105,22 +1109,19 @@ class TestWriteStatementStreams:
         import os as _os
 
         from debezium_spark.sink import (
-            per_table_statement_streams,
-            write_statement_stream,
+            channel_statements,
             write_statement_streams,
         )
 
         multi = TestStatementStreamMulti()
         wire, specs = multi._wire(spark), multi._specs()
-        streams = per_table_statement_streams(wire, specs, {"db1": "sink1"})
-
-        # reference output: the per-channel writer, one dir per table
-        ref_root = str(tmp_path / "ref")
-        for (db, tbl), df in streams.items():
-            write_statement_stream(
-                df, _os.path.join(ref_root, f"{db}.{tbl}"), batch_id=0,
-                n_files=1,
-            )
+        # reference output: channel_statements' rows per channel in order
+        ref: dict[str, list[str]] = {}
+        for r in sorted(
+            channel_statements(wire, specs, {"db1": "sink1"}).collect(),
+            key=lambda r: (r.file, r.pos, r.sub, r.seq),
+        ):
+            ref.setdefault(r.channel, []).append(r.stmt)
 
         # single-action writer: job count must not grow with channel width
         # (AQE stage materialization + range sampling cost a few fixed jobs)
@@ -1149,9 +1150,10 @@ class TestWriteStatementStreams:
             "@12ch (want O(1) in channel count)"
         )
 
-        for (db, tbl) in streams:
+        assert set(counts) == {(s.db, s.table) for s in specs}
+        for (db, tbl) in counts:
             cid = f"{db}.{tbl}"
-            want = self._channel_lines(ref_root, cid)
+            want = ref[cid]
             got = self._channel_lines(got_root, cid)
             assert got == want, f"channel {cid} diverged"
             with open(_os.path.join(got_root, cid, "batch-000000", "_done")) as f:
@@ -1230,32 +1232,40 @@ class TestSinkConfig:
         with _pytest.raises(ValueError, match="positive"):
             SinkConfig.from_properties({"max.thread.count": "0"})
 
-    def test_mode_selection_routes_to_the_matching_stream_builder(self, spark):
-        from debezium_spark.sink import SinkConfig
+    def test_mode_selection_routes_to_the_matching_stream_builder(
+        self, spark, tmp_path
+    ):
+        from debezium_spark.sink import SinkConfig, write_statement_streams
 
         multi = TestStatementStreamMulti()
         wire, specs = multi._wire(spark), multi._specs()
         props = {"schema.mappings": "db1:sink1"}
 
+        def write(cfg, root):
+            return write_statement_streams(
+                wire, specs, str(root), batch_id=0,
+                schema_mapping=cfg.schema_mappings, dialect=cfg.dialect,
+                tx_parallel=cfg.tx_parallel,
+            )
+
         # default: table-parallel (provide.transaction.metadata=false)
-        table_mode = SinkConfig.from_properties(props).statement_streams(
-            wire, specs
-        )
+        table_mode = write(SinkConfig.from_properties(props), tmp_path / "t")
         assert set(table_mode) == {("db1", "files"), ("db1", "tags")}
 
-        # tx-parallel: one whole-tx channel, identical to the unified stream
-        tx_mode = SinkConfig.from_properties(
-            {**props, "provide.transaction.metadata": "true"}
-        ).statement_streams(wire, specs)
+        # tx-parallel: one whole-tx channel under all/, identical to the
+        # transaction-parallel stream
+        tx_mode = write(
+            SinkConfig.from_properties(
+                {**props, "provide.transaction.metadata": "true"}
+            ),
+            tmp_path / "x",
+        )
         assert set(tx_mode) == {("", "")}
-        from debezium_spark.sink import statement_stream_multi
-
-        unified = statement_stream_multi(wire, specs, {"db1": "sink1"})
-        got = [r.stmt for r in tx_mode[("", "")].orderBy(
-            "file", "pos", "sub", "seq").collect()]
-        want = [r.stmt for r in unified.orderBy(
-            "file", "pos", "sub", "seq").collect()]
-        assert got == want
+        got = TestWriteStatementStreams._channel_lines(
+            str(tmp_path / "x"), "all"
+        )
+        assert got == TestStatementStreamMulti.TX_PARALLEL_STMTS
+        assert tx_mode[("", "")] == len(got)
 
 
 class TestApplyStatementStream:
@@ -1396,7 +1406,7 @@ class TestApplyStatementStream:
         env = TestStatementStream()._stream_df(spark)
         stream = statement_stream(env, meta, {"db1": "sink1"})
         out_dir = str(tmp_path / "stmts")
-        write_statement_stream(stream, out_dir, batch_id=0, n_files=2)
+        write_statement_stream(stream, out_dir, batch_id=0, files_per_channel=2)
 
         con = duckdb.connect()
         con.execute("create schema sink1")
@@ -1434,22 +1444,18 @@ class TestApplyStatementStream:
 
         from debezium_spark.sink import (
             apply_statement_stream,
-            per_table_statement_streams,
-            write_statement_stream,
+            write_statement_streams,
         )
 
         multi = TestStatementStreamMulti()
-        streams = per_table_statement_streams(
-            multi._wire(spark), multi._specs(), {"db1": "sink1"}
+        root = str(tmp_path / "out")
+        counts = write_statement_streams(
+            multi._wire(spark), multi._specs(), root, batch_id=0,
+            schema_mapping={"db1": "sink1"}, files_per_channel=2,
         )
-        assert set(streams) == {("db1", "files"), ("db1", "tags")}
+        assert set(counts) == {("db1", "files"), ("db1", "tags")}
 
-        files = [
-            r.stmt
-            for r in streams[("db1", "files")]
-            .orderBy("file", "pos", "sub", "seq")
-            .collect()
-        ]
+        files = TestWriteStatementStreams._channel_lines(root, "db1.files")
         # tx-a's files fragment wraps pos 1..3; the tags insert at pos 2 is
         # NOT in this channel (per-table fragment, not the whole tx)
         assert files == [
@@ -1461,12 +1467,7 @@ class TestApplyStatementStream:
             "alter table `files` add note int",
             'delete from "sink1"."files" where "repo" = \'r1\' and "path" = \'a.py\';',
         ]
-        tags = [
-            r.stmt
-            for r in streams[("db1", "tags")]
-            .orderBy("file", "pos", "sub", "seq")
-            .collect()
-        ]
+        tags = TestWriteStatementStreams._channel_lines(root, "db1.tags")
         assert tags == [
             "begin;",
             'insert into "sink1"."tags" values (7, \'x\');',
@@ -1476,8 +1477,8 @@ class TestApplyStatementStream:
             "commit;",
         ]
 
-        # write each channel to its own directory and apply both — the
-        # final state matches the unified stream's DuckDB apply
+        # apply each channel's batch — the final state matches the
+        # unified stream's DuckDB apply
         con = duckdb.connect()
         con.execute("create schema sink1")
         con.execute(
@@ -1491,11 +1492,9 @@ class TestApplyStatementStream:
                 return con.execute("set schema = 'sink1'")
             return con.execute(sql.replace("`", '"'))
 
-        for i, ((db, tbl), df) in enumerate(sorted(streams.items())):
-            out_dir = str(tmp_path / f"{db}.{tbl}")
-            write_statement_stream(df, out_dir, batch_id=0, n_files=2)
+        for db, tbl in sorted(counts):
             s, f = apply_statement_stream(
-                os.path.join(out_dir, "batch-000000"), execute
+                os.path.join(root, f"{db}.{tbl}", "batch-000000"), execute
             )
             assert f == 0
         assert con.execute(

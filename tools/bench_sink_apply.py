@@ -4,9 +4,10 @@ engine, at the reference's own published config.
 The reference's headline sink number is ~30k tps measured in TABLE-PARALLEL
 replay mode at 50 tables / 50 work threads on a 2-socket Kunpeng-920
 (``/root/reference/README.md:407,691``). This experiment reproduces that
-shape end-to-end: a mixed 50-table wire batch → ``per_table_statement_streams``
-(one order-safe channel per table, ``TableReplayTask`` analog) → range-ordered
-statement files → ``apply_statement_stream`` on N concurrent DuckDB sessions
+shape end-to-end: a mixed 50-table wire batch → ``write_statement_streams``
+in table-parallel mode (one order-safe channel per table, ``TableReplayTask``
+analog, every channel's range-ordered statement files in one write action)
+→ ``apply_statement_stream`` on N concurrent DuckDB sessions
 (one per table channel, ``duckdb.Connection.cursor()`` per thread — the
 documented multi-thread pattern).
 

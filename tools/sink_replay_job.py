@@ -17,8 +17,9 @@ Usage (cluster):
 (``schema.mappings``, ``provide.transaction.metadata``, ``fail.sql.path``,
 ``max.thread.count``, ``record.breakpoint.table`` — see
 ``debezium_spark.sink.config``). ``provide.transaction.metadata=true``
-emits ONE whole-transaction stream; the default emits one order-safe
-channel per table (the reference's table-parallel mode).
+emits ONE whole-transaction stream under ``<out>/all/``; the default emits
+one order-safe channel per table under ``<out>/<db.table>/`` (the
+reference's table-parallel mode). One writer call serves both modes.
 
 Idempotent like the source job: a batch directory already carrying its
 ``_done`` receipt is skipped by the writer; an applied channel batch is
@@ -62,7 +63,6 @@ def main() -> None:
     from debezium_spark.sink import (
         SinkConfig,
         apply_statement_stream,
-        write_statement_stream,
         write_statement_streams,
     )
     from debezium_spark.streaming.multi import TableSpec
@@ -115,22 +115,16 @@ def main() -> None:
     total_stmts = 0
     t0 = time.perf_counter()
     for bid, batch in enumerate(batches):
-        wire = spark.read.parquet(os.path.join(args.wire_dir, batch))
-        if cfg.tx_parallel:
-            for (db, tbl), df in sorted(cfg.statement_streams(wire, specs).items()):
-                channel = f"{db}.{tbl}" if tbl else "all"
-                total_stmts += write_statement_stream(
-                    df, os.path.join(args.out, channel), batch_id=bid
-                )
-        else:
-            # table-parallel: every channel in ONE write action (job count
-            # O(1) in the table width — see write_statement_streams)
-            total_stmts += sum(
-                write_statement_streams(
-                    wire, specs, args.out, batch_id=bid,
-                    schema_mapping=cfg.schema_mappings, dialect=cfg.dialect,
-                ).values()
-            )
+        # every channel of the configured mode in ONE write action (job
+        # count O(1) in the table width — see write_statement_streams)
+        total_stmts += sum(
+            write_statement_streams(
+                spark.read.parquet(os.path.join(args.wire_dir, batch)),
+                specs, args.out, batch_id=bid,
+                schema_mapping=cfg.schema_mappings, dialect=cfg.dialect,
+                tx_parallel=cfg.tx_parallel,
+            ).values()
+        )
     gen_sec = time.perf_counter() - t0
 
     # keyed on Spark simpleString() names: LongType → "bigint",
