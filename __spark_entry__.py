@@ -332,7 +332,8 @@ def q_pk_change_split(spark, sf_dir):
     from debezium_spark.operators.apply import split_pk_changes
 
     pkc = (F.col("op") == "u") & (F.pmod(F.col("user_id"), F.lit(7)) == 3)
-    env = _env_struct(spark, sf_dir, pkc_expr=pkc)
+    # split=False: pure per-row map — the input spread only adds an exchange
+    env = _env_struct(spark, sf_dir, pkc_expr=pkc, split=False)
     split = split_pk_changes(env, ["repo", "path"], tombstones_on_delete=True)
     return split.select(
         F.col("source.pos").alias("pos"),

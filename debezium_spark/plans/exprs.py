@@ -19,9 +19,22 @@ state it was built from changes:
 Sections that also depend on an engine setting or on the batch's shape —
 ``salt_factor``, ``tombstones_on_delete``, the envelope's payload fields, the
 change-set's columns — keep one entry each, keyed on that input, and are
-rebuilt when it changes. Filters that carry a per-batch literal (the
-tail-transaction boundary, the touched-bucket ``isin``, DDL segment bounds)
+rebuilt when it changes. Filters that carry a per-batch value (the
+tail-transaction boundary, compaction's bucket set, DDL segment bounds)
 stay per batch.
+
+Per-batch values stay out of generated code. ``Literal.doGenCode`` writes
+int and long literals into the Java source, and Spark's codegen cache is
+keyed on that source, so a filter such as ``pos <= 16009`` compiles fresh
+whole-stage classes for every batch that moves the value. On a 5-epoch
+``trickle_stream`` window (4-CPU host) Janino compiled 64 classes, 52 of
+them because of three such filters: the tail split's two halves and
+compaction's bucket number, each class compiled twice. ``at_most`` and
+``one_of`` build those filters over a struct or array literal instead: the
+optimizer folds either into one ``Literal`` that the generated class holds
+in its ``references`` array, so the source, and with it the compiled class,
+is the same for every batch (20 compilations in the same window). The rare
+DDL segment bounds stay plain.
 
 Columns belong to the JVM of the session that built them, and
 ``MultiTableEngine`` applies its tables from pool threads, which is why the
@@ -43,6 +56,19 @@ from debezium_spark.operators.apply import dedupe_cols, pk_split_cols
 from debezium_spark.operators.quarantine import reason_col
 from debezium_spark.plans.table import bucket_expr
 from debezium_spark.schema import BARRIER_OPS, CONTROL_OPS
+
+
+def at_most(col: Column, bound: int) -> Column:
+    """``col <= bound`` for a long ``col``, with ``bound`` kept out of the
+    generated source (see the module docstring). Also TRUE where ``col`` is
+    null: ``struct(NULL)`` sorts before every struct of a value."""
+    return F.struct(col.alias("v")) <= F.struct(F.lit(bound).cast("long").alias("v"))
+
+
+def one_of(col: Column, values: list[int]) -> Column:
+    """``col IN (values)`` with the values kept out of the generated source:
+    ``In`` inlines each element, an array literal is one reference."""
+    return F.array_contains(F.array(*[F.lit(v) for v in values]), col)
 
 
 def _tie_hash_inputs(payload: StructType, cols: list[str]) -> list[Column]:
@@ -68,7 +94,7 @@ def _tie_hash_inputs(payload: StructType, cols: list[str]) -> list[Column]:
 
 class TailProbe:
     """The fused per-batch probe's aggregates (``streaming.engine.
-    fused_tail_probe``) and the tail-run split's column references.
+    fused_tail_probe``) and the tail-run split's column reference.
 
     ``flags``: named boolean columns folded into the same job — each yields
     a global max under its name plus the tail group's own value under
@@ -84,10 +110,6 @@ class TailProbe:
     @cached_property
     def pos(self) -> Column:
         return F.col("source.pos")
-
-    @cached_property
-    def pos_null(self) -> Column:
-        return self.pos.isNull()
 
     @cached_property
     def per_tx(self) -> tuple[Column, list[Column]]:

@@ -357,8 +357,16 @@ class LakeTable:
         so future deltas still order correctly). A maintenance commit — the
         fence is untouched, so it can run any time, including between a
         crash and a resume. Iceberg analog: rewrite_data_files +
-        positional-delete compaction."""
-        import uuid as _uuid
+        positional-delete compaction.
+
+        One exchange: ``_bucket`` is a function of the keys, so the rows
+        are hash-partitioned by ``_bucket`` once and the per-key aggregate
+        (grouped by ``_bucket`` and the keys) runs inside those partitions;
+        the ``partitionBy("_bucket")`` write needs no further shuffle.
+        Skew stays bounded: base rows are unique per key, each delta dir is
+        deduped per batch and a bucket holds at most ``compact_depth`` of
+        them, and the write already ran one task per bucket."""
+        from debezium_spark.plans.exprs import one_of
 
         if self.mode != "mor":
             return None
@@ -381,17 +389,16 @@ class LakeTable:
         # winner, so it must be the winner every read elects (final review
         # r5) — here the winner keeps its _pos
         resolved = (
-            raw.groupBy(*x.keys)
+            raw.withColumn("_bucket", x.bucket)
+            .filter(one_of(x.bucket_col, sorted(todo)))
+            .repartition(x.bucket_col)
+            .groupBy(x.bucket_col, *x.keys)
             .agg(x.last_wins)
             .filter(x.live)
-            .select(*x.compacted)
-            .withColumn("_bucket", x.bucket)
-            .filter(x.bucket_col.isin(list(todo)))
+            .select(*x.compacted, x.bucket_col)
         )
-        out_dir = os.path.join(self.root, "data", f"compact-{_uuid.uuid4().hex}")
-        resolved.repartition(x.bucket_col).write.partitionBy("_bucket").mode(
-            "overwrite"
-        ).parquet(out_dir)
+        out_dir = os.path.join(self.root, "data", f"compact-{uuid.uuid4().hex}")
+        resolved.write.partitionBy("_bucket").mode("overwrite").parquet(out_dir)
 
         new_vals: dict[int, dict] = {b: {"base": [], "delta": []} for b in todo}
         for b, path in iter_bucket_subdirs(out_dir):
@@ -691,25 +698,26 @@ class LakeTable:
     def expire_versions(self, keep_last: int = 2) -> None:
         """Drop old manifests and data dirs unreferenced by kept versions
         (Iceberg snapshot expiration; reference analog: breakpoint ledger
-        compaction, README.md:332)."""
+        compaction, README.md:332). O(dirs + referenced): the kept
+        versions' bucket paths fold into one set of the top-level ``data/``
+        directories they live in (a write's ``_bucket=N`` subdirectories
+        share one), and every other directory goes."""
         names = sorted(
             fn for fn in os.listdir(self._mdir) if fn.startswith("v") and fn.endswith(".json")
         )
         if len(names) <= keep_last:
             return
         keep = names[-keep_last:]
-        referenced: set[str] = set()
+        data_root = os.path.join(self.root, "data")
+        live: set[str] = set()
         for fn in keep:
             with open(os.path.join(self._mdir, fn)) as f:
                 for val in json.load(f)["buckets"].values():
                     base, delta = self._bucket_dirs(val)
-                    referenced.update(base)
-                    referenced.update(delta)
-        data_root = os.path.join(self.root, "data")
+                    for path in base + delta:
+                        live.add(os.path.relpath(path, data_root).split(os.sep, 1)[0])
         for vdir in os.listdir(data_root):
-            full = os.path.join(data_root, vdir)
-            live = any(r.startswith(full) for r in referenced)
-            if not live:
-                shutil.rmtree(full, ignore_errors=True)
+            if vdir not in live:
+                shutil.rmtree(os.path.join(data_root, vdir), ignore_errors=True)
         for fn in names[:-keep_last]:
             os.remove(os.path.join(self._mdir, fn))

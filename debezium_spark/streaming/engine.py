@@ -22,15 +22,22 @@ Transaction alignment is ONE protocol for every entry path (``replay``,
 ``fused_tail_probe`` row, the carry's meta and end-of-log into a fence, a
 tail boundary and the next carry's meta; the carry owner ``TxCarry`` loads,
 unions, splits, persists and clears ``<root>/_tx_carry/vN`` together with
-its ``_carry_meta.json``.
+its ``_carry_meta.json``. The deferred rows are written on a carry writer
+thread while the step commits, into a pending directory that becomes
+``vN+1`` only after the commits, so a crash anywhere in the step resumes
+from ``vN`` (``TxCarry.step``).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import time as _time
+import uuid
 from collections.abc import Callable
+from concurrent.futures import Future, ThreadPoolExecutor
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -44,7 +51,7 @@ from debezium_spark.operators.schema_evolution import (
     parse_ddl,
     replay_schema_history,
 )
-from debezium_spark.plans.exprs import TableExprs, TailProbe
+from debezium_spark.plans.exprs import TableExprs, TailProbe, at_most
 from debezium_spark.plans.merge import _heartbeat_lineage, merge_changes
 from debezium_spark.plans.table import LakeTable
 from debezium_spark.schema import BARRIER_OPS, offset_key
@@ -69,14 +76,17 @@ def split_open_tail_tx(
     Returns (closed, deferred): the rows with pos <= ``boundary`` and the
     open tail run beyond it (``plan_tail`` finds the boundary). A pure plan
     transform, no Spark job. ``tail``: the caller's ``TailProbe``, whose
-    column references the split filters reuse (only the boundary literal
-    is per batch)."""
-    # null-pos poison records ride with the CLOSED part — a bare pos<=b
-    # filter is NULL for them and they would vanish before ever reaching
-    # quarantine ('one bad row never wedges OR vanishes')
-    closed = env.filter((tail.pos <= boundary) | tail.pos_null)
-    deferred = env.filter(tail.pos > boundary)
-    return closed, deferred
+    column reference the split filters reuse (only the boundary is per
+    batch).
+
+    The two halves are exact complements: the closed filter is ``at_most``
+    and the deferred one its negation, so neither puts the boundary into
+    generated code. ``at_most`` is TRUE for null-pos poison records, which
+    therefore ride with the CLOSED part into quarantine — a bare
+    ``pos <= b`` is NULL for them and they would vanish ('one bad row never
+    wedges OR vanishes')."""
+    closed = at_most(tail.pos, boundary)
+    return env.filter(closed), env.filter(~closed)
 
 
 def fused_tail_probe(env: DataFrame, probe: TailProbe) -> dict:
@@ -186,6 +196,10 @@ def plan_tail(mm: dict | None, cm: dict | None, final: bool) -> TailPlan:
     return TailPlan((mm["f"], boundary), boundary, False, nd, nb, has, meta)
 
 
+#: prefix of a staged carry write under ``_tx_carry/`` (never a version)
+PENDING = "pending-"
+
+
 def _carry_versions(root: str) -> list[tuple[int, str]]:
     base = os.path.join(root, "_tx_carry")
     out = []
@@ -199,51 +213,12 @@ def _carry_versions(root: str) -> list[tuple[int, str]]:
     return sorted(out)
 
 
-def persist_tx_carry(
-    spark: SparkSession,
-    carry: DataFrame | None,
-    root: str,
-    meta: dict | None = None,
-) -> DataFrame | None:
-    """Materialize the open-tail-transaction carry under
-    ``<root>/_tx_carry/vN``.
-
-    Two jobs in one: (1) lineage truncation — without it each batch nests
-    another union+filter over every earlier batch's source (O(N) plan depth,
-    O(N²) cumulative re-reads on a long stream); (2) crash recovery for
-    callers whose source will NOT redeliver the batch (a streaming
-    checkpoint advances past the epoch even though the carry rows were never
-    committed — batch-file replay can re-split deterministically, streaming
-    cannot).
-
-    Versioned: the NEW carry writes to vN+1, then older versions delete —
-    never overwrite-in-place, because (a) the new carry's own lineage reads
-    vN, and (b) the caller persists AFTER its commits, so a crash mid-epoch
-    leaves vN intact for the redelivered epoch to resume from (the correct
-    recovery point is the PRE-epoch carry). ``None`` clears everything.
-    Returns the re-read (flat-scan) DataFrame, read with the schema just
-    written (inferring it would cost a Spark job per persist).
-
-    ``meta``: the carry's facts ``{"tx", "p", "nd", "nb"}`` (``plan_tail``)
-    — its transaction id, max pos, and barrier/bad flags — written as
-    ``_carry_meta.json`` inside the version dir (underscore-prefixed files
-    are invisible to the parquet reader). They let the NEXT batch plan its
-    split without probing the carry."""
-    import shutil
-
-    versions = _carry_versions(root)
-    if carry is None:
-        for _, p in versions:
-            shutil.rmtree(p, ignore_errors=True)
-        return None
-    nxt = (versions[-1][0] + 1) if versions else 1
-    d = os.path.join(root, "_tx_carry", f"v{nxt}")
-    carry.write.mode("overwrite").parquet(d)  # reads vN while writing vN+1
-    with open(os.path.join(d, "_carry_meta.json"), "w") as f:
-        json.dump(meta, f)
-    for _, p in versions:
-        shutil.rmtree(p, ignore_errors=True)
-    return spark.read.schema(carry.schema).parquet(d)
+def persist_tx_carry(carry: DataFrame, path: str) -> None:
+    """Write the open-tail-transaction carry's rows to ``path`` — one Spark
+    job, run on the carry writer thread while the step commits
+    (``TxCarry.split``). ``path`` is a pending directory that
+    ``TxCarry.settle`` publishes as the next version."""
+    carry.write.mode("overwrite").parquet(path)
 
 
 def load_tx_carry(spark: SparkSession, root: str) -> DataFrame | None:
@@ -255,8 +230,8 @@ def load_tx_carry(spark: SparkSession, root: str) -> DataFrame | None:
 
 
 def load_tx_carry_meta(root: str) -> dict | None:
-    """The persisted carry's meta (see ``persist_tx_carry``), or None when
-    there is no carry or it was written without one."""
+    """The persisted carry's meta (see ``TxCarry``), or None when there is
+    no carry or it was written without one."""
     versions = _carry_versions(root)
     if not versions:
         return None
@@ -271,9 +246,36 @@ class TxCarry:
     """THE owner of one engine's open-tail-transaction carry: the rows and
     meta held between batches, and ``<root>/_tx_carry/vN`` with its
     ``_carry_meta.json`` on disk. Every entry path runs the same protocol
-    through it: ``plan`` (probe → ``plan_tail``), ``split`` (carry union →
-    tail split), the caller's commit, then ``settle`` (persist the carry
-    the step leaves)."""
+    through it: ``plan`` (probe → ``plan_tail``), then ``step`` — ``split``
+    (carry union → tail split, and the deferred rows' write starts), the
+    caller's commit, ``settle`` (publish the carry the step leaves).
+
+    Why persist at all: (1) lineage truncation — without it each batch
+    nests another union+filter over every earlier batch's source (O(N)
+    plan depth, O(N²) cumulative re-reads on a long stream); (2) crash
+    recovery for callers whose source will NOT redeliver the batch (a
+    streaming checkpoint advances past the epoch even though the carry
+    rows were never committed — batch-file replay can re-split
+    deterministically, streaming cannot).
+
+    Staged write, publish after the commits: the deferred rows are written
+    by ``persist_tx_carry`` on one worker thread into
+    ``_tx_carry/pending-*`` while the step's commits run, so the write no
+    longer adds its time to the step. ``settle`` joins the writer
+    (re-raising its error), writes ``_carry_meta.json``, renames the
+    pending directory to ``vN+1``, deletes older versions and re-reads the
+    carry under the schema it wrote (inferring it would cost a job). Never
+    overwrite-in-place: both the commit's plan and the staged write read
+    ``vN``, and a crash anywhere before the rename resumes from ``vN``,
+    the carry as it was before the step. A drained carry clears the disk
+    (a stale one would re-merge old events over newer table state on
+    restart); a flush stages nothing. Pending directories left by a crash
+    are removed on ``load``.
+
+    The meta ``{"tx", "p", "nd", "nb"}`` (``plan_tail``) — the carry's
+    transaction id, max pos, and barrier/bad flags — lets the NEXT batch
+    plan its split without probing the carry (underscore-prefixed files
+    are invisible to the parquet reader)."""
 
     def __init__(self, spark: SparkSession, root: str) -> None:
         self.spark = spark
@@ -281,6 +283,8 @@ class TxCarry:
         self.df: DataFrame | None = None
         self.meta: dict | None = None
         self._loaded = False
+        #: (pending dir, writer future) of the step in flight
+        self._staged: tuple[str, Future] | None = None
 
     def load(self, tail: TailProbe) -> dict | None:
         """The carry's meta, reloading a persisted carry on first use (a
@@ -288,6 +292,11 @@ class TxCarry:
         once, one job, to rebuild it."""
         if not self._loaded:
             self._loaded = True
+            base = os.path.join(self.root, "_tx_carry")
+            if os.path.isdir(base):
+                for n in os.listdir(base):
+                    if n.startswith(PENDING):  # a crash before its publish
+                        shutil.rmtree(os.path.join(base, n), ignore_errors=True)
             self.df = load_tx_carry(self.spark, self.root)
             if self.df is not None:
                 self.meta = load_tx_carry_meta(self.root)
@@ -309,25 +318,64 @@ class TxCarry:
         self, env: DataFrame | None, plan: TailPlan, tail: TailProbe
     ) -> tuple[DataFrame | None, DataFrame | None]:
         """(commit now, defer): the carry joins the batch when the plan
-        says so, then the tail run splits off. No Spark job."""
+        says so, then the tail run splits off and its write starts on the
+        carry writer thread. No Spark job on the calling thread."""
         if plan.with_carry:
             env = self.df if env is None else self.df.unionByName(env)
         if plan.defer_all:
-            return None, env
-        if plan.boundary is None:
+            closed, deferred = None, env
+        elif plan.boundary is None:
             return env, None
-        return split_open_tail_tx(env, tail, plan.boundary)
+        else:
+            closed, deferred = split_open_tail_tx(env, tail, plan.boundary)
+        path = os.path.join(self.root, "_tx_carry", f"{PENDING}{uuid.uuid4().hex}")
+        writer = ThreadPoolExecutor(1, thread_name_prefix="tx-carry-writer")
+        self._staged = (path, writer.submit(persist_tx_carry, deferred, path))
+        writer.shutdown(wait=False)
+        return closed, deferred
 
     def settle(self, deferred: DataFrame | None, plan: TailPlan) -> None:
-        """Persist the carry the step leaves — AFTER its commits: the
-        committed plan lazily reads the previous carry version, and a crash
-        mid-step must resume from the carry as it was before the step. A
-        carry drained to nothing clears the disk version (a stale one would
-        re-merge old events over newer table state on restart)."""
+        """Publish the carry the step leaves — AFTER its commits (see the
+        class docstring)."""
         if deferred is None and not plan.with_carry:
             return
-        self.df = persist_tx_carry(self.spark, deferred, self.root, meta=plan.carry)
-        self.meta = plan.carry if deferred is not None else None
+        versions = _carry_versions(self.root)
+        df = None
+        if deferred is not None:
+            path, written = self._staged
+            self._staged = None
+            written.result()
+            with open(os.path.join(path, "_carry_meta.json"), "w") as f:
+                json.dump(plan.carry, f)
+            d = os.path.join(self.root, "_tx_carry",
+                             f"v{versions[-1][0] + 1 if versions else 1}")
+            os.replace(path, d)
+            df = self.spark.read.schema(deferred.schema).parquet(d)
+        for _, p in versions:
+            shutil.rmtree(p, ignore_errors=True)
+        self.df, self.meta = df, (plan.carry if df is not None else None)
+
+    def _abandon(self) -> None:
+        """A step whose commit failed: wait for its staged write, whatever
+        its outcome, and drop it; the carry stays at ``vN``."""
+        if self._staged is not None:
+            path, written = self._staged
+            self._staged = None
+            written.exception()
+            shutil.rmtree(path, ignore_errors=True)
+
+    @contextmanager
+    def step(self, env: DataFrame | None, plan: TailPlan, tail: TailProbe):
+        """``split``, then the caller's commit of the yielded part (None:
+        nothing commits), then ``settle``; a failed commit drops the staged
+        write."""
+        closed, deferred = self.split(env, plan, tail)
+        try:
+            yield closed
+        except BaseException:
+            self._abandon()
+            raise
+        self.settle(deferred, plan)
 
 
 class CdcEngine:
@@ -1043,20 +1091,19 @@ class CdcEngine:
     ) -> int | None:
         """Commit one planned step: the carry joins the batch, the part
         that closes applies under the plan's fence and flags, then the
-        carry the step leaves is persisted (``TxCarry.settle``)."""
-        closed, deferred = self._carry.split(env, plan, tail)
+        carry the step leaves is published (``TxCarry.step``)."""
         v = None
-        if closed is not None:
-            v = self.apply_envelope_batch(
-                closed,
-                batch_id=batch_id,
-                fence=plan.fence,
-                has_ddl=plan.nd,
-                # the fused probe sees pre-SMT rows; with SMTs installed a
-                # transform could corrupt a row, so the apply re-probes
-                has_bad=None if self.smt_chain else plan.nb,
-            )
-        self._carry.settle(deferred, plan)
+        with self._carry.step(env, plan, tail) as closed:
+            if closed is not None:
+                v = self.apply_envelope_batch(
+                    closed,
+                    batch_id=batch_id,
+                    fence=plan.fence,
+                    has_ddl=plan.nd,
+                    # the fused probe sees pre-SMT rows; with SMTs installed a
+                    # transform could corrupt a row, so the apply re-probes
+                    has_bad=None if self.smt_chain else plan.nb,
+                )
         return v
 
     def _report_apply(self, v_before: int, batch_id: str,

@@ -666,11 +666,10 @@ class MultiTableEngine:
             self.flush_tx_carry()
             return self._dispatch(wire, batch_id)
         _, plan = self._carry.plan(wire, self._tail_probe, final=False)
-        closed, deferred = self._carry.split(wire, plan, self._tail_probe)
-        out = self._dispatch(closed, batch_id) if closed is not None else {}
-        # persisted AFTER the per-table commits (TxCarry.settle)
-        self._carry.settle(deferred, plan)
-        return out
+        # the carry is written while the tables commit and published after
+        # their commits (TxCarry.step)
+        with self._carry.step(wire, plan, self._tail_probe) as closed:
+            return self._dispatch(closed, batch_id) if closed is not None else {}
 
     def _dispatch(self, wire: DataFrame, batch_id: str) -> dict[str, int | None]:
         """One narrow pre-pass (source columns only — parquet-prunable)
@@ -861,11 +860,10 @@ class MultiTableEngine:
         _, plan = self._carry.plan(None, self._tail_probe, final=True)
         if not plan.with_carry:
             return {}
-        closed, _ = self._carry.split(None, plan, self._tail_probe)
-        out = self._dispatch(closed, batch_id)
-        if self.committer:
-            self.committer.commit(force=True)  # end-of-stream terminal line
-        self._carry.settle(None, plan)
+        with self._carry.step(None, plan, self._tail_probe) as closed:
+            out = self._dispatch(closed, batch_id)
+            if self.committer:
+                self.committer.commit(force=True)  # end-of-stream terminal line
         return out
 
     def read_all(self) -> dict[str, DataFrame]:

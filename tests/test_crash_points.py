@@ -15,6 +15,7 @@ boundary rather than sampling one mid-stream restart.
 from __future__ import annotations
 
 import hashlib
+import os
 
 import pytest
 
@@ -90,13 +91,18 @@ def test_crash_at_every_publish_point_converges(spark, tmp_path, monkeypatch):
 
 @pytest.mark.parametrize("path", ["replay", "stream", "multi"])
 def test_crash_during_tx_carry_persistence_converges(spark, tmp_path, monkeypatch, path):
-    """The carry write is NOT a manifest publish — crash between the
-    closed-part commit and the carry materialization, then resume: the
-    re-read batch regenerates the identical carry (deterministic split)
-    and the fence dedupes the re-applied closed part. Swept over every
-    path the tail-transaction planner serves: ``replay`` re-reads its batch
-    files; a stream epoch (``apply_stream_batch``) and a multi-table wire
-    batch (``apply_wire_batch``) are redelivered after the restart, as a
+    """The carry write is NOT a manifest publish: it runs on the carry
+    writer thread while the closed part commits, and its pending directory
+    becomes the next carry version only after the commits. Two crash
+    points: inside the write (nothing written), and after the write
+    finished but before the publish (a complete pending directory left on
+    disk). Either way the restart resumes from the carry as it was before
+    the step: stale pending directories are removed, the re-read batch
+    regenerates the identical carry (deterministic split) and the fence
+    dedupes the re-applied closed part. Swept over every path the
+    tail-transaction planner serves: ``replay`` re-reads its batch files; a
+    stream epoch (``apply_stream_batch``) and a multi-table wire batch
+    (``apply_wire_batch``) are redelivered after the restart, as a
     checkpoint that never committed the epoch would."""
     import pyspark.sql.functions as F
 
@@ -150,31 +156,41 @@ def test_crash_during_tx_carry_persistence_converges(spark, tmp_path, monkeypatc
 
     from debezium_spark.streaming import engine as eng_mod
 
-    root = str(tmp_path / "t")
-    _, table, run = start(root)
     real = eng_mod.persist_tx_carry
-    calls = {"n": 0}
+    for crash in ("write", "publish"):
+        root = str(tmp_path / crash)
+        _, table, run = start(root)
+        calls = {"n": 0}
 
-    def wedge(spark_, carry, root, meta=None):
-        if calls["n"] == 0:  # first carry write = after batch 0's commit
-            calls["n"] += 1
-            raise _Boom("crash during carry persistence")
-        return real(spark_, carry, root, meta=meta)
+        def wedge(*args, **kwargs):
+            if calls["n"]:
+                return real(*args, **kwargs)
+            calls["n"] += 1  # first carry write = during batch 0's commit
+            if crash == "publish":
+                real(*args, **kwargs)
+            raise _Boom(f"crash before the carry {crash}")
 
-    monkeypatch.setattr(eng_mod, "persist_tx_carry", wedge)
-    try:
-        with pytest.raises(_Boom):
-            run()
-    finally:
-        monkeypatch.setattr(eng_mod, "persist_tx_carry", real)
-    assert calls["n"] == 1
+        monkeypatch.setattr(eng_mod, "persist_tx_carry", wedge)
+        try:
+            with pytest.raises(_Boom):
+                run()
+        finally:
+            monkeypatch.setattr(eng_mod, "persist_tx_carry", real)
+        assert calls["n"] == 1
+        # the carry of every path lives under the root it was started on
+        carry_dir = os.path.join(root, "_tx_carry")
+        left = os.listdir(carry_dir) if os.path.isdir(carry_dir) else []
+        assert not any(n.startswith("v") for n in left), (crash, left)
+        assert any(n.startswith(eng_mod.PENDING) for n in left) == (crash == "publish")
 
-    _, table, run = start(root)  # restart; the input is redelivered
-    run()
-    assert _sha_state(table) == want
-    # a second run commits nothing (exactly-once held through the crash)
-    assert [v for v in run() if v is not None] == []
-    assert _sha_state(table) == want
+        _, table, run = start(root)  # restart; the input is redelivered
+        run()
+        assert _sha_state(table) == want, crash
+        # a second run commits nothing (exactly-once held through the crash)
+        assert [v for v in run() if v is not None] == [], crash
+        assert _sha_state(table) == want, crash
+        left = os.listdir(carry_dir) if os.path.isdir(carry_dir) else []
+        assert not any(n.startswith(eng_mod.PENDING) for n in left), (crash, left)
 
 
 def test_crash_before_each_catalog_append_converges(spark, tmp_path, monkeypatch):

@@ -159,3 +159,41 @@ def test_compaction_cadence_spreads_across_batches(spark, tmp_path):
     # cadence keeps depth bounded near the threshold (<= ~2x transient)
     assert table.delta_depth() <= 2 * compact_depth + 1
     assert _state(table) == _oracle(gen, 5000)
+
+
+def test_expire_versions_removes_what_the_prefix_rule_removed(spark, tmp_path):
+    """``expire_versions`` keeps the top-level ``data/`` directories the
+    kept versions reference — one set lookup per directory — and removes
+    exactly the set the earlier O(dirs × referenced) prefix scan removed,
+    on a MoR table holding delta, compaction and expired directories."""
+    import json
+    import os
+
+    gen = ChangeLogGenerator(spark, seed=5, n_repos=6)
+    table = LakeTable(spark, str(tmp_path / "t"), ["repo", "path"], n_buckets=2, mode="mor")
+    engine = CdcEngine(spark, table, compact_depth=2)
+    for b in range(4):
+        engine.apply_envelope_batch(gen.events(120, start_pos=b * 120), batch_id=f"b{b}")
+    state = _state(table)
+    data_root = os.path.join(table.root, "data")
+    before = set(os.listdir(data_root))
+    kinds = {d.split("-")[0] for d in before}
+    assert {"d", "compact"} <= kinds, kinds
+
+    # the prefix rule, evaluated on the same manifests
+    names = sorted(n for n in os.listdir(table._mdir) if n.startswith("v") and n.endswith(".json"))
+    referenced = set()
+    for fn in names[-2:]:
+        with open(os.path.join(table._mdir, fn)) as f:
+            for val in json.load(f)["buckets"].values():
+                base, delta = table._bucket_dirs(val)
+                referenced.update(base + delta)
+    want_removed = {
+        d for d in before
+        if not any(r.startswith(os.path.join(data_root, d)) for r in referenced)
+    }
+    assert want_removed and want_removed != before
+
+    table.expire_versions(keep_last=2)
+    assert before - set(os.listdir(data_root)) == want_removed
+    assert _state(table) == state

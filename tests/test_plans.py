@@ -364,3 +364,94 @@ def test_events_max_pos_footer_equals_aggregation(spark, tmp_path, caplog):
         assert entry._events_max_pos(spark, str(tmp_path)) == 9
     warnings = [r for r in caplog.records if r.levelno == logging.WARNING]
     assert len(warnings) == 1, warnings
+
+
+def test_pk_change_split_skips_the_input_spread(spark):
+    """``q_pk_change_split`` is a pure per-row map: the round-robin input
+    spread only adds an exchange in front of it. Planned (not run) at
+    sf0.01, whose events table is large enough for the spread to engage."""
+    plan = plan_of(entry.q_pk_change_split(spark, os.path.join(os.path.dirname(SF), "sf0.01")))
+    assert "RoundRobinPartitioning" not in plan
+
+
+def _compiled_classes(spark) -> int:
+    """Janino compilations so far in this JVM (one per generated class the
+    codegen cache missed)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_per_batch_values_compile_no_new_classes(spark, tmp_path):
+    """A batch's tail boundary and compaction's bucket set must not reach
+    the generated Java source: the codegen cache is keyed on that source,
+    so an inlined value compiles fresh classes for every batch. The second
+    closed split (another boundary) and the second compaction (another
+    bucket) compile nothing new."""
+    from pyspark.sql.types import StructType
+
+    from debezium_spark.plans.exprs import TailProbe
+    from debezium_spark.plans.merge import merge_changes
+    from debezium_spark.plans.table import LakeTable
+    from debezium_spark.streaming.engine import split_open_tail_tx
+
+    src = str(tmp_path / "env")
+    spark.createDataFrame(
+        [{"source": {"file": "binlog.1", "pos": p}, "k": f"k{p}"} for p in range(40)],
+        "source struct<file:string,pos:bigint>, k string",
+    ).write.parquet(src)
+    env = spark.read.parquet(src)
+    tail = TailProbe()
+
+    def closed_keys(boundary):
+        closed, _ = split_open_tail_tx(env, tail, boundary)
+        return closed.select("k").collect()
+
+    assert len(closed_keys(9)) == 10
+    before = _compiled_classes(spark)
+    assert len(closed_keys(19)) == 20
+    assert _compiled_classes(spark) - before == 0
+
+    t = LakeTable(spark, str(tmp_path / "t"), ["k"], n_buckets=4, mode="mor")
+    t.create(StructType.fromDDL("k string, v long"))
+    for b in range(2):
+        changes = spark.createDataFrame(
+            [(f"k{i}", i + b, "u", 100 * b + i) for i in range(24)],
+            "k string, v long, _op string, _pos long",
+        )
+        merge_changes(t, changes, ("binlog.1", 100 * b + 99), f"b{b}")
+    first, second = t.deep_buckets(2)[:2]
+    t.compact(buckets=[first])
+    before = _compiled_classes(spark)
+    t.compact(buckets=[second])
+    assert _compiled_classes(spark) - before == 0
+    assert {r["k"]: r["v"] for r in t.read().collect()} == {f"k{i}": i + 1 for i in range(24)}
+
+
+def test_compaction_write_plan_has_one_exchange(spark, tmp_path, monkeypatch):
+    """``LakeTable.compact`` partitions by ``_bucket`` once: the per-key
+    last-wins aggregate groups by ``_bucket`` and the keys inside those
+    partitions, and the ``partitionBy("_bucket")`` write adds no shuffle."""
+    from pyspark.sql import DataFrameWriter
+    from pyspark.sql.types import StructType
+
+    from debezium_spark.plans.merge import merge_changes
+    from debezium_spark.plans.table import LakeTable
+
+    t = LakeTable(spark, str(tmp_path / "t"), ["k"], n_buckets=2, mode="mor")
+    t.create(StructType.fromDDL("k string, v long"))
+    changes = spark.createDataFrame(
+        [(f"k{i}", i, "u", i) for i in range(8)], "k string, v long, _op string, _pos long"
+    )
+    merge_changes(t, changes, ("binlog.1", 8), "b0")
+    plans = []
+    real = DataFrameWriter.parquet
+
+    def capture(self, path, *args, **kwargs):
+        plans.append(plan_of(self._df))
+        return real(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", capture)
+    assert t.compact() is not None
+    (plan,) = plans
+    assert plan.count("Exchange") == 1, plan
+    assert {r["k"]: r["v"] for r in t.read().collect()} == {f"k{i}": i for i in range(8)}

@@ -7,6 +7,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from debezium_spark import CdcEngine, LakeTable
@@ -565,3 +567,53 @@ def test_multi_dispatch_probe_is_one_job_per_batch(spark, tmp_path):
     state = {r["k"]: r["v"] for r in mte.table("app", "t").read().collect()}
     # tx1+tx2 committed (tx2 closed by tx3's appearance); tx3 deferred
     assert state == {"a": "x", "b": "x", "b2": "x"}
+
+
+@pytest.mark.parametrize("path", ["replay", "stream", "multi"])
+def test_tail_split_halves_are_complements_at_the_boundary(spark, tmp_path, path):
+    """The tail split's closed and deferred halves are exact complements
+    around the boundary on every entry path: rows at ``boundary - 1`` and
+    ``boundary`` commit, ``boundary + 1`` defers, and a null-pos row rides
+    with the closed part into quarantine. Here tx2 opens at pos 3, so the
+    boundary is 2."""
+    from debezium_spark.operators.quarantine import read_quarantine
+    from debezium_spark.streaming.engine import load_tx_carry_meta
+    from debezium_spark.streaming.multi import (
+        MultiTableEngine, TableSpec, envelope_to_wire,
+    )
+    from debezium_spark.schema import REPO_PAYLOAD_SCHEMA
+
+    null_pos = {
+        "before": None, "after": {"repo": "r0", "path": "q", "content": "v1"},
+        "op": "c", "ts_ms": 1000,
+        "source": {"file": "binlog.000001", "pos": None, "gtid": None,
+                   "snapshot": None, "db": "app", "table": "t", "ts_ms": 1000},
+        "transaction": None,
+    }
+    env = _env(spark, [(1, "c", "a", "v1", "tx1"), (2, "c", "b", "v1", "tx1"),
+                       (3, "c", "c", "v1", "tx2")]
+               ).unionByName(spark.createDataFrame([null_pos], ENV_DDL))
+    root = str(tmp_path / "t")  # the carry lives here on every path
+    if path == "multi":
+        spec = TableSpec("app", "t", REPO_PAYLOAD_SCHEMA, ["repo", "path"], n_buckets=2)
+        mte = MultiTableEngine(spark, root, [spec])
+        table = mte.table("app", "t")
+        mte.apply_wire_batch(envelope_to_wire(env), "b0")
+        flush = mte.flush_tx_carry
+    else:
+        table = LakeTable(spark, root, ["repo", "path"], n_buckets=2)
+        engine = CdcEngine(spark, table)
+        if path == "replay":
+            bdir = str(tmp_path / "b")
+            env.write.parquet(os.path.join(bdir, "batch_00000.parquet"))
+            engine.replay(bdir, final=False)
+        else:
+            engine.apply_stream_batch(env, "epoch_00000")
+        flush = engine.flush_tx_carry
+    assert sorted(r["path"] for r in table.read().collect()) == ["a", "b"]
+    assert [r["reason"] for r in read_quarantine(spark, table.root).collect()] == ["null_offset"]
+    assert load_tx_carry_meta(root)["p"] == 3
+    (carried,) = spark.read.parquet(os.path.join(root, "_tx_carry", "v1")).collect()
+    assert carried["source"]["pos"] == 3
+    flush()
+    assert sorted(r["path"] for r in table.read().collect()) == ["a", "b", "c"]
