@@ -243,13 +243,16 @@ class TableExprs:
     def payload_cols(self) -> list[Column]:
         return [F.col(c) for c in self.fields]
 
-    # ---- last-wins resolve (``LakeTable._resolve`` and ``compact``) -------
+    # ---- last-wins resolve (``LakeTable._resolve`` and ``_fold``) ---------
 
     @cached_property
     def last_wins(self) -> Column:
         """THE last-wins aggregate over base ∪ delta rows, shared by read
-        resolution and compaction so the two cannot elect different
-        winners: per key, the row with the greatest ``(_pos, row-hash)``.
+        resolution and every fold (compaction and the copy-on-write
+        commit) so they cannot elect different winners: per key, the row
+        with the greatest ``(_pos, row-hash)``; a row without ``_pos`` (a
+        base file written before CoW merges became folds) loses to any
+        row with one.
         Rows with EQUAL ``_pos`` but different payloads exist when two
         incremental-snapshot runs at an unadvanced fence observed different
         source states (both chunk rows encode ``2·fence+1`` —
@@ -263,7 +266,11 @@ class TableExprs:
 
     @cached_property
     def live(self) -> Column:
-        return F.col("_r._op") != "d"
+        """The winner is not a delete. A null ``_op`` counts as live: only
+        base files written before CoW merges became folds lack the column
+        (the validity split quarantines a null op before it reaches a
+        delta)."""
+        return F.coalesce(F.col("_r._op") != "d", F.lit(True))
 
     @cached_property
     def resolved(self) -> list[Column]:
@@ -299,19 +306,6 @@ class TableExprs:
         return self._section("delta", tuple(columns), lambda: self.aligned(columns) + [
             F.col("_op"), F.col("_pos"), self.bucket.alias("_bucket"),
         ])
-
-    @cached_property
-    def upsert(self) -> Column:
-        return F.col("_op") != "d"
-
-    @cached_property
-    def cow_lineage(self) -> list[Column]:
-        """Per-bucket lineage counters of a CoW change-set."""
-        return [
-            F.count("*").alias("events"),
-            F.sum(F.when(F.col("_op") == "d", 1).otherwise(0)).alias("deletes"),
-            F.sum(F.when(self.upsert, 1).otherwise(0)).alias("upserts"),
-        ]
 
     # ---- the engine's batch path (``streaming.engine``) -------------------
 

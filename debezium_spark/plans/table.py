@@ -1,5 +1,5 @@
-"""LakeTable — bucketed, versioned, copy-on-write parquet table with atomic
-offset-fenced commits.
+"""LakeTable — bucketed, versioned parquet table with atomic offset-fenced
+commits.
 
 This is the engine's sink. It implements the subset of Iceberg semantics the
 CDC apply path needs — atomic snapshot commits, hash-bucket layout
@@ -20,8 +20,8 @@ files, and on resume any batch whose max offset <= fence is skipped — no
 read-back probes needed.
 
 Scale notes (100 TB / 10^10 events):
-- Bucket count is the unit of rewrite: a merge rewrites only buckets touched
-  by the batch (partition pruning on the CoW write), so merge cost is
+- Bucket count is the unit of rewrite: a fold (compaction, or a
+  copy-on-write merge) rewrites only the buckets it targets, so its cost is
   O(batch ∪ touched-bucket data), not O(table).
 - Readers get bucket-pruned scans for key lookups; the bucket function is
   ``pmod(xxhash64(key...), n_buckets)`` computed in the JVM.
@@ -82,20 +82,24 @@ class DefaultEvaluationError(ValueError):
 class LakeTable:
     """A versioned parquet table keyed by ``key_cols``.
 
-    Two write modes (the Iceberg copy-on-write vs merge-on-read trade):
+    Every merge appends the deduped change-set as *delta* files (payload +
+    ``_op`` + ``_pos``), and one fold (``_fold``: per key the
+    ``TableExprs.last_wins`` winner, deletes dropped) turns a bucket's
+    base ∪ deltas into a new base. The write mode decides when that fold
+    runs (the Iceberg copy-on-write vs merge-on-read trade):
 
-    - ``mode="mor"`` (default): each merge appends the deduped change-set as
-      *delta* files (payload + ``_op`` + ``_pos``) — merge cost is
-      **O(batch)** regardless of table size; reads resolve base ∪ deltas
-      with a last-wins per-key aggregate; ``compact()`` folds deltas back
-      into the base. At 10^10 events / 100 TB where table ≫ batch, MoR is
-      the apply path and compaction is the amortized background job
-      (Iceberg's positional-delete compaction analog) — which is why it is
-      the default: CoW rewrite cost grows toward O(table) as batches touch
+    - ``mode="mor"`` (default): later. Merge cost is **O(batch)**
+      regardless of table size; reads resolve base ∪ deltas with the same
+      last-wins aggregate; ``compact()`` folds deltas back into the base.
+      At 10^10 events / 100 TB where table ≫ batch, MoR is the apply path
+      and compaction is the amortized background job (Iceberg's
+      positional-delete compaction analog) — which is why it is the
+      default: CoW rewrite cost grows toward O(table) as batches touch
       every bucket.
-    - ``mode="cow"`` (opt-in): each merge rewrites the touched buckets —
-      reads are plain scans, merge cost is O(batch ∪ touched-bucket data).
-      Right for read-heavy tables that compact would otherwise chase.
+    - ``mode="cow"`` (opt-in): now. Each merge folds the touched buckets in
+      the same commit, so the table never holds deltas — reads are plain
+      scans, merge cost is O(batch ∪ touched-bucket data). Right for
+      read-heavy tables that compact would otherwise chase.
     """
 
     def __init__(
@@ -119,7 +123,7 @@ class LakeTable:
         # Reopening an existing table: the MANIFEST is authoritative for the
         # physical table properties. A caller that forgot the original
         # n_buckets would otherwise hash keys with the wrong modulus — the
-        # bucket-pruned anti-join and compaction then silently miss/drop
+        # bucket-pruned fold and compaction then silently miss/drop
         # rows. key_cols/n_buckets/mode were not recorded before round 3;
         # legacy manifests fall back to the constructor args.
         if self.exists():
@@ -217,7 +221,9 @@ class LakeTable:
     @staticmethod
     def _bucket_dirs(val) -> tuple[list[str], list[str]]:
         """Normalize a manifest bucket value → (base_dirs, delta_dirs).
-        CoW stores a plain list; MoR stores {"base": [...], "delta": [...]}."""
+        Values are {"base": [...], "delta": [...]}; copy-on-write tables
+        written before CoW merges became folds hold a plain list of base
+        dirs whose files carry the payload only (no ``_op``/``_pos``)."""
         if isinstance(val, dict):
             return list(val.get("base", [])), list(val.get("delta", []))
         return list(val), []
@@ -250,10 +256,10 @@ class LakeTable:
         upcast in the parquet reader (schema evolution, same contract as
         Iceberg's name/ID-based projection).
 
-        MoR: base ∪ delta files resolve at read time — last writer per key
-        by ``_pos`` (a partial-aggregatable max_by, one shuffle), deletes
-        filtered. The resolve is exactly the engine's last-wins dedupe
-        applied at read instead of write."""
+        Buckets with deltas resolve base ∪ delta files at read time — last
+        writer per key by ``_pos`` (a partial-aggregatable max_by, one
+        shuffle), deletes filtered. The resolve is exactly the engine's
+        last-wins dedupe applied at read instead of write."""
         man = self.manifest(version)
         x = self.exprs(man)
         dirs: list[str] = []
@@ -266,13 +272,11 @@ class LakeTable:
                 any_delta = any_delta or bool(delta)
         if not dirs:
             return self.spark.createDataFrame([], x.payload)
-        if self.mode == "cow":
-            return self._read_with_aliases(dirs, x)
-
         raw = self._read_with_aliases(dirs, x, with_delta_cols=True)
         if not any_delta:
-            # pure-base read after compaction: base files are already
-            # one-row-per-key with deletes dropped — skip the resolve shuffle
+            # pure-base read (a copy-on-write table, or a merge-on-read one
+            # after compaction): base files are already one-row-per-key with
+            # deletes dropped — skip the resolve shuffle
             return raw.select(*x.payload_cols)
         return self._resolve(raw, x)
 
@@ -352,12 +356,37 @@ class LakeTable:
         return out
 
     def compact(self, buckets: list[int] | None = None, batch_id: str = "compact") -> int | None:
-        """MoR compaction: fold each bucket's deltas into a new base
-        (resolved last-wins, deletes dropped, winners keep their ``_pos``
-        so future deltas still order correctly). A maintenance commit — the
-        fence is untouched, so it can run any time, including between a
-        crash and a resume. Iceberg analog: rewrite_data_files +
-        positional-delete compaction.
+        """Fold each bucket's deltas into a new base (``_fold``). A
+        maintenance commit — the fence is untouched, so it can run any
+        time, including between a crash and a resume. Iceberg analog:
+        rewrite_data_files + positional-delete compaction. A copy-on-write
+        table folds in every merge and has no deltas to compact."""
+        man = self.manifest()
+        todo: dict[int, dict] = {}
+        for b, val in man["buckets"].items():
+            bi = int(b)
+            if buckets is not None and bi not in buckets:
+                continue
+            base, delta = self._bucket_dirs(val)
+            if delta:
+                todo[bi] = {"base": base, "delta": delta}
+        if not todo:
+            return None
+        lineage = [
+            {"batch": batch_id, "bucket": b, "events": 0, "deletes": 0,
+             "upserts": 0, "compacted_deltas": len(todo[b]["delta"])}
+            for b in todo
+        ]
+        return self.commit_buckets(self._fold(self.exprs(man), todo), list(todo), None, lineage)
+
+    def _fold(self, x: "TableExprs", todo: dict[int, dict]) -> dict[int, dict]:
+        """Write each bucket's base ∪ delta dirs in ``todo`` (manifest bucket
+        values, ``{"base": [...], "delta": [...]}``) as one new base: per key the ``TableExprs.last_wins`` winner, deletes dropped,
+        winners keeping their ``_pos`` so future deltas still order
+        correctly. Returns the buckets' new manifest values (a bucket whose
+        keys were all deleted gets an empty base). Shared by compaction
+        and the copy-on-write commit, so every fold elects the winner every
+        read elects (final review r5).
 
         One exchange: ``_bucket`` is a function of the keys, so the rows
         are hash-partitioned by ``_bucket`` once and the per-key aggregate
@@ -368,26 +397,8 @@ class LakeTable:
         them, and the write already ran one task per bucket."""
         from debezium_spark.plans.exprs import one_of
 
-        if self.mode != "mor":
-            return None
-        man = self.manifest()
-        x = self.exprs(man)
-        todo: dict[int, tuple[list[str], list[str]]] = {}
-        for b, val in man["buckets"].items():
-            bi = int(b)
-            if buckets is not None and bi not in buckets:
-                continue
-            base, delta = self._bucket_dirs(val)
-            if delta:
-                todo[bi] = (base, delta)
-        if not todo:
-            return None
-
-        dirs = [d for base, delta in todo.values() for d in base + delta]
+        dirs = [d for val in todo.values() for d in val["base"] + val["delta"]]
         raw = self._read_with_aliases(dirs, x, with_delta_cols=True)
-        # the read path's last-wins aggregate: compaction PERSISTS the
-        # winner, so it must be the winner every read elects (final review
-        # r5) — here the winner keeps its _pos
         resolved = (
             raw.withColumn("_bucket", x.bucket)
             .filter(one_of(x.bucket_col, sorted(todo)))
@@ -403,12 +414,7 @@ class LakeTable:
         new_vals: dict[int, dict] = {b: {"base": [], "delta": []} for b in todo}
         for b, path in iter_bucket_subdirs(out_dir):
             new_vals[b] = {"base": [path], "delta": []}
-        lineage = [
-            {"batch": batch_id, "bucket": b, "events": 0, "deletes": 0,
-             "upserts": 0, "compacted_deltas": len(todo[b][1])}
-            for b in todo
-        ]
-        return self.commit_buckets(new_vals, list(todo), None, lineage)
+        return new_vals
 
     def truncate(self, fence: tuple[str, int] | None = None, batch_id: str = "truncate") -> int:
         """TRUNCATE barrier (Envelope op 't', reference Envelope.java:498-505;

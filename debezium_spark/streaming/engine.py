@@ -840,7 +840,7 @@ class CdcEngine:
             self.table, changes, fence, batch_id,
             salt_factor=self.salt_factor, fence_check=fence_check,
         )
-        if self.table.mode == "mor" and self.compact_depth:
+        if self.compact_depth:
             # Selective AND spread (VERDICT r5 #2): fold only buckets that
             # actually got deep, and at most K of them per batch, deepest
             # first. Under uniform traffic every bucket crosses the depth

@@ -37,10 +37,10 @@ class _Boom(RuntimeError):
     pass
 
 
-def _run_with_crash(spark, root, batch_dir, crash_after: int, monkeypatch):
+def _run_with_crash(spark, root, batch_dir, crash_after: int, monkeypatch, mode="mor"):
     """Replay with a crash injected before the (crash_after+1)-th publish;
     returns the table (possibly mid-stream). crash_after=None → no crash."""
-    table = LakeTable(spark, root, ["repo", "path"], n_buckets=4)
+    table = LakeTable(spark, root, ["repo", "path"], n_buckets=4, mode=mode)
     engine = CdcEngine(spark, table)
     calls = {"n": 0}
     real = _LT._publish
@@ -60,13 +60,18 @@ def _run_with_crash(spark, root, batch_dir, crash_after: int, monkeypatch):
     return table
 
 
-def test_crash_at_every_publish_point_converges(spark, tmp_path, monkeypatch):
+@pytest.mark.parametrize("mode", ["mor", "cow"])
+def test_crash_at_every_publish_point_converges(spark, tmp_path, monkeypatch, mode):
+    """Swept per write mode: a copy-on-write commit folds the touched
+    buckets before its publish, so a crash there leaves the fold's output
+    and the staged delta as orphans."""
     gen = ChangeLogGenerator(spark, seed=23, n_repos=10)
     batch_dir = str(tmp_path / "batches")
     gen.write_batches(batch_dir, N_EVENTS, n_batches=N_BATCHES)
 
     # ground truth: one uncrashed replay
-    clean = LakeTable(spark, str(tmp_path / "clean"), ["repo", "path"], n_buckets=4)
+    clean = LakeTable(spark, str(tmp_path / "clean"), ["repo", "path"], n_buckets=4,
+                      mode=mode)
     CdcEngine(spark, clean).replay(batch_dir)
     want = _sha_state(clean)
     want_fence = clean.fence()
@@ -78,7 +83,7 @@ def test_crash_at_every_publish_point_converges(spark, tmp_path, monkeypatch):
 
     for k in range(n_publishes):
         root = str(tmp_path / f"crash_{k}")
-        table = _run_with_crash(spark, root, batch_dir, k, monkeypatch)
+        table = _run_with_crash(spark, root, batch_dir, k, monkeypatch, mode)
         # restart: fresh engine on the same table root, replay to the end
         engine2 = CdcEngine(spark, table)
         engine2.replay(batch_dir)

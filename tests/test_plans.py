@@ -223,7 +223,8 @@ def test_stream_carry_persist_is_one_job(spark, tmp_path, monkeypatch):
     assert {r["path"] for r in table.read().collect()} == {"a", "b", "c", "d"}
 
 
-def test_merge_empty_changes_heartbeats_without_delta(spark, tmp_path):
+@pytest.mark.parametrize("mode", ["mor", "cow"])
+def test_merge_empty_changes_heartbeats_without_delta(spark, tmp_path, mode):
     """An all-filtered batch (every row quarantined/split away) must still
     advance the fence via a heartbeat commit, leave NO delta dirs behind
     (the write produced only _SUCCESS — the observation-era early-exit),
@@ -235,7 +236,7 @@ def test_merge_empty_changes_heartbeats_without_delta(spark, tmp_path):
     from debezium_spark.plans.merge import merge_changes
     from debezium_spark.plans.table import LakeTable
 
-    t = LakeTable(spark, str(tmp_path / "t"), ["k"], n_buckets=4, mode="mor")
+    t = LakeTable(spark, str(tmp_path / "t"), ["k"], n_buckets=4, mode=mode)
     t.create(StructType.fromDDL("k string, v long"))
     empty = spark.createDataFrame([], "k string, v long, _op string, _pos long")
     v = merge_changes(t, empty, ("binlog.1", 7), "b0")
@@ -248,6 +249,75 @@ def test_merge_empty_changes_heartbeats_without_delta(spark, tmp_path):
     assert not any(d.startswith("d-") for d in leftover), leftover
     # fence respected on replay: the same offset is a no-op
     assert merge_changes(t, empty, ("binlog.1", 7), "b0") is None
+
+
+def test_cow_merge_folds_its_delta_with_mor_lineage(spark, tmp_path):
+    """A copy-on-write merge is the merge-on-read delta write plus a fold
+    of the touched buckets in the same commit: it publishes one version,
+    leaves no ``d-`` directory behind, holds no deltas, and its per-bucket
+    lineage counters equal the merge-on-read table's for the same
+    change-set."""
+    from pyspark.sql.types import StructType
+
+    from debezium_spark.plans.merge import merge_changes
+    from debezium_spark.plans.table import LakeTable
+
+    schema = "k string, v long, _op string, _pos long"
+    seed = spark.createDataFrame([(f"k{i}", i, "u", i) for i in range(12)], schema)
+    changes = spark.createDataFrame(
+        [(f"k{i}", 100 + i, "d" if i % 3 == 0 else "u", 50 + i) for i in range(0, 16, 2)],
+        schema,
+    )
+    tables, lineages = {}, {}
+    for mode in ("mor", "cow"):
+        t = LakeTable(spark, str(tmp_path / mode), ["k"], n_buckets=4, mode=mode)
+        t.create(StructType.fromDDL("k string, v long"))
+        merge_changes(t, seed, ("binlog.1", 20), "b0")
+        assert merge_changes(t, changes, ("binlog.1", 70), "b1") == 2
+        tables[mode] = t
+        lineages[mode] = sorted(
+            (r["bucket"], r["events"], r["deletes"], r["upserts"])
+            for r in t.lineage() if r["batch"] == "b1"
+        )
+    assert lineages["cow"] == lineages["mor"]
+    assert sum(r[1] for r in lineages["cow"]) == 8
+
+    cow = tables["cow"]
+    assert not any(d.startswith("d-") for d in os.listdir(tmp_path / "cow" / "data"))
+    assert cow.delta_depth() == 0
+    want = {tuple(r) for r in tables["mor"].read().collect()}
+    assert {tuple(r) for r in cow.read().collect()} == want
+    assert ("k2", 102) in want and ("k0", 0) not in want and ("k1", 1) in want
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_fold_keeps_rows_of_payload_only_base_files(spark, tmp_path, mode):
+    """Base files written before CoW merges became folds carry the payload
+    only (no ``_op``/``_pos``) under a plain-list manifest value. Folding
+    or resolving such a bucket with a new delta must keep the keys the
+    delta does not touch: their winner has a null ``_op``, which counts as
+    live."""
+    from pyspark.sql.types import StructType
+
+    from debezium_spark.plans.merge import merge_changes
+    from debezium_spark.plans.table import LakeTable
+
+    t = LakeTable(spark, str(tmp_path / "t"), ["k"], n_buckets=1, mode=mode)
+    t.create(StructType.fromDDL("k string, v string"))
+    base = str(tmp_path / "t" / "data" / "v-legacy" / "_bucket=0")
+    spark.createDataFrame([("a", "a0"), ("b", "b0")], "k string, v string").write.parquet(base)
+    t.commit_buckets({0: [base]}, [0], ("binlog.1", 5), [])
+    assert isinstance(t.manifest()["buckets"]["0"], list)
+    assert sorted(tuple(r) for r in t.read().collect()) == [("a", "a0"), ("b", "b0")]
+
+    change = spark.createDataFrame([("b", "b1", "u", 20)],
+                                   "k string, v string, _op string, _pos long")
+    merge_changes(t, change, ("binlog.1", 10), "b1")
+    want = [("a", "a0"), ("b", "b1")]
+    assert sorted(tuple(r) for r in t.read().collect()) == want
+    t.compact()
+    assert t.delta_depth() == 0
+    assert sorted(tuple(r) for r in t.read().collect()) == want
 
 
 def test_decontaminate_broadcasts_benchmark_side(spark):

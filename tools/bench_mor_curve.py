@@ -11,7 +11,8 @@ Evidence beyond wall time (host capacity wobbles ±50%):
 - lineage: the measured commit's per-bucket event counts must sum to the
   applied batch (the merge never re-processed table data);
 - bytes: the data written by the MoR commit is O(batch) — compared with
-  the CoW commit's rewrite bytes, which track table size.
+  the CoW commit's write bytes (its staged delta plus the folded bases of
+  the touched buckets), which track table size.
 
 Usage: python tools/bench_mor_curve.py [--sizes 1000000,4000000,16000000]
                                        [--batch 200000] [--buckets 32]
@@ -36,14 +37,17 @@ import bench
 _dir_bytes = bench.dir_bytes
 
 
-def _data_bytes(table) -> int:
-    man = table.manifest()
+def _data_dirs(table) -> set[str]:
     dirs = set()
-    for val in man["buckets"].values():
+    for val in table.manifest()["buckets"].values():
         base, delta = table._bucket_dirs(val)
         dirs.update(base)
         dirs.update(delta)
-    return sum(_dir_bytes(d) for d in dirs)
+    return dirs
+
+
+def _data_bytes(table) -> int:
+    return sum(_dir_bytes(d) for d in _data_dirs(table))
 
 
 def main() -> None:
@@ -56,6 +60,20 @@ def main() -> None:
 
     from debezium_spark import ChangeLogGenerator, CdcEngine, LakeTable
     from debezium_spark.schema import REPO_KEY_COLS
+
+    # a CoW commit stages its change-set as a delta dir, folds it into the
+    # touched buckets and removes it after the publish: count its bytes
+    # as the fold reads them
+    folded_delta_bytes = [0]
+    real_fold = LakeTable._fold
+
+    def fold(self, x, todo):
+        folded_delta_bytes[0] += sum(
+            _dir_bytes(d) for val in todo.values() for d in val["delta"]
+        )
+        return real_fold(self, x, todo)
+
+    LakeTable._fold = fold
 
     spark = bench.make_spark(int(os.environ.get("SPARK_GRAFT_CPUS", "32")), "mor-curve")
     spark.sparkContext.setLogLevel("ERROR")
@@ -90,8 +108,9 @@ def main() -> None:
                 engine = CdcEngine(spark, table, compact_depth=0)
                 engine.bootstrap(snap, fence=("binlog.000001", -1))
                 base_rows = table.read().count()
+                dirs_before = _data_dirs(table)
                 base_bytes = _data_bytes(table)
-                bytes_before = base_bytes
+                folded_delta_bytes[0] = 0
 
                 t0 = time.perf_counter()
                 engine.apply_envelope_batch(update_env, batch_id="measured")
@@ -100,11 +119,12 @@ def main() -> None:
                 # lineage proof: the measured commit touched O(batch) events
                 lin = [r for r in table.lineage() if r.get("batch", "").startswith("measured")]
                 lineage_events = sum(r.get("events", 0) for r in lin)
-                after_bytes = _data_bytes(table)
-                # MoR appends deltas (new bytes on top of the base); CoW
-                # rewrites touched buckets, so its commit's write volume is
-                # the new total (old dirs are retired from the manifest)
-                commit_bytes = after_bytes if mode == "cow" else after_bytes - bytes_before
+                # the commit's write volume: the dirs it added to the
+                # manifest (MoR: the delta; CoW: the touched buckets' new
+                # bases) plus, for CoW, the staged delta the fold consumed
+                commit_bytes = folded_delta_bytes[0] + sum(
+                    _dir_bytes(d) for d in _data_dirs(table) - dirs_before
+                )
                 r = {
                     "mode": mode,
                     "base_rows": base_rows,
