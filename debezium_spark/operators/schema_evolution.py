@@ -339,82 +339,41 @@ def _strip_quoted(text: str) -> str:
     return "".join(out)
 
 
-def _split_clauses(body: str) -> list[str]:
-    """Split an ALTER TABLE / CREATE TABLE clause list on top-level commas —
-    parens nest and quoted literals shield (a comma inside a string DEFAULT
-    must not fabricate a phantom column)."""
+def _split_top_level(text: str, sep: str) -> list[str]:
+    """Split on top-level ``sep`` (``,`` for an ALTER TABLE / CREATE TABLE
+    clause list, ``;`` for a multi-statement script) — parens nest and
+    quotes (single, double, backtick) shield, so a comma inside a string
+    DEFAULT never fabricates a phantom column; a doubled '' inside a
+    single-quoted literal stays inside it. Empty pieces drop."""
     out: list[str] = []
     cur: list[str] = []
     depth = 0
     quote: str | None = None
-    i, n = 0, len(body)
+    i, n = 0, len(text)
     while i < n:
-        ch = body[i]
+        ch = text[i]
         if quote is not None:
             cur.append(ch)
             if ch == quote:
-                if quote == "'" and i + 1 < n and body[i + 1] == "'":
+                if quote == "'" and i + 1 < n and text[i + 1] == "'":
                     cur.append("'")
                     i += 1
                 else:
                     quote = None
-        elif ch in ("'", '"', "`"):
-            quote = ch
-            cur.append(ch)
-        elif ch == "(":
-            depth += 1
-            cur.append(ch)
-        elif ch == ")":
-            depth -= 1
-            cur.append(ch)
-        elif ch == "," and depth == 0:
+        elif ch == sep and depth == 0:
             out.append("".join(cur).strip())
             cur = []
         else:
             cur.append(ch)
+            if ch in ("'", '"', "`"):
+                quote = ch
+            elif ch == "(":
+                depth += 1
+            elif ch == ")":
+                depth -= 1
         i += 1
-    if cur:
-        out.append("".join(cur).strip())
-    return [c for c in out if c]
-
-
-def _split_statements(script: str) -> list[str]:
-    """Split a multi-statement DDL script on top-level ``;`` — quotes
-    (single, double, backtick) and parens shield; doubled '' inside a
-    single-quoted literal stays inside it."""
-    out, cur, depth, quote = [], [], 0, None
-    i, n = 0, len(script)
-    while i < n:
-        ch = script[i]
-        if quote is not None:
-            cur.append(ch)
-            if ch == quote:
-                if quote == "'" and i + 1 < n and script[i + 1] == "'":
-                    cur.append("'")
-                    i += 1
-                else:
-                    quote = None
-        elif ch in ("'", '"', "`"):
-            quote = ch
-            cur.append(ch)
-        elif ch == "(":
-            depth += 1
-            cur.append(ch)
-        elif ch == ")":
-            depth -= 1
-            cur.append(ch)
-        elif ch == ";" and depth == 0:
-            stmt = "".join(cur).strip()
-            if stmt:
-                out.append(stmt)
-            cur = []
-        else:
-            cur.append(ch)
-        i += 1
-    stmt = "".join(cur).strip()
-    if stmt:
-        out.append(stmt)
-    return out
+    out.append("".join(cur).strip())
+    return [p for p in out if p]
 
 
 #: optionally db-qualified table name (each part optionally quoted)
@@ -510,7 +469,7 @@ def _parse_create_table(s: str) -> list[DdlOp]:
         return []
     cols: list[tuple[str, str, str | None]] = []
     pk: list[str] = []
-    for clause in _split_clauses(s[start + 1:end]):
+    for clause in _split_top_level(s[start + 1:end], ","):
         c = clause.strip()
         m2 = re.match(rf"(?is)^(?:CONSTRAINT\s+{_IDENT}\s+)?PRIMARY\s+KEY\s*\((.*)\)", c)
         if m2:
@@ -551,7 +510,7 @@ def parse_ddl_sql(sql: str) -> list[DdlOp]:
     Multi-statement ``;``-separated scripts are split (quote-aware) and
     parsed per statement; unrelated statements parse to no ops (history-
     only entries)."""
-    stmts = _split_statements(sql)
+    stmts = _split_top_level(sql, ";")
     if len(stmts) > 1:
         ops: list[DdlOp] = []
         for st in stmts:
@@ -585,7 +544,7 @@ def parse_ddl_sql(sql: str) -> list[DdlOp]:
     m = re.match(r"(?is)^RENAME\s+TABLE\s+(.+)$", s)
     if m:
         ops = []
-        for pair in _split_clauses(m.group(1)):
+        for pair in _split_top_level(m.group(1), ","):
             m2 = re.match(rf"(?is)^{_QTBL}\s+TO\s+{_QTBL}\s*$", pair.strip())
             if m2:
                 odb, otbl = _qualified(m2.group(1), m2.group(2))
@@ -599,7 +558,7 @@ def parse_ddl_sql(sql: str) -> list[DdlOp]:
     hdr_db, hdr_tbl = _qualified_any(m.group(1))
     body = m.group(2)
     ops: list[DdlOp] = []
-    for clause in _split_clauses(body):
+    for clause in _split_top_level(body, ","):
         c = clause.strip()
         kw = r"(?!(?:CONSTRAINT|INDEX|KEY|PRIMARY|UNIQUE|FOREIGN|FULLTEXT|SPATIAL|PARTITION|CHECK)\b)"
         # PK mutations parse EXPLICITLY (MySqlAntlrDdlParserTest's
@@ -639,7 +598,7 @@ def parse_ddl_sql(sql: str) -> list[DdlOp]:
             continue
         m2 = re.match(r"(?is)^ADD\s*\((.*)\)\s*$", c)
         if m2:  # ADD (a INT, b TEXT)
-            for sub in _split_clauses(m2.group(1)):
+            for sub in _split_top_level(m2.group(1), ","):
                 sub = sub.strip()
                 m3 = re.match(rf"(?is)^{_IDENT}\s+{_TYPE}", sub)
                 if m3:

@@ -16,16 +16,22 @@ Exactly-once: the fence check in ``merge_changes`` skips any batch whose max
 offset <= the committed fence, and the commit is atomic, so re-running any
 prefix after a crash is a no-op (FIXTURES.md F4 idempotency).
 
-Transaction alignment is ONE protocol for every entry path (``replay``,
-``apply_stream_batch``, ``MultiTableEngine.apply_wire_batch``) and both
-``flush_tx_carry``: the pure planner ``plan_tail`` turns the batch's
-``fused_tail_probe`` row, the carry's meta and end-of-log into a fence, a
-tail boundary and the next carry's meta; the carry owner ``TxCarry`` loads,
-unions, splits, persists and clears ``<root>/_tx_carry/vN`` together with
-its ``_carry_meta.json``. The deferred rows are written on a carry writer
-thread while the step commits, into a pending directory that becomes
-``vN+1`` only after the commits, so a crash anywhere in the step resumes
-from ``vN`` (``TxCarry.step``).
+Every single-table entry path — a replayed batch file (``replay``), a
+Structured Streaming epoch (``apply_stream_batch``) and the carry flush
+(``flush_tx_carry``) — is one batch step, ``CdcEngine._step``: plan (the
+fused probe) → skip (empty or fence-behind) → apply → book (one progress
+record). Direct callers (``apply_envelope_batch``, ``bootstrap``,
+``backfill``) apply without a carry.
+
+Transaction alignment is ONE protocol for that step and for
+``MultiTableEngine.apply_wire_batch`` and its flush: the pure planner
+``plan_tail`` turns the batch's ``fused_tail_probe`` row, the carry's meta
+and end-of-log into a fence, a tail boundary and the next carry's meta; the
+carry owner ``TxCarry`` loads, unions, splits, persists and clears
+``<root>/_tx_carry/vN`` together with its ``_carry_meta.json``. The deferred
+rows are written on a carry writer thread while the step commits, into a
+pending directory that becomes ``vN+1`` only after the commits, so a crash
+anywhere in the step resumes from ``vN`` (``TxCarry.step``).
 """
 
 from __future__ import annotations
@@ -58,7 +64,7 @@ from debezium_spark.schema import BARRIER_OPS, offset_key
 from debezium_spark.schema import OP_PATH as PATH_OP
 from debezium_spark.schema import OP_TRUNCATE as TRUNCATE_OP
 from debezium_spark.schema import OP_TRUNCATE_CASCADE as TRUNCATE_CASCADE_OP
-from debezium_spark.schema import REPO_KEY_COLS, REPO_PAYLOAD_SCHEMA
+from debezium_spark.schema import REPO_PAYLOAD_SCHEMA
 from debezium_spark.sources.batches import list_batches, read_batch
 
 Smt = Callable[[DataFrame], DataFrame]
@@ -414,10 +420,10 @@ class CdcEngine:
 
         ``committer``: optional ``streaming.progress.ProcessCommitter``
         (role='sink') — the fork's migration-progress reporting
-        (README.md:113; BaseProcessCommitter.java). The replay loop feeds
-        it per-batch counts it already has (the fused probe's row count,
-        the commit's lineage rows, the quarantine write), so reporting
-        adds no Spark jobs to the hot path."""
+        (README.md:113; BaseProcessCommitter.java). The batch step
+        (``_step``) feeds it counts it already has (the fused probe's row
+        count, the commit's lineage rows, the quarantine write), so
+        reporting adds no Spark jobs to the hot path."""
         self.spark = spark
         self.table = table
         self.smt_chain = smt_chain or []
@@ -560,14 +566,12 @@ class CdcEngine:
         man = self.table.manifest()
         x = self.table.exprs(man)
         if fence is None:
-            # Direct (non-replay-loop) callers land here without the loop's
-            # fused probe, and previously paid up to THREE narrow jobs per
-            # batch: this fence aggregation plus the has_bad and has_ddl
-            # probes below. When no SMT chain separates the pre-SMT fence
-            # view from the post-SMT validity view, ONE flat aggregation
-            # answers all of them (guide §1.2 — per-batch serial driver
-            # time is the scaling bottleneck; same move as fused_tail_probe
-            # on the replay/stream paths).
+            # Direct callers (and a step whose batch has no fully
+            # positioned row) land here without the step's fence. When no
+            # SMT chain separates the pre-SMT fence view from the post-SMT
+            # validity view, ONE flat aggregation also answers the has_bad
+            # and has_ddl probes below (per-batch serial driver time is the
+            # scaling bottleneck).
             fuse_flags = not self.smt_chain and (has_bad is None or has_ddl is None)
             mm = env.select(*x.fence_probe[: 4 if fuse_flags else 2]).first()
             if fuse_flags:
@@ -579,69 +583,22 @@ class CdcEngine:
                 # Every row is missing part of its offset (pos, or — under
                 # the file-major key — file): there is nothing to fence,
                 # but the rows themselves are poison records, not silence:
-                # route them through quarantine before declaring the batch
-                # a no-op — or, in strict mode, fail loudly (one bad row
-                # never wedges OR vanishes; final review r5 closed the
-                # strict-mode vanish on this path too).
-                _, bad = split_valid(env, x)
-                if has_bad if has_bad is not None else bad.limit(1).count() > 0:
-                    if self.quarantine:
-                        write_quarantine(bad, self.table.root, batch_id)
-                    else:
-                        raise ValueError(
-                            f"batch {batch_id}: offset-less malformed "
-                            "records in strict mode — construct the engine "
-                            "with quarantine=True to divert such rows"
-                        )
+                # they reach quarantine (or fail the batch) before it is
+                # declared a no-op — one bad row never wedges OR vanishes.
+                self._divert_bad(env, x, batch_id, has_bad, "offset-less batch")
                 return None
             fence = (mm["f"], mm["p"])
 
         for smt in self.smt_chain:
             env = smt(env)
-
-        if self.quarantine:
-            good, bad = split_valid(env, x)
-            # narrow probe (op/key/offset columns only) unless the replay
-            # loop's fused pre-pass already answered it; quarantine is the
-            # exception path, so the common case costs nothing extra
-            if has_bad is None:
-                has_bad = bad.limit(1).count() > 0
-            if has_bad:
-                write_quarantine(bad, self.table.root, batch_id)
-            env = good
-        else:
-            # strict mode: a malformed row FAILS the batch loudly (Kafka
-            # Connect errors.tolerance=none — the reference's default when
-            # no fail-SQL ledger is configured). Letting it continue would
-            # not "flow into the merge": the three-valued segment and
-            # control-op filters below silently DROP a null-offset or
-            # null-op row, losing data with no trace (final review r5).
-            good, bad = split_valid(env, x)
-            if has_bad is None:
-                has_bad = bad.limit(1).count() > 0
-            if has_bad:
-                # ADVICE r5: a fused probe's has_bad covers the whole batch,
-                # but after a tail-transaction carve the malformed row may
-                # sit in the deferred carry — `bad` over the closed part is
-                # then empty and first() returns None; keep the intended
-                # ValueError (the row still fails when its carry applies)
-                row = bad.select("_reason").first()
-                reason = (
-                    row["_reason"] if row is not None
-                    else "deferred with the open-transaction carry"
-                )
-                raise ValueError(
-                    f"batch {batch_id}: malformed record ({reason}) in "
-                    "strict mode — construct the engine with "
-                    "quarantine=True to divert such rows instead"
-                )
+        env = self._divert_bad(env, x, batch_id, has_bad)
 
         # Barrier segmentation: DDL ('l') and TRUNCATE ('t') rows split the
         # batch — events before a barrier merge under the old table state,
         # events after under the new. Barriers are rare, so detection must
         # not decode the (wide) content column for the whole batch: first a
-        # cheap op-column-only probe (or the hint the replay loop computed in
-        # its offset aggregate), and only if non-zero the content collect
+        # cheap op-column-only probe (or the hint the batch step's fused probe
+        # computed), and only if non-zero the content collect
         # (parquet column pruning makes the probe read just `op`).
         if has_ddl is None:
             has_ddl = env.filter(x.barrier).limit(1).count() > 0
@@ -781,6 +738,39 @@ class CdcEngine:
             seg_start = seg_end
         self._maintain_ledgers(applied_ddl=bool(ddls), committed=version is not None)
         return version
+
+    def _divert_bad(
+        self, env: DataFrame, x: TableExprs, batch_id: str,
+        has_bad: bool | None, reason: str | None = None,
+    ) -> DataFrame:
+        """THE malformed-row decision (unknown op, null key/offset): with
+        ``quarantine`` the rows go to the batch's quarantine dir and the
+        good rows return; in strict mode one FAILS the batch (Kafka Connect
+        errors.tolerance=none — the three-valued segment and control-op
+        filters would silently DROP a null-offset or null-op row).
+
+        ``has_bad``: the caller's probe answer; None runs a narrow probe.
+        ``reason``: what the strict error names; None reads the first bad
+        row's. A fused probe's flag covers the whole batch, so the row may
+        sit in the deferred carry instead (it fails when the carry
+        applies)."""
+        good, bad = split_valid(env, x)
+        if has_bad is None:
+            has_bad = bad.limit(1).count() > 0
+        if not has_bad:
+            return good if self.quarantine else env
+        if self.quarantine:
+            write_quarantine(bad, self.table.root, batch_id)
+            return good
+        if reason is None:
+            row = bad.select("_reason").first()
+            reason = (row["_reason"] if row is not None
+                      else "deferred with the open-transaction carry")
+        raise ValueError(
+            f"batch {batch_id}: malformed record ({reason}) in strict mode — "
+            "construct the engine with quarantine=True to divert such rows "
+            "instead"
+        )
 
     def _maintain_ledgers(self, applied_ddl: bool, committed: bool) -> None:
         """Post-batch ledger upkeep (VERDICT r4 #1 — bounded control state
@@ -974,14 +964,16 @@ class CdcEngine:
         included; returns the number of ledger entries replayed."""
         return replay_schema_history(self.table)
 
-    # ---- replay loop -------------------------------------------------------
+    # ---- the batch step: replay, stream epochs and carry flushes ----------
 
     def replay(self, batch_dir: str, tx_aligned: bool = True, final: bool = True) -> list[int]:
-        """Replay all batches beyond the committed fence, in order.
+        """Replay all batches beyond the committed fence, in order: one
+        ``_step`` per batch file.
 
-        Cheap skip: per-batch max offset from a parquet min/max agg (column
-        stats only) before touching the data — the analog of the breakpoint
-        filter at TableReplayTask.java:132-144.
+        Skip: a batch whose max offset is at or behind the committed fence
+        (and nothing is carried) is booked as skipped without touching the
+        data again — its offsets come from the step's fused probe, the
+        analog of the breakpoint filter at TableReplayTask.java:132-144.
 
         ``tx_aligned``: a transaction whose events straddle two batch files
         must not commit as two fenced commits (a crash between them would
@@ -1012,27 +1004,76 @@ class CdcEngine:
             # batch here (ordered log) — commit it FIRST: applying the new
             # batches would advance the fence past the carry's offsets and a
             # later flush would fence-skip it into oblivion (review r4)
-            v = self.flush_tx_carry()
-            if v is not None:
-                versions.append(v)
+            versions.append(self.flush_tx_carry())
         paths = list_batches(batch_dir)
         for path in paths:
             # the id names the batch FILE (a missing file must not shift
             # the quarantine dirs of every later batch)
-            batch_id = os.path.basename(path).removesuffix(".parquet")
-            env = read_batch(self.spark, path)
-            # ONE narrow-column pass answers every per-batch probe: offset
-            # fence, DDL presence, malformed-row presence, tail-transaction
-            # id AND the tail-transaction boundary (per-batch serial driver
-            # time is the scaling bottleneck, so everything rides this
-            # single job)
-            man = self.table.manifest()
-            tail = self.table.exprs(man).probe
-            mm, plan = self._carry.plan(
-                env, tail, final=not tx_aligned or (final and path == paths[-1])
-            )
-            if not mm["ngrp"]:
-                continue  # an empty batch file
+            versions.append(self._step(
+                read_batch(self.spark, path),
+                os.path.basename(path).removesuffix(".parquet"),
+                final=not tx_aligned or (final and path == paths[-1]),
+            ))
+        if final and self._carry.df is not None:
+            # only reachable when the directory was empty, every batch was
+            # skipped or the last one had no offsets — flush whatever was
+            # carried in from before
+            versions.append(self.flush_tx_carry())
+        if self.committer:
+            # terminal force-line: per-batch lines are paced by
+            # commit.time.interval, so a replay faster than the interval
+            # would otherwise leave the progress file showing only the
+            # first batch forever (review r5 finding)
+            self.committer.commit(force=True)
+        return [v for v in versions if v is not None]
+
+    def apply_stream_batch(
+        self, env: DataFrame, batch_id: str, tx_aligned: bool = True
+    ) -> int | None:
+        """One streaming micro-batch (foreachBatch epoch) through the same
+        ``_step`` as a replayed file: the epoch's open tail transaction
+        defers (persisted carry — a checkpoint will not redeliver this
+        epoch) and rejoins when its END arrives; an empty or redelivered
+        epoch is skipped. Call ``flush_tx_carry`` at end of stream.
+        ``tx_aligned=False`` commits a carry left by earlier aligned epochs
+        first, then the whole epoch."""
+        if not tx_aligned:
+            self.flush_tx_carry()
+        return self._step(env, batch_id, final=not tx_aligned)
+
+    def flush_tx_carry(self, batch_id: str = "batch_txflush") -> int | None:
+        """Apply the deferred open-tail transaction — call when the log is
+        known complete (a binlog only ever contains committed transactions,
+        so end-of-log closes it). No-op if nothing is carried."""
+        return self._step(None, batch_id, final=True)
+
+    def _step(self, env: DataFrame | None, batch_id: str, final: bool) -> int | None:
+        """THE batch step of every single-table entry path — a replayed
+        file, a stream epoch, or a carry flush (``env=None``):
+
+        1. one manifest read (the probe's expressions, the skip's fence,
+           the version the books count from);
+        2. ``TxCarry.plan``: the fused probe (ONE job; none for a flush)
+           and ``plan_tail`` against the carry;
+        3. skip an empty batch, or one at or behind the fence while nothing
+           is carried (booked as skipped — the reference's breakpoint
+           skip); a flush with no carry is a no-op;
+        4. apply the closing part under ``TxCarry.step`` with the plan's
+           fence and flags (with SMTs installed the apply re-probes for
+           malformed rows: the fused probe sees pre-SMT rows);
+        5. one progress record: the probe's row count (0 for a flush), the
+           commit's lineage events, the quarantine write, the deferred
+           tail's exact row count, whether the whole carry drained; a flush
+           also writes the end-of-stream line."""
+        man = self.table.manifest()
+        tail = self.table.exprs(man).probe
+        mm, plan = self._carry.plan(env, tail, final)
+        if mm is None:
+            if not plan.with_carry:
+                return None
+        elif not mm["ngrp"]:
+            return None
+        else:
             cur = self.table.fence(man)
             if (
                 self._carry.df is None
@@ -1040,125 +1081,30 @@ class CdcEngine:
                 and offset_key(mm["f"], mm["p"]) <= offset_key(*cur)
             ):
                 if self.committer:
-                    # exactly-once skip = the reference's breakpoint skip;
-                    # its committer counts these as skippedCount
                     self.committer.record_sink_batch(
                         extracted=mm["n"], success=0, skipped=mm["n"]
                     )
-                continue
-            v_before = (
-                self.table.manifest()["version"] if self.committer else 0
-            )
-            t0 = _time.time()
-            v = self._apply_step(env, plan, batch_id, tail)
-            if self.committer:
-                # extracted = THIS file's rows; a deferred tail parks
-                # (exact count from the fused probe's tail group) and
-                # drains when a later batch/flush applies it
-                self.committer.record_sink_batch(
-                    extracted=mm["n"],
-                    success=self._lineage_events_since(v_before),
-                    failed=self._quarantine_rows(batch_id, since=t0),
-                    deferred=(
-                        mm["n"] if plan.defer_all
-                        else mm["tail_n"] if plan.boundary is not None else 0
-                    ),
-                    # a closed batch prepends the WHOLE persisted carry, so
-                    # the parked pool drains here — explicit, not inferred
-                    # from the residual (final review r5: the inference
-                    # confounded carry-drain with last-wins collapse)
-                    drained_carry=plan.with_carry and not plan.defer_all,
-                )
-            if v is not None:
-                versions.append(v)
-        if final and self._carry.df is not None:
-            # only reachable when the directory was empty, every batch was
-            # skipped or the last one had no offsets — flush whatever was
-            # carried in from before
-            v = self.flush_tx_carry()
-            if v is not None:
-                versions.append(v)
-        if self.committer:
-            # terminal force-line: per-batch lines are paced by
-            # commit.time.interval, so a replay faster than the interval
-            # would otherwise leave the progress file showing only the
-            # first batch forever (review r5 finding)
-            self.committer.commit(force=True)
-        return versions
-
-    def _apply_step(
-        self, env: DataFrame | None, plan: TailPlan, batch_id: str, tail: TailProbe
-    ) -> int | None:
-        """Commit one planned step: the carry joins the batch, the part
-        that closes applies under the plan's fence and flags, then the
-        carry the step leaves is published (``TxCarry.step``)."""
+                return None
+        t0 = _time.time()
         v = None
         with self._carry.step(env, plan, tail) as closed:
             if closed is not None:
                 v = self.apply_envelope_batch(
-                    closed,
-                    batch_id=batch_id,
-                    fence=plan.fence,
+                    closed, batch_id=batch_id, fence=plan.fence,
                     has_ddl=plan.nd,
-                    # the fused probe sees pre-SMT rows; with SMTs installed a
-                    # transform could corrupt a row, so the apply re-probes
                     has_bad=None if self.smt_chain else plan.nb,
                 )
-        return v
-
-    def _report_apply(self, v_before: int, batch_id: str,
-                      flush: bool = False, since: float | None = None) -> None:
-        """Progress line for one directly-applied batch (streaming epoch /
-        carry flush): counts derive from the commit's own lineage plus the
-        quarantine write. Full extract attribution (SMT drops, last-wins
-        collapse) needs the replay loop's fused probe row count, so here
-        extract = applied + failed — the reference's streaming counters
-        likewise tally at the replay stage. ``flush=True`` = the rows were
-        already extract-counted when their original batch was read
-        (deferred transaction), so they settle instead of re-extracting."""
-        if not self.committer:
-            return
-        success = self._lineage_events_since(v_before)
-        failed = self._quarantine_rows(batch_id, since=since)
-        if flush:
-            self.committer.record_sink_flush(success=success, failed=failed)
-        else:
-            self.committer.record_sink_batch(
-                extracted=success + failed, success=success, failed=failed
-            )
-
-    def apply_stream_batch(
-        self, env: DataFrame, batch_id: str, tx_aligned: bool = True
-    ) -> int | None:
-        """One streaming micro-batch (foreachBatch epoch) with the same
-        transaction alignment as ``replay``: the epoch's open tail
-        transaction defers (persisted carry — a checkpoint will not
-        redeliver this epoch) and rejoins when its END arrives. Call
-        ``flush_tx_carry`` at end of stream. ``tx_aligned=False`` commits a
-        carry left by earlier aligned epochs first, then the whole epoch."""
-        if not tx_aligned:
-            self.flush_tx_carry()
-        v_before = self.table.manifest()["version"] if self.committer else 0
-        t0 = _time.time()
-        tail = self.table.exprs().probe
-        _, plan = self._carry.plan(env, tail, final=not tx_aligned)
-        v = self._apply_step(env, plan, batch_id, tail)
-        if not plan.defer_all:
-            self._report_apply(v_before, batch_id, since=t0)
-        return v
-
-    def flush_tx_carry(self, batch_id: str = "batch_txflush") -> int | None:
-        """Apply the deferred open-tail transaction — call when the log is
-        known complete (a binlog only ever contains committed transactions,
-        so end-of-log closes it). No-op if nothing is carried."""
-        tail = self.table.exprs().probe
-        _, plan = self._carry.plan(None, tail, final=True)
-        if not plan.with_carry:
-            return None
-        v_before = self.table.manifest()["version"] if self.committer else 0
-        t0 = _time.time()
-        v = self._apply_step(None, plan, batch_id, tail)
-        self._report_apply(v_before, batch_id, flush=True, since=t0)
         if self.committer:
-            self.committer.commit(force=True)  # end-of-stream terminal line
+            self.committer.record_sink_batch(
+                extracted=mm["n"] if mm else 0,
+                success=self._lineage_events_since(man["version"]),
+                failed=self._quarantine_rows(batch_id, since=t0),
+                deferred=(
+                    mm["n"] if plan.defer_all
+                    else mm["tail_n"] if plan.boundary is not None else 0
+                ),
+                drained_carry=plan.with_carry and not plan.defer_all,
+            )
+            if env is None:
+                self.committer.commit(force=True)  # end-of-stream line
         return v

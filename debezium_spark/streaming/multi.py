@@ -826,7 +826,7 @@ class MultiTableEngine:
                     if reg is not None and versions.get(targets[reg][0].fqn) is None:
                         skipped += max(0, (r["n"] or 0) - per_fail[reg])
                 # NOTE: the deferred-tx carry needs no flush-settle here,
-                # unlike CdcEngine.replay — the pre-pass runs on the
+                # unlike CdcEngine._step — the pre-pass runs on the
                 # carry-STRIPPED closed batch, so deferred rows were never
                 # extract-counted; when the flush re-enters through this
                 # method they extract for the first time and the normal

@@ -219,26 +219,22 @@ class ProcessCommitter:
         ``success`` reached the table (the commit's lineage events),
         ``failed`` were quarantined, ``skipped`` were behind the fence,
         ``deferred`` were carried to the next batch as an open-tail
-        transaction (the replay loop's fused probe knows the tail group's
-        row count, so parking is EXACT — review r5: inferring it from the
-        residual confounded parked rows with genuine exclude drops).
+        transaction (the batch step's fused probe knows the tail group's
+        row count, so parking is EXACT).
 
         Parked rows stay in ``extractCount`` and nowhere else, so the
         reference's ``rest`` formula reports them as in-the-pipe — its
         exact meaning. ``drained_carry=True`` says this batch consumed the
-        WHOLE parked pool as carried-in input (the replay loop prepends
-        the entire persisted carry to the next closed batch), which makes
-        the attribution exact: residual counts over ``extracted +
-        carried_in``, a positive residual is exclude-filtering/last-wins
-        collapse, a negative one is PK-change delete+create expansion
-        (the reference's SOURCE emits those pre-split, so its extract
-        counter sees both records) and ``extractCount`` adjusts to the
-        post-split count. Deriving the drain from a negative residual
-        alone — the pre-r5-final behavior, kept as the fallback for
-        callers without carry knowledge — confounds the two when one
-        batch both drains a carry AND collapses events: the parked pool
-        stays inflated and the collapse never reaches
-        ``skippedExcludeEventCount`` (final review r5)."""
+        WHOLE parked pool as carried-in input (a closed step prepends the
+        entire persisted carry), which makes the attribution exact:
+        residual counts over ``extracted + carried_in``, a positive
+        residual is exclude-filtering/last-wins collapse, a negative one is
+        PK-change delete+create expansion (the reference's SOURCE emits
+        those pre-split, so its extract counter sees both records) and
+        ``extractCount`` adjusts to the post-split count. The parked pool
+        moves only by ``deferred`` and ``drained_carry`` — never by a
+        residual, which would confound parked rows with genuine drops or
+        splits."""
         carried_in = 0
         if drained_carry:
             carried_in = self._parked
@@ -248,12 +244,7 @@ class ProcessCommitter:
         if residual >= 0:
             self.sink.skippedExcludeEventCount += residual
         else:
-            need = -residual
-            if not drained_carry:
-                take = min(self._parked, need)
-                self._parked -= take
-                need -= take
-            extracted += need
+            extracted -= residual
         self.sink.extractCount += extracted
         self.sink.successCount += success
         self.sink.failCount += failed

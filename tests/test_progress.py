@@ -150,7 +150,7 @@ def test_carry_rows_park_then_drain_exactly():
     assert c.sink.skippedExcludeEventCount == 3
     assert c.sink.rest == 20  # parked rows ARE the pipe
     # batch 1: 50 rows + the 20 carried apply, plus one PK-split (+1)
-    c.record_sink_batch(extracted=50, success=71)
+    c.record_sink_batch(extracted=50, success=71, drained_carry=True)
     assert c.sink.extractCount == 151  # 150 + the split expansion only
     assert c.sink.skippedExcludeEventCount == 3  # drops survive the drain
     assert c.sink.successCount == 148 and c.sink.rest == 0
@@ -378,17 +378,15 @@ def test_replay_reports_progress_and_skips_on_rereplay(spark, tmp_path):
     ]
 
 
-def test_stream_epochs_and_flush_report_with_balanced_books(spark, tmp_path):
-    """The streaming path reports applied-only counts per epoch (no fused
-    probe there), and a deferred-transaction flush SETTLES its rows
-    instead of re-extracting them — ``rest`` stays 0 throughout and the
-    final success equals the rows the table actually holds."""
+def _tx_events(spark):
+    """300 generated events in transactions of 100 positions each (t0, t1,
+    t2); seed 13 has 16 PK changes, 7 of them in t0."""
     from pyspark.sql import functions as F
 
-    from debezium_spark import ChangeLogGenerator, CdcEngine, LakeTable
+    from debezium_spark import ChangeLogGenerator
 
     gen = ChangeLogGenerator(spark, seed=13, n_repos=6)
-    env = gen.events(300).withColumn(
+    return gen.events(300).withColumn(
         "transaction",
         F.struct(
             F.concat(F.lit("t"), (F.col("source.pos") / 100).cast("long")
@@ -397,26 +395,55 @@ def test_stream_epochs_and_flush_report_with_balanced_books(spark, tmp_path):
             F.lit(0).cast("long").alias("data_collection_order"),
         ),
     )
+
+
+def test_deferring_batch_books_pk_split_expansion_exactly(spark, tmp_path):
+    """A batch that defers its open tail AND expands PK changes books the
+    expansion as extracted rows: the parked pool keeps exactly the
+    deferred rows (the expansion used to be taken out of it)."""
+    from debezium_spark import CdcEngine, LakeTable
+
+    env = _tx_events(spark)
+    bdir = tmp_path / "b"
+    env.where("source.pos < 150").write.parquet(str(bdir / "batch_00000.parquet"))
+    table = LakeTable(spark, str(tmp_path / "t"), ["repo", "path"], n_buckets=4)
+    c = ProcessCommitter(str(tmp_path / "progress"), "sink")
+    CdcEngine(spark, table, committer=c).replay(str(bdir), final=False)
+    # 100 closed rows (t0) apply as 107 (7 PK-change splits); t1's 50 defer
+    applied = sum(e.get("events", 0) for e in table.lineage())
+    assert applied == c.sink.successCount == 107
+    assert c.sink.rest == c._parked == 50
+    assert c.sink.extractCount == 157
+    assert c.sink.skippedExcludeEventCount == 0
+
+
+def test_stream_epochs_and_flush_report_with_balanced_books(spark, tmp_path):
+    """Stream epochs book exactly like replayed files (the same batch
+    step): the fused probe's row count is extracted, an epoch's open tail
+    parks as ``rest`` until the epoch that closes it, and the flush drains
+    the last carry — at the end extract == success == the events the table
+    applied."""
+    from debezium_spark import CdcEngine, LakeTable
+
+    env = _tx_events(spark)
     table = LakeTable(spark, str(tmp_path / "t"), ["repo", "path"], n_buckets=4)
     c = ProcessCommitter(
         str(tmp_path / "progress"), "sink", commit_time_interval=0
     )
     engine = CdcEngine(spark, table, committer=c)
     # epoch 1 ends mid-tx t1 → its tail defers; epoch 2 closes t1 and
-    # ends mid-tx t2; the flush settles the rest
+    # ends mid-tx t2; the flush drains the rest
     engine.apply_stream_batch(env.where("source.pos < 150"), "epoch-1")
-    assert c.sink.rest == 0
+    assert c.sink.rest == 50  # t1's rows so far, parked
     engine.apply_stream_batch(
         env.where("source.pos >= 150 AND source.pos < 250"), "epoch-2"
     )
     engine.apply_stream_batch(env.where("source.pos >= 250"), "epoch-3")
     engine.flush_tx_carry()
     assert c.sink.rest == 0 and c.sink.failCount == 0
-    # all applied rows are accounted as success (streaming reports
-    # lineage-applied counts; the flush settled the final tail)
     applied = sum(e.get("events", 0) for e in table.lineage())
-    assert c.sink.successCount == applied > 0
-    assert c.sink.extractCount == c.sink.successCount
+    assert c.sink.extractCount == c.sink.successCount == applied == 316
+    assert c.sink.skippedExcludeEventCount == 0
 
 
 def test_multi_table_sink_reports_one_progress_stream(spark, tmp_path):

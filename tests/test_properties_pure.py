@@ -8,8 +8,7 @@ from hypothesis import strategies as st
 
 from debezium_spark.functions.avro import _zigzag_decode, _zigzag_encode
 from debezium_spark.operators.schema_evolution import (
-    _split_clauses,
-    _split_statements,
+    _split_top_level,
     parse_ddl_sql,
     sql_type_to_spark,
 )
@@ -67,7 +66,8 @@ def test_clause_and_statement_splitters_never_crash(parts):
     quotes, unbalanced parens) — they may split oddly, never raise, and
     never invent characters outside the input."""
     text = ",".join(parts)
-    for out in (_split_clauses(text), _split_statements(text.replace(",", ";"))):
+    for out in (_split_top_level(text, ","),
+                _split_top_level(text.replace(",", ";"), ";")):
         assert isinstance(out, list)
         for piece in out:
             assert set(piece) <= set(text) | {";"}

@@ -235,8 +235,10 @@ def test_replay_probe_is_one_job_per_batch(spark, tmp_path):
     aggregation as fence/ddl/bad — exactly ONE driver aggregation action
     (.first) per applied batch on the tx-aligned path, including batches
     prefixed by a carried transaction (the carry meta makes the split a
-    zero-job plan transform)."""
-    import pyspark.sql
+    zero-job plan transform). Stream epochs run the same step: an empty
+    epoch and a redelivered one (behind the fence, nothing carried) are
+    one probe each and skip, the redelivered rows booked as skipped."""
+    from debezium_spark.streaming.progress import ProcessCommitter
 
     bdir = str(tmp_path / "b")
     os.makedirs(bdir)
@@ -253,7 +255,8 @@ def test_replay_probe_is_one_job_per_batch(spark, tmp_path):
         (7, "u", "c", "v3", "tx3"), (8, "c", "d", "v1", "tx4"),
     ])
     table = LakeTable(spark, str(tmp_path / "t"), ["repo", "path"], n_buckets=2)
-    engine = CdcEngine(spark, table)
+    c = ProcessCommitter(str(tmp_path / "progress"), "sink")
+    engine = CdcEngine(spark, table, committer=c)
 
     calls = {"first": 0}
     cls = type(spark.range(1))  # the concrete (classic) DataFrame class
@@ -295,6 +298,22 @@ def test_replay_probe_is_one_job_per_batch(spark, tmp_path):
     assert calls["first"] == 1, f"carry-prefixed epoch: {calls['first']} probes"
     state = {r["path"]: r["content"] for r in table.read().collect()}
     assert state["f"] == "v2" and "g" not in state
+
+    engine.flush_tx_carry()  # tx7 commits: nothing is carried any more
+    assert c.sink.skippedCount == 0
+    redelivered = _env(spark, [(11, "u", "f", "v2", "tx6"),
+                               (12, "c", "g", "v1", "tx7")])
+    cls.first = counting_first
+    try:
+        for epoch, batch_id in ((_env(spark, []), "epoch_00002"),
+                                (redelivered, "epoch_00001")):
+            calls["first"] = 0
+            assert engine.apply_stream_batch(epoch, batch_id) is None
+            assert calls["first"] == 1, f"{batch_id}: {calls['first']} probes"
+    finally:
+        cls.first = orig_first
+    assert c.sink.skippedCount == 2 and c.sink.rest == 0
+    assert table.fence() == ("binlog.000001", 12)
 
 
 def test_carry_meta_survives_restart(spark, tmp_path):
